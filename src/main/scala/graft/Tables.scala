@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.schema.FixtureSchemas
 
 /** Fixture-table loader (TESTDATA.md / FIXTURES.md).
   *
@@ -15,8 +16,7 @@ import org.apache.spark.sql.functions._
   * on event timestamps line up bit-for-bit either way.
   */
 object Tables {
-  val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
-    "part", "orders", "lineitem", "events", "documents", "embeddings")
+  val names: Seq[String] = FixtureSchemas.tableNames
 
   /** Normalize an events frame's `ts` to TimestampType (µs, UTC session):
     * ns-as-long legacy storage truncates ns→µs; TIMESTAMP_NTZ casts (a
@@ -30,6 +30,8 @@ object Tables {
         col("ts").cast(org.apache.spark.sql.types.TimestampType))
     }
 
+  /** Fixture table `name` under `dir`, through [[Catalog]] against its
+    * [[graft.schema.FixtureSchemas]] declaration. */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     // partitions ∝ data for the fixture-read path too (LLM/dedup/text ops
     // never pass through Tpcds.ensure): derive the session's shuffle
@@ -38,32 +40,13 @@ object Tables {
     // at a 100 TB documents corpus the dedup/cluster shuffles get the
     // same scale-safe ceiling the generated-benchmark path got in r15.
     graft.plans.ShuffleScale.tuneFor(spark, dir)
-    if (name == "events") {
+    // the nanos escape hatch must be on before the catalog converts the
+    // events footer, so legacy storage checks (and reads) as LONG
+    if (name == "events")
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      normalizeEventTs(spark.read.parquet(s"$dir/events.parquet"))
-    } else spark.read.parquet(s"$dir/$name.parquet")
-  }
-
-  /** Data files of a parquet table dir (skips _SUCCESS / hidden files).
-    * RECURSIVE: a nested/hive-partitioned layout contributes every leaf
-    * file, so footer-derived counts used by scale fences can never
-    * undercount. Files under a hidden/_ directory (e.g. _temporary) are
-    * excluded, matching Spark's own path filter. */
-  private def parquetFiles(spark: SparkSession, path: String) = {
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-    val p = fs.makeQualified(new org.apache.hadoop.fs.Path(path))
-    val it = fs.listFiles(p, true)
-    val files = scala.collection.mutable.ListBuffer.empty[org.apache.hadoop.fs.Path]
-    while (it.hasNext) {
-      val f = it.next().getPath
-      // every path component below the table root must be visible
-      val visible = Iterator.iterate(f)(_.getParent)
-        .takeWhile(q => q != null && q != p)
-        .forall(q => !q.getName.startsWith("_") && !q.getName.startsWith("."))
-      if (f.getName.endsWith(".parquet") && visible) files += f
-    }
-    (conf, files.toSeq)
+    val df = Catalog.table(spark, s"$dir/$name.parquet", FixtureSchemas(name),
+      FixtureSchemas.alternatives(name))
+    if (name == "events") normalizeEventTs(df) else df
   }
 
   private val rowCountCache = new scala.collection.concurrent.TrieMap[String, Long]
@@ -76,7 +59,7 @@ object Tables {
     rowCountCache.getOrElseUpdate(s"$dir/$name.parquet", {
       import org.apache.parquet.hadoop.ParquetFileReader
       import org.apache.parquet.hadoop.util.HadoopInputFile
-      val (conf, files) = parquetFiles(spark, s"$dir/$name.parquet")
+      val (conf, files) = Catalog.dataFiles(spark, s"$dir/$name.parquet")
       files.map { f =>
         val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
         try r.getRecordCount finally r.close()
@@ -98,7 +81,7 @@ object Tables {
       import org.apache.parquet.hadoop.ParquetFileReader
       import org.apache.parquet.hadoop.util.HadoopInputFile
       import scala.jdk.CollectionConverters._
-      val (conf, files) = parquetFiles(spark, s"$dir/$name.parquet")
+      val (conf, files) = Catalog.dataFiles(spark, s"$dir/$name.parquet")
       val perBlock = files.flatMap { f =>
         val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
         try r.getFooter.getBlocks.asScala.toSeq.map { b =>

@@ -73,9 +73,10 @@ object GenCache {
               generate(spark, base.drop(2).toDouble, tmp.toString)
               Files.createFile(tmp.resolve("_GRAFT_COMPLETE"))
               Files.move(tmp, dirPath, StandardCopyOption.ATOMIC_MOVE)
-              // the dir's bytes just changed under any earlier (pre-
-              // materialization) measurement — drop it (r15 ADVICE)
+              // the dir's bytes and schemas just changed under any earlier
+              // (pre-materialization) measurement — drop them
               graft.plans.ShuffleScale.invalidate(spark, dir)
+              graft.Catalog.invalidate(spark, dir)
             }
           } finally lock.release()
         } finally ch.close()
@@ -89,6 +90,7 @@ object GenCache {
       val it = Files.walk(p).sorted(java.util.Comparator.reverseOrder())
       try it.forEach(f => Files.delete(f)) finally it.close()
       graft.plans.ShuffleScale.invalidate(spark, p.toString)
+      graft.Catalog.invalidate(spark, p.toString)
     }
   }
 

@@ -68,8 +68,8 @@ object Tpcds {
     dir
   }
 
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private[graft] def t(spark: SparkSession, dir: String, name: String): DataFrame =
+    graft.Catalog.table(spark, s"$dir/$name.parquet", graft.schema.TpcdsSchemas(name))
 
   /** Exact integer CENTS of quantity × unit price, as a LONG (r18
     * optimization, guide §2.3 narrower types / §1.2 per-task work).
@@ -83,13 +83,13 @@ object Tpcds {
     * corrupting. Downstream doubles are unchanged: cents < 2^53 are
     * exactly representable, so cast(cents)/100.0 rounds the same exact
     * rational once, just like cast(DECIMAL(·,2)) did. */
-  private def centsL(qty: Column, price: Column): Column = {
+  private def centsL(spark: SparkSession, qty: Column, price: Column): Column = {
     // the documented overflow posture ("ANSI throws loudly") is only real
     // when ANSI mode is actually on — SessionDefaults pins it, but the
-    // conf-injection seam could flip it, so assert at construction time
-    // rather than let a wrapped long corrupt a sum silently (r19, ADVICE)
-    require(org.apache.spark.sql.SparkSession.active.conf
-        .get("spark.sql.ansi.enabled", "true").toBoolean,
+    // conf-injection seam could flip it, so assert at construction time,
+    // on the session the query is built on, rather than let a wrapped
+    // long corrupt a sum silently
+    require(spark.conf.get("spark.sql.ansi.enabled", "true").toBoolean,
       "centsL money sums require spark.sql.ansi.enabled=true: without " +
         "ANSI a long-cents overflow wraps silently instead of throwing")
     qty.cast(LongType) * (price * 100).cast(LongType)
@@ -1018,9 +1018,9 @@ object Tpcds {
         // the (28,2) sum buffer this fed was the query's per-row cost
         // (see centsL; value and downstream double bit-identical)
         when(col("sr_return_quantity").isNotNull,
-          centsL(col("ss_quantity") - col("sr_return_quantity"),
+          centsL(spark, col("ss_quantity") - col("sr_return_quantity"),
             col("ss_sales_price")))
-          .otherwise(centsL(col("ss_quantity"), col("ss_sales_price")))
+          .otherwise(centsL(spark, col("ss_quantity"), col("ss_sales_price")))
           .as("act_sales"))
       .groupBy(col("ss_customer_sk"))
       .agg(sum(col("act_sales")).as("sum_dec"))
@@ -4360,7 +4360,7 @@ object Tpcds {
       .filter(col("ss_customer_sk").isNotNull)
       .join(broadcast(dd4), col("ss_sold_date_sk") === col("d_date_sk"))
       .groupBy(col("ss_customer_sk").as("cust"))
-      .agg(sum(centsL(col("ss_quantity"), col("ss_sales_price"))).as("ssales"))
+      .agg(sum(centsL(spark, col("ss_quantity"), col("ss_sales_price"))).as("ssales"))
     val mx = spend.agg(max(col("ssales")).as("mx"))
       .withColumn("jk", coalesce(col("mx") * 0, lit(0)).cast(
         org.apache.spark.sql.types.IntegerType))
@@ -4380,7 +4380,7 @@ object Tpcds {
         .join(broadcast(ddm), col(dateCol) === col("m_date_sk"))
         .join(freq, col(itemCol) === col("freq_item"), "left_semi")
         .join(best, col(custCol) === col("best_cust"), "left_semi")
-        .select(centsL(col(qty), col(price)).as("amt"))
+        .select(centsL(spark, col(qty), col(price)).as("amt"))
     monthLines("catalog_sales", "cs_sold_date_sk", "cs_item_sk",
       "cs_bill_customer_sk", "cs_quantity", "cs_list_price")
       .union(monthLines("web_sales", "ws_sold_date_sk", "ws_item_sk",
@@ -4776,7 +4776,7 @@ object Tpcds {
       .filter(col("ss_customer_sk").isNotNull)
       .join(broadcast(dd4), col("ss_sold_date_sk") === col("d_date_sk"))
       .groupBy(col("ss_customer_sk").as("cust"))
-      .agg(sum(centsL(col("ss_quantity"), col("ss_sales_price"))).as("ssales"))
+      .agg(sum(centsL(spark, col("ss_quantity"), col("ss_sales_price"))).as("ssales"))
     val freq = counts0
       .transform { counts =>
         // scale-invariant frequency gate: "frequent" = above the corpus
@@ -4826,7 +4826,7 @@ object Tpcds {
         // selective by construction at every sf.
         .join(broadcast(freq), col(itemCol) === col("freq_item"), "left_semi")
         .join(broadcast(best), col(custCol) === col("best_cust"), "left_semi")
-        .select(col(custCol).as("buyer"), centsL(col(qty), col(price)).as("amt"))
+        .select(col(custCol).as("buyer"), centsL(spark, col(qty), col(price)).as("amt"))
     val cust = t(spark, dir, "customer")
       .select("c_customer_sk", "c_last_name", "c_first_name")
     monthLines("catalog_sales", "cs_sold_date_sk", "cs_item_sk",

@@ -52,7 +52,7 @@ object TpchFull {
   private def P(name: String) = s"'$root/$oracleScale/$name.parquet/*.parquet'"
 
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    graft.Catalog.table(spark, s"$dir/$name.parquet", graft.schema.TpchSchemas.stored(name))
   private val D = DoubleType
 
   /** [Q-tpch-q2] TPC-H Q2 (minimum-cost supplier): the correlated MIN

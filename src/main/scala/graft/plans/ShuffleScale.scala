@@ -72,17 +72,6 @@ object ShuffleScale {
 
   private val bytesCache = new scala.collection.concurrent.TrieMap[String, Long]
 
-  /** Canonical cache key: the path resolved and qualified through its own
-    * Hadoop FileSystem, so `file:/x`, `/x` and an `fs.defaultFS`-relative
-    * spelling of the SAME directory collapse to one entry — and GenCache's
-    * post-sweep invalidate can never leave a stale byte count alive under
-    * an alias spelling (r16 ADVICE). */
-  private def qualified(path: String,
-                        conf: org.apache.hadoop.conf.Configuration): String = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(conf).makeQualified(p).toString
-  }
-
   /** Recursive on-disk size of a materialized dir, measured through the
     * Hadoop FileSystem resolved for the path's scheme (bare paths resolve
     * against `fs.defaultFS`, exactly as `spark.read` does) — so the
@@ -92,7 +81,9 @@ object ShuffleScale {
     * the next call, so measuring before materialization can never pin the
     * session at the floor (r15 ADVICE). */
   def dirBytes(spark: SparkSession, path: String): Long = {
-    val key = qualified(path, spark.sparkContext.hadoopConfiguration)
+    // qualified, so GenCache's post-sweep invalidate can never leave a
+    // stale byte count alive under an alias spelling
+    val key = graft.Catalog.qualified(path, spark.sparkContext.hadoopConfiguration)
     bytesCache.get(key).getOrElse {
       val n = measure(spark, path)
       if (n > 0L) bytesCache.put(key, n)
@@ -112,20 +103,9 @@ object ShuffleScale {
     * so the target qualifies through EXACTLY the Hadoop conf `dirBytes`
     * keyed with (r17 ADVICE: the previous thread-local-session lookup
     * could fall back to a fresh Configuration that qualifies bare paths
-    * as file:/..., silently missing hdfs:-qualified keys). An
-    * unparseable path degrades to the raw string, which still
-    * prefix-matches same-spelling keys. */
-  def invalidate(spark: SparkSession, path: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val norm = (try qualified(path, conf)
-                catch { case scala.util.control.NonFatal(_) => path })
-      .stripSuffix("/")
-    bytesCache.keys.foreach { k =>
-      val kn = k.stripSuffix("/")
-      if (kn == norm || kn.startsWith(norm + "/") || norm.startsWith(kn + "/"))
-        bytesCache.remove(k)
-    }
-  }
+    * as file:/..., silently missing hdfs:-qualified keys). */
+  def invalidate(spark: SparkSession, path: String): Unit =
+    graft.Catalog.forget(bytesCache, spark.sparkContext.hadoopConfiguration, path)
 
   private val ratchetLock = new Object
 

@@ -20,6 +20,11 @@ object TpchSchemas {
   def apply(table: String): StructType = schemas.getOrElse(table,
     throw new IllegalArgumentException(s"unknown TPC-H table: $table"))
 
+  /** The columns a TPC-H Parquet table stores: the declaration minus the
+    * raw-file-only `ignore` column. */
+  def stored(table: String): StructType =
+    StructType(apply(table).filterNot(_.name == "ignore"))
+
   private val schemas: Map[String, StructType] = Map(
     "part" -> StructType(Seq(
       StructField("p_partkey", LongType, nullable = false),

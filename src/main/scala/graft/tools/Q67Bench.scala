@@ -46,7 +46,7 @@ object Q67Bench {
     spark.sparkContext.setLogLevel("WARN")
 
     val dir = graft.ops.Tpcds.ensure(spark, sfDir)
-    def t(name: String) = spark.read.parquet(s"$dir/$name.parquet")
+    def t(name: String) = graft.ops.Tpcds.t(spark, dir, name)
     val groupCols = Seq("i_category", "i_class", "i_brand", "i_product_name",
       "d_year", "d_qoy", "d_moy", "s_store_id")
 
