@@ -86,7 +86,12 @@ object Bench {
     // compile, and that is unattributable noise, not engine throughput. A
     // full pre-pass gives steady-state numbers (round 2: q_fn_string showed
     // 16.7 s cold vs 0.24 s warm — a 70x attribution error), which is what
-    // the round-over-round regression gate needs.
+    // the round-over-round regression gate needs. That holds only while the
+    // codegen cache keeps the suite's classes: at Spark's default 100
+    // entries the next pass compiled 3,604 classes again (sf0.1,
+    // local[4]), so the "warm" reps still paid codegen and JIT warm-up.
+    // SessionDefaults sizes the cache to the suite's working set (see its
+    // scaladoc).
     spark.range(1L << 20).selectExpr("sum(id) AS s")
       .write.format("noop").mode("overwrite").save()
     // the warmup pass is also the COLD (first-run) timing record: pre-r8

@@ -7,7 +7,7 @@ import org.apache.spark.sql.DataFrame
   * truncates the plan", §2.6 overlap independent jobs).
   *
   * WHY: several declared queries attach a derived scalar/threshold back to
-  * the aggregate it was derived from (Q1/Q30/Q81 per-group outlier cuts,
+  * the aggregate it was derived from (Q30/Q81 per-group outlier cuts,
   * Q23b's frequency mean, TPC-H Q11/Q15 totals, Q14's avg_sales, Q44's
   * baseline). A DataFrame subtree consumed by two such branches is computed
   * once ONLY while every consumer's copy stays canonically equal (then AQE
@@ -15,9 +15,11 @@ import org.apache.spark.sql.DataFrame
   * there, need no barrier). The moment one consumer specializes its copy
   * (an inferred IsNotNull pushed below the aggregate, divergent column
   * pruning, a literal-bearing filter), reuse is off and each copy runs its
-  * own full fact scan — measured r19 in final executed plans: q1's year of
-  * store_returns scanned 3x, q14's three-year channels 6x, q23b's store
-  * history 3x. An eager `localCheckpoint` is the engine's committed answer
+  * own full fact scan — measured r19 in final executed plans: q14's
+  * three-year channels 6x, q23b's store history 3x. Where the threshold is
+  * a per-group count/sum over the aggregate itself, one window partitioned
+  * by the group key computes it with no barrier and no second copy (q65,
+  * q1). Otherwise an eager `localCheckpoint` is the engine's committed answer
   * (the q_dedup_cluster per-round precedent): the shared aggregate —
   * always GROUP-grain, orders of magnitude smaller than the fact input —
   * is computed exactly once, stored on the executors, and every consumer

@@ -1,5 +1,6 @@
 package graft.tools
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
@@ -13,6 +14,11 @@ import graft.SparkEntry
   *
   *   wall      median wall-clock of the timed passes (seconds)
   *   jobs/stages/tasks   scheduling volume of one pass
+  *   compiles  classes Janino compiled during the last timed pass (Spark's
+  *             CodegenMetrics count) — repeats exactly run to run, so it
+  *             is the low-noise counter for codegen claims; nonzero on a
+  *             warm pass means the codegen cache lost the query's classes
+  *             or the query's generated code changed between constructions
   *   trun      sum of task executorRunTime (s) — divide by cores for the
   *             perfectly-parallel floor; wall far above trun/cores means
   *             the query is dominated by driver/stage-barrier overhead,
@@ -57,7 +63,7 @@ object StageStats {
     }
     spark.sparkContext.addSparkListener(L)
 
-    println(f"[stagestats] ${"query"}%-24s ${"wall"}%7s ${"jobs"}%5s ${"stg"}%5s ${"tasks"}%6s ${"trun"}%8s ${"tcpu"}%8s ${"gc"}%6s ${"inMB"}%8s ${"srMB"}%8s ${"swMB"}%8s")
+    println(f"[stagestats] ${"query"}%-24s ${"wall"}%7s ${"jobs"}%5s ${"stg"}%5s ${"tasks"}%6s ${"compiles"}%8s ${"trun"}%8s ${"tcpu"}%8s ${"gc"}%6s ${"inMB"}%8s ${"srMB"}%8s ${"swMB"}%8s")
     names.foreach { n =>
       val fn = SparkEntry.queries(n)
       def run(): Double = {
@@ -66,11 +72,14 @@ object StageStats {
         (System.nanoTime() - t0) / 1e9
       }
       run() // warm: codegen compile, file listing, gen-cache ensure
+      var compiles = 0L
       val walls = (1 to reps).map { i =>
         val last = i == reps
         if (last) { L.reset(); L.enabled = true }
+        val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val w = run()
         if (last) {
+          compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
           // the listener bus is async (and its drain API is private) —
           // poll until the task counter stops moving before reading
           var prev = -1L
@@ -80,7 +89,7 @@ object StageStats {
         w
       }.sorted
       val wall = walls(walls.size / 2)
-      println(f"[stagestats] $n%-24s $wall%7.2f ${L.jobs}%5d ${L.stages}%5d ${L.tasks}%6d ${L.runMs / 1e3}%8.2f ${L.cpuNs / 1e9}%8.2f ${L.gcMs / 1e3}%6.2f ${L.inB / 1e6}%8.1f ${L.srB / 1e6}%8.1f ${L.swB / 1e6}%8.1f")
+      println(f"[stagestats] $n%-24s $wall%7.2f ${L.jobs}%5d ${L.stages}%5d ${L.tasks}%6d $compiles%8d ${L.runMs / 1e3}%8.2f ${L.cpuNs / 1e9}%8.2f ${L.gcMs / 1e3}%6.2f ${L.inB / 1e6}%8.1f ${L.srB / 1e6}%8.1f ${L.swB / 1e6}%8.1f")
     }
     spark.stop()
   }

@@ -17,4 +17,12 @@ class ConstructionSpec extends AnyFunSuite {
     // the active session has ANSI on and still builds the query
     graft.ops.Tpcds.q_tpcds_q93(spark, TestSpark.sf0001)
   }
+
+  test("constructing q_tpcds_q1 registers no temp view") {
+    def views = spark.catalog.listTables().collect()
+      .filter(_.isTemporary).map(_.name).toSet
+    val before = views
+    graft.ops.Tpcds.q_tpcds_q1(spark, TestSpark.sf0001)
+    assert(views == before)
+  }
 }

@@ -2,7 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for the whole forked test JVM. */
+/** One shared local session for the whole forked test JVM. It takes the
+  * engine's codegen-cache bound from [[graft.plans.SessionDefaults]] (a
+  * static conf, so it must be set by the JVM's first session) but not the
+  * join-strategy defaults, so the plans the tests assert are unchanged. */
 object TestSpark {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -12,6 +15,8 @@ object TestSpark {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir", "/tmp/graft-test-warehouse")
+      .config(graft.plans.SessionDefaults.codegenCache._1,
+        graft.plans.SessionDefaults.codegenCache._2)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
