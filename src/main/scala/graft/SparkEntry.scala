@@ -174,9 +174,7 @@ object SparkEntry {
     * the same pinned cache), but [[graft.Bench]] excludes them from the
     * sf-proportional record: an sf1-sized constant inside an sf0.1 total
     * would read as a regression that isn't one. */
-  val pinnedScaleProofs: Set[String] = Set(
-    "q_tpcds_q38_pub", "q_tpcds_q13_pub", "q_tpcds_q41_pub",
-    "q_tpcds_q24_pub", "q_tpcds_q64_pub")
+  val pinnedScaleProofs: Set[String] = Tpcds.pubTwins
 
   private val extDec = "CAST(l_extendedprice AS DECIMAL(12,2))"
   private val oneMinusDisc = "(1 - CAST(l_discount AS DECIMAL(4,2)))"

@@ -26,19 +26,11 @@ object Verify {
     SparkEntry.queries.foreach { case (name, fn) =>
       try {
         // generated-data oracle SQL (q_tpcds_*, partsupp TPC-H) reads
-        // parquet at a path pinned to the module's oracleScale; dumping
-        // results from another fixture scale would hash-mismatch against
-        // DIFFERENT data. Fail loud instead.
-        if (ops.Tpcds.queries.contains(name) && !ops.Tpcds.oracleCompatible(sfDir))
-          throw new IllegalStateException(
-            s"$name's oracle is pinned to ${ops.Tpcds.oracleScale}-generated " +
-              s"data; verifying at '$sfDir' would compare against the wrong " +
-              s"scale. Run Verify at ${ops.Tpcds.oracleScale}.")
-        if (ops.TpchFull.queries.contains(name) && !ops.TpchFull.oracleCompatible(sfDir))
-          throw new IllegalStateException(
-            s"$name's oracle is pinned to ${ops.TpchFull.oracleScale}-generated " +
-              s"data; verifying at '$sfDir' would compare against the wrong " +
-              s"scale. Run Verify at ${ops.TpchFull.oracleScale}.")
+        // parquet at a path pinned to TpcSql.oracleScale; dumping results
+        // from another fixture scale would hash-mismatch against DIFFERENT
+        // data. Fail loud instead.
+        if (ops.Tpcds.queries.contains(name) || ops.TpchFull.queries.contains(name))
+          ops.TpcSql.requireOracleScale(name, sfDir)
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
       } catch { case scala.util.control.NonFatal(e) =>

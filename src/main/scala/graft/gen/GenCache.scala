@@ -29,7 +29,7 @@ object GenCache {
     * protocol uses java.nio file locks, which need a POSIX mount.
     *
     * The DuckDB oracle SQL pins absolute paths under the DEFAULT root
-    * ([[graft.ops.Tpcds.oracleScale]]): run the correctness gate without
+    * ([[graft.ops.TpcSql.oracleScale]]): run the correctness gate without
     * an override (benchmarks at any scale are free to use one). */
   def rootFor(spark: SparkSession, sub: String): String =
     s"${spark.conf.get("spark.graft.cacheRoot", "/tmp").stripSuffix("/")}/$sub"

@@ -299,32 +299,6 @@ object Dedup {
       .orderBy(col("jacc").desc, col("a_id"), col("b_id"))
       .limit(100)
 
-  /** EVALUATION variant (not declared): pair generation by per-shingle
-    * group-collect + in-row expansion instead of the two-sided self-join —
-    * one shuffle (groupBy g) instead of shuffling the exploded stream into
-    * both sides of a merge join; the cost moves into HOF list² expansion
-    * per shingle group. Same output as [[ngramPairs]] uncapped. */
-  private[graft] def ngramPairsGrouped(docs: DataFrame, threshold: Double): DataFrame = {
-    val ex = docs
-      .select(col("doc_id"), txt.shingle_hashes(col("text"), 3).as("sh"))
-      .select(col("doc_id"), size(col("sh")).as("nsh"), explode(col("sh")).as("g"))
-    ex.groupBy("g")
-      .agg(collect_list(struct(col("doc_id"), col("nsh"))).as("ds"))
-      .filter(size(col("ds")) > 1)
-      .select(explode(expr(
-        """flatten(transform(ds, a ->
-          |  filter(transform(ds, b -> IF(a.doc_id < b.doc_id,
-          |    struct(a.doc_id AS a_id, b.doc_id AS b_id, a.nsh AS na, b.nsh AS nb),
-          |    CAST(NULL AS struct<a_id:bigint,b_id:bigint,na:int,nb:int>))),
-          |  p -> p IS NOT NULL)))""".stripMargin)).as("p"))
-      .select(col("p.a_id"), col("p.b_id"), col("p.na"), col("p.nb"))
-      .groupBy("a_id", "b_id")
-      .agg(count(lit(1)).as("inter"), max(col("na")).as("na"), max(col("nb")).as("nb"))
-      .select(col("a_id"), col("b_id"), (col("inter").cast("double") /
-        (col("na") + col("nb") - col("inter"))).as("jacc"))
-      .filter(col("jacc") >= threshold)
-  }
-
   /** Connected components over an undirected pair list by iterative
     * min-label propagation: each round every vertex takes the min label in
     * its neighborhood (one keyed join + one min-aggregate — both

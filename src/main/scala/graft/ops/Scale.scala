@@ -151,8 +151,8 @@ object Scale {
     * overwritten by `withColumn` and dropped at the end, so the helper
     * refuses it up front.
     *
-    * WHEN TO USE (measured, r12 — `graft.tools.RankBench` is the A/B
-    * harness): this wins when the ranked frame is fact-proportional — the
+    * WHEN TO USE (measured, r12 with a since-retired A/B harness; the
+    * decision is logged in OPTIMIZATION_r18.md): this wins when the ranked frame is fact-proportional — the
     * one-task sort is the bottleneck and the extra keyed shuffles are
     * noise. The local[32] crossover curve over parquet-backed orders
     * replicas: 150k rows window 0.18 s vs two-phase 0.68 (window 3.7×

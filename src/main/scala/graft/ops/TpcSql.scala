@@ -1,0 +1,123 @@
+package graft.ops
+
+import java.util.Locale
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.{MultiInstanceRelation, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
+import org.apache.spark.sql.types.StructType
+
+/** One SQL text per generated-data TPC query, run by both engines.
+  *
+  * Each text in [[Tpcds]] / [[TpchFull]] is written once against a
+  * [[Dialect]] and rendered twice:
+  *   - for DuckDB ([[duckdb]]), every table is a parquet glob pinned to the
+  *     generated cache at [[oracleScale]] (the `*_pub` twins' tables at
+  *     their pinned scale), and staged CTEs read `AS MATERIALIZED`. This is
+  *     the `SparkEntry.oracleSql` the correctness gate runs.
+  *   - for Spark ([[spark]]), every table is its bare name, CTEs carry no
+  *     staging hint and integer division is `div` (DuckDB's `//`).
+  *     [[dataFrame]] parses the text with the session's own parser and
+  *     replaces each table name with its [[graft.Catalog]] read.
+  *
+  * So the gate compares two engines running the same text. Scale hints
+  * that matter to Spark live in the text as `/*+ BROADCAST(x) */`, which
+  * DuckDB reads as a comment.
+  */
+object TpcSql {
+  /** The one fixture scale whose generated data the DuckDB renderings
+    * read. [[graft.Verify]] refuses to dump a generated-data query at any
+    * other scale ([[requireOracleScale]]): its oracle would read
+    * different data. Bench (no oracle) runs at any scale. */
+  val oracleScale = "sf0.01"
+
+  /** How a text names its inputs: `P` a table at the fixture-matched
+    * scale, `Pp` a table at the `*_pub` twins' pinned scale, `M` the
+    * keyword (with its trailing space) that stages a CTE, `Div` the
+    * integer-division operator. */
+  final case class Dialect(P: String => String, Pp: String => String, M: String, Div: String)
+
+  /** DuckDB: parquet globs under the default cache `root`, pinned to
+    * [[oracleScale]] and to `pubScale`. */
+  def duckdb(root: String, pubScale: String): Dialect =
+    Dialect(path(root, oracleScale), path(root, pubScale), "MATERIALIZED ", "//")
+
+  private def path(root: String, scale: String)(name: String): String =
+    s"'$root/$scale/$name.parquet/*.parquet'"
+
+  /** Spark: bare table names, resolved by [[dataFrame]]. */
+  val spark: Dialect = Dialect(identity, identity, "", "div")
+
+  /** Fail loud when `name`, a generated-data query, is dumped for the gate
+    * from a fixture dir other than [[oracleScale]]. */
+  def requireOracleScale(name: String, sfDir: String): Unit =
+    if (new java.io.File(sfDir).getName != oracleScale)
+      throw new IllegalStateException(
+        s"$name's oracle is pinned to $oracleScale-generated data; verifying " +
+          s"at '$sfDir' would compare against the wrong scale. Run Verify at $oracleScale.")
+
+  /** `text` (rendered by [[spark]]) as a DataFrame over the tables under
+    * `dir`. Every table name the text reads — in the main query, CTE bodies
+    * and subquery expressions alike, unless a CTE of that name is in scope
+    * — becomes a [[graft.Catalog]] read of `dir/<name>.parquet` with its
+    * `declared` schema. A name with no declaration throws
+    * IllegalArgumentException naming it. Nothing touches the session: no
+    * temp view, no conf write, no job (the catalog reads one footer per
+    * table in-process and caches it).
+    *
+    * The texts sum money as exact long cents (`CAST(x * 100 AS BIGINT)`),
+    * so the session must have ANSI mode on ([[requireAnsi]]). */
+  def dataFrame(spark: SparkSession, text: String, dir: String,
+                declared: String => Option[StructType]): DataFrame = {
+    requireAnsi(spark)
+    val reads = scala.collection.mutable.Map.empty[String, LogicalPlan]
+    def table(name: String): LogicalPlan = {
+      val schema = declared(name).getOrElse(throw new IllegalArgumentException(
+        s"table '$name' in the query text has no declared schema"))
+      val read = reads.getOrElseUpdate(name,
+        graft.Catalog.table(spark, s"$dir/$name.parquet", schema).queryExecution.logical)
+      // each reference gets its own attribute ids, as a fresh read would
+      SubqueryAlias(name, read match {
+        case r: MultiInstanceRelation => r.newInstance()
+        case p => p
+      })
+    }
+    GraftColumnBridge.ofRows(spark,
+      substitute(spark.sessionState.sqlParser.parsePlan(text), Set.empty, table))
+  }
+
+  /** Long-cents money sums (the texts' `CAST(x * 100 AS BIGINT)`, the hand
+    * forms' `Tpcds.centsL`) document ANSI's loud error as their overflow
+    * posture, which holds only with ANSI mode on in `spark`, the session
+    * the query is built on. */
+  private[ops] def requireAnsi(spark: SparkSession): Unit =
+    require(spark.conf.get("spark.sql.ansi.enabled", "true").toBoolean,
+      "long-cents money sums require spark.sql.ansi.enabled=true: without " +
+        "ANSI a long-cents overflow wraps silently instead of throwing")
+
+  /** `plan` with every unqualified table reference that no CTE in `ctes`
+    * shadows replaced by `table(name)`. CTE bodies are inner children of
+    * their WITH node and subquery plans live in expressions, so both are
+    * walked explicitly; a CTE is in scope for later CTEs and the body. */
+  private def substitute(plan: LogicalPlan, ctes: Set[String],
+                         table: String => LogicalPlan): LogicalPlan = plan match {
+    case w: UnresolvedWith =>
+      var scope = ctes
+      val rels = w.cteRelations.map { case (name, body, depth) =>
+        val b = substitute(body, scope, table).asInstanceOf[SubqueryAlias]
+        scope += name.toLowerCase(Locale.ROOT)
+        (name, b, depth)
+      }
+      w.copy(child = substitute(w.child, scope, table), cteRelations = rels)
+    case u: UnresolvedRelation if u.multipartIdentifier.size == 1 =>
+      val name = u.multipartIdentifier.head.toLowerCase(Locale.ROOT)
+      if (ctes(name)) u else table(name)
+    case u: UnresolvedRelation =>
+      throw new IllegalArgumentException(
+        s"table '${u.multipartIdentifier.mkString(".")}' in the query text is not a bare TPC table name")
+    case p =>
+      p.mapChildren(substitute(_, ctes, table)).transformExpressions {
+        case s: SubqueryExpression => s.withNewPlan(substitute(s.plan, ctes, table))
+      }
+  }
+}

@@ -41,30 +41,24 @@ class CatalogSpec extends AnyFunSuite {
     }
   }
 
-  /** Job ids that `body` started, read after a fence job in another group
-    * is visible — the status listener sees events in order, so every job
-    * `body` started is visible by then too. */
-  private def jobsOf(body: => Unit): Seq[Int] = {
-    val sc = spark.sparkContext
-    val (group, fence) = (s"catalog-${System.nanoTime}", s"fence-${System.nanoTime}")
-    sc.setJobGroup(group, "construction under test")
-    try body finally sc.clearJobGroup()
-    sc.setJobGroup(fence, "listener fence")
-    try spark.range(1).count() finally sc.clearJobGroup()
-    val deadline = System.currentTimeMillis() + 30000
-    while (sc.statusTracker.getJobIdsForGroup(fence).isEmpty &&
-        System.currentTimeMillis() < deadline) Thread.sleep(10)
-    assert(sc.statusTracker.getJobIdsForGroup(fence).nonEmpty, "fence job never became visible")
-    sc.statusTracker.getJobIdsForGroup(group).toSeq
-  }
-
   test("with warm caches, building queries runs no Spark job") {
     val names = Seq("q_tpcds_q45", "q_join_anti", "q_text_stats")
     def build(): Unit = names.foreach(n => SparkEntry.queries(n)(spark, TestSpark.sf0001))
     build() // warm: generation cache, schemas, shuffle sizing
-    assert(jobsOf(build()) == Nil)
+    assert(TestSpark.jobsOf(build()) == Nil)
     // the probe does see an inference job
-    assert(jobsOf(spark.read.parquet(s"${TestSpark.sf0001}/orders.parquet")).nonEmpty)
+    assert(TestSpark.jobsOf(spark.read.parquet(s"${TestSpark.sf0001}/orders.parquet")).nonEmpty)
+  }
+
+  test("an undeclared table name in a query text fails construction, naming the table") {
+    val dir = graft.ops.Tpcds.ensure(spark, TestSpark.sf0001)
+    def declared(n: String) = Option.when(TpcdsSchemas.tableNames.contains(n))(TpcdsSchemas(n))
+    val e = intercept[IllegalArgumentException](graft.ops.TpcSql.dataFrame(spark,
+      "SELECT count(*) FROM store_sales JOIN stores ON ss_store_sk = s_store_sk", dir, declared))
+    assert(e.getMessage.contains("'stores'"), e.getMessage)
+    // a CTE of that name shadows the table, so the same text with one parses
+    graft.ops.TpcSql.dataFrame(spark, "WITH stores AS (SELECT * FROM store) " +
+      "SELECT count(*) FROM store_sales JOIN stores ON ss_store_sk = s_store_sk", dir, declared)
   }
 
   test("a mistyped or undeclared column fails the read, naming the column") {

@@ -14,15 +14,29 @@ class ConstructionSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException](
       graft.ops.Tpcds.q_tpcds_q93(other, TestSpark.sf0001))
     assert(e.getMessage.contains("spark.sql.ansi.enabled=true"), e.getMessage)
+    // the SQL-text queries sum long cents too and check the same way
+    val e2 = intercept[IllegalArgumentException](
+      SparkEntry.queries("q_tpcds_q45")(other, TestSpark.sf0001))
+    assert(e2.getMessage.contains("spark.sql.ansi.enabled=true"), e2.getMessage)
     // the active session has ANSI on and still builds the query
     graft.ops.Tpcds.q_tpcds_q93(spark, TestSpark.sf0001)
   }
 
-  test("constructing q_tpcds_q1 registers no temp view") {
+  test("constructing q1 and SQL-text TPC queries runs no job, leaves views and conf") {
     def views = spark.catalog.listTables().collect()
       .filter(_.isTemporary).map(_.name).toSet
-    val before = views
-    graft.ops.Tpcds.q_tpcds_q1(spark, TestSpark.sf0001)
-    assert(views == before)
+    // q1: hand form; q45: IN-subquery under an OR; q54: CTEs, scalar
+    // subqueries and IN-subqueries; q41_pub: a twin pinned to the sf1 cache
+    val names = Seq("q_tpcds_q1", "q_tpcds_q45", "q_tpcds_q54", "q_tpcds_q41_pub")
+    assert(names.tail.forall(n => !graft.ops.Tpcds.hand.contains(n)))
+    def build(): Unit = names.foreach(n => SparkEntry.queries(n)(spark, TestSpark.sf0001))
+    val v0 = views
+    build() // warm: generation caches, schemas, shuffle sizing
+    assert(views == v0)
+    // warm, construction itself reads only: no job, no view, no conf write
+    val c0 = spark.conf.getAll
+    assert(TestSpark.jobsOf(build()) == Nil)
+    assert(views == v0)
+    assert(spark.conf.getAll == c0)
   }
 }

@@ -162,6 +162,17 @@ class GenSpec extends AnyFunSuite {
       .join(cust, col("ss_customer_sk") === col("c_customer_sk")).count()
     assert(matched == nonNull.count(),
       "every non-null ss_customer_sk resolves in customer")
+    // every sales and returns fact's item FK resolves in item: q14's
+    // totals (and every item-sliced query) depend on it
+    val item = TpcdsGen.table(spark, "item", sf, 4).select("i_item_sk")
+    for ((fact, fk) <- Seq("store_sales" -> "ss_item_sk", "catalog_sales" -> "cs_item_sk",
+        "web_sales" -> "ws_item_sk", "store_returns" -> "sr_item_sk",
+        "catalog_returns" -> "cr_item_sk", "web_returns" -> "wr_item_sk")) {
+      val keys = TpcdsGen.table(spark, fact, sf, 4).select(fk).filter(col(fk).isNotNull)
+      val orphans = keys.join(item, col(fk) === col("i_item_sk"), "left_anti").count()
+      assert(keys.count() > 0 && orphans == 0,
+        s"$orphans non-null $fk values of $fact do not resolve in item")
+    }
     // date FK spans date_dim's fixed 73,049 keys — not a 1..1000 stub domain
     val Array(lo, hi) = ss.agg(min("ss_sold_date_sk"), max("ss_sold_date_sk"))
       .head().toSeq.map(_.asInstanceOf[Int]).toArray

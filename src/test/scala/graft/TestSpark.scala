@@ -23,4 +23,21 @@ object TestSpark {
   }
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
+
+  /** Job ids that `body` started, read after a fence job in another group
+    * is visible — the status listener sees events in order, so every job
+    * `body` started is visible by then too. */
+  def jobsOf(body: => Unit): Seq[Int] = {
+    val sc = spark.sparkContext
+    val (group, fence) = (s"catalog-${System.nanoTime}", s"fence-${System.nanoTime}")
+    sc.setJobGroup(group, "construction under test")
+    try body finally sc.clearJobGroup()
+    sc.setJobGroup(fence, "listener fence")
+    try spark.range(1).count() finally sc.clearJobGroup()
+    val deadline = System.currentTimeMillis() + 30000
+    while (sc.statusTracker.getJobIdsForGroup(fence).isEmpty &&
+        System.currentTimeMillis() < deadline) Thread.sleep(10)
+    assert(sc.statusTracker.getJobIdsForGroup(fence).nonEmpty, "fence job never became visible")
+    sc.statusTracker.getJobIdsForGroup(group).toSeq
+  }
 }
