@@ -27,8 +27,18 @@ import org.apache.hadoop.fs.Path
   *
   * Scale: each table converts as ONE narrow scan→write job (no shuffle, no
   * driver-side data). At 100 TB the work is embarrassingly parallel over
-  * input splits; per-table jobs are independent and can be submitted
+  * input splits; per-table jobs are independent and are submitted
   * concurrently (the reference converts file-sequentially, src/lib.rs:86).
+  *
+  * Local files: every file a write creates (part, `.crc`, `_SUCCESS`) and
+  * every directory gets its permission set by Hadoop's local FileSystem,
+  * which without the native-hadoop library forks `chmod` for each one
+  * and `ls -ld` for each status whose permission is read. graft's
+  * sessions register [[graft.io.NioLocalFileSystem]], which does both
+  * in-process: the `ingest-sf0.01` benchmark's three passes (generation,
+  * this conversion, TPC-DS generation) allocated ~5,100 PIDs per run with
+  * the stock class and ~500 with graft's ([[graft.plans.SessionDefaults]]
+  * has the ranges).
   */
 object Convert {
 
@@ -134,27 +144,22 @@ object Convert {
   }
 
   /** Per-table conversion loop (R8, src/lib.rs:45-120). Tables convert
-    * CONCURRENTLY from the driver (bounded pool): each is an independent
+    * CONCURRENTLY through [[graft.plans.Fanout]]: each is an independent
     * scan→write job, so submitting them together lets Spark pack tasks from
     * small tables around the big ones — the improvement the reference left
-    * commented out (src/lib.rs:94-104, file-sequential at src/lib.rs:86). */
+    * commented out (src/lib.rs:94-104, file-sequential at src/lib.rs:86).
+    * A failed table fails the call only after every other table's write
+    * has finished. */
   def toParquet(spark: SparkSession, benchmark: Benchmark,
                 inputDir: String, outputDir: String,
-                codec: String = "snappy", concurrency: Int = 8,
+                codec: String = "snappy",
                 parquetBlockSize: Option[Long] = None,
                 keepIgnore: Boolean = false): Unit = {
     if (!hadoopExists(spark, inputDir))
       throw new IllegalArgumentException(s"input path does not exist: $inputDir")
     validateCodec(codec)
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(concurrency)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    try Await.result(
-      Future.sequence(benchmark.tableNames.map(t =>
-        Future(table(spark, inputDir, outputDir, benchmark, t, "parquet", codec,
-          parquetBlockSize, keepIgnore)))),
-      Duration.Inf)
-    finally pool.shutdown()
+    graft.plans.Fanout.map(benchmark.tableNames)(t =>
+      table(spark, inputDir, outputDir, benchmark, t, "parquet", codec,
+        parquetBlockSize, keepIgnore))
   }
 }

@@ -1,6 +1,6 @@
 package graft.gen
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -72,8 +72,8 @@ object GenUtil {
     "pending", "even", "silent", "deposits", "requests", "accounts", "packages",
     "theodolites", "instructions", "platelets", "foxes", "ideas", "dependencies")
 
-  /** Run `f` with whole-stage codegen disabled, restoring the previous
-    * setting after. Generation jobs are pure wide projections over
+  /** A clone of `spark` with whole-stage codegen off, to plan generation
+    * writes on. Generation jobs are pure wide projections over
     * spark.range: fused whole-stage methods for the 23-34-column tables
     * exceed HotSpot's 8 KB JIT limit and run interpreted, while the
     * non-fused path splits per-expression into small JIT-able methods.
@@ -82,16 +82,32 @@ object GenUtil {
     * widest facts (sf1 store_sales 5.97 s vs 6.89 s fused), and the CLI
     * sf1 full run dropped 126 s → 22.5 s once projections stopped
     * evaluating interpreted. Queries keep WSCG: operator fusion matters
-    * there and their methods are small. */
-  def withoutWholeStageCodegen[T](spark: org.apache.spark.sql.SparkSession)(f: => T): T = {
-    val key = "spark.sql.codegen.wholeStage"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try f finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+    * there and their methods are small.
+    *
+    * The setting goes on a clone, never on `spark`: a query another thread
+    * plans on the caller's session during a generation keeps whole-stage
+    * codegen, and overlapping generations cannot restore the flag out of
+    * order. The clone shares `spark`'s SparkContext, so jobs keep the
+    * calling thread's job group and local properties.
+    *
+    * The clone is kept and reused while `spark` and its conf stay the
+    * same, because every Spark session runs its tasks under its own
+    * executor class loader, and Spark's generated-class cache is keyed by
+    * class loader: a fresh clone per call compiled all 61 generated
+    * classes of a TPC-DS generation again on every pass (sf0.01, local[4]:
+    * task CPU per warm pass 4–5.5 s → 7.7–9 s), and the ingest benchmark's
+    * retained heap grew 72 → 80 MB. A conf change on `spark` makes the next
+    * call clone it afresh. */
+  def generationSession(spark: SparkSession): SparkSession = synchronized {
+    val conf = spark.conf.getAll
+    lastGeneration.collect { case (s, c, gen) if (s eq spark) && c == conf => gen }.getOrElse {
+      val gen = GraftColumnBridge.cloneSession(spark)
+      gen.conf.set("spark.sql.codegen.wholeStage", "false")
+      lastGeneration = Some((spark, conf, gen))
+      gen
     }
   }
+  private var lastGeneration: Option[(SparkSession, Map[String, String], SparkSession)] = None
 
   /** Render a DataFrame as the reference's raw pipe-delimited layout:
     * `{out}/{table}.{ext}/part-*.{ext}` (src/tpch.rs:102,123). `trailingPipe`

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.schema.{Benchmark, TpchSchemas}
 import GenUtil._
+import graft.plans.Fanout
 
 /** TPC-H data generation as native Spark jobs — replaces the reference's
   * dbgen process fan-out (/root/reference/src/tpch.rs:35-132) with
@@ -31,7 +32,12 @@ import GenUtil._
   *
   * Scale design: no shuffle anywhere — each table is one narrow map job over
   * spark.range (lineitem adds a narrow explode). 100 TB generation is
-  * embarrassingly parallel and bounded only by write bandwidth.
+  * embarrassingly parallel and bounded only by write bandwidth. The eight
+  * table jobs are submitted concurrently ([[graft.plans.Fanout]]), and
+  * Spark's FIFO scheduler fills the slots a finishing small table leaves
+  * idle with the next one's tasks — at small scales a table is a few tasks
+  * and mostly fixed per-job cost, which one job at a time left the cores
+  * idle for.
   */
 object TpchGen extends Benchmark {
   val name = "tpch"
@@ -235,24 +241,25 @@ object TpchGen extends Benchmark {
 
   /** Raw-layout generation (reference parity: `{out}/{table}.tbl/part-*.tbl`
     * pipe-delimited with trailing '|', src/tpch.rs:96-129). */
-  def generate(spark: SparkSession, scale: Double, partitions: Int, outputPath: String): Unit =
-    withoutWholeStageCodegen(spark) {
-      tableNames.foreach { tbl =>
-        writeRaw(table(spark, tbl, scale, partitions), outputPath, tbl, tableExt,
-          trailingPipe = true)
-      }
+  def generate(spark: SparkSession, scale: Double, partitions: Int, outputPath: String): Unit = {
+    val gen = generationSession(spark)
+    Fanout.map(tableNames) { tbl =>
+      writeRaw(table(gen, tbl, scale, partitions), outputPath, tbl, tableExt,
+        trailingPipe = true)
     }
+  }
 
   /** Spark-native fast path: generate straight to Parquet, skipping the text
     * intermediate entirely (the reference can't do this; we note it as the
     * 100 TB-scale default). */
   def generateParquet(spark: SparkSession, scale: Double, partitions: Int,
-                      outputPath: String, codec: String = "snappy"): Unit =
-    withoutWholeStageCodegen(spark) {
-      tableNames.foreach { tbl =>
-        table(spark, tbl, scale, partitions).write
-          .option("compression", graft.convert.Convert.validateCodec(codec))
-          .parquet(s"$outputPath/$tbl.parquet")
-      }
+                      outputPath: String, codec: String = "snappy"): Unit = {
+    val compression = graft.convert.Convert.validateCodec(codec)
+    val gen = generationSession(spark)
+    Fanout.map(tableNames) { tbl =>
+      table(gen, tbl, scale, partitions).write
+        .option("compression", compression)
+        .parquet(s"$outputPath/$tbl.parquet")
     }
+  }
 }

@@ -39,23 +39,12 @@ import org.apache.spark.sql.DataFrame
   * fails and retries the query instead of recomputing the subtree — the
   * documented trade the cluster-loss probes already exercise.
   *
-  * `concurrently` submits all checkpoint jobs from a small thread pool so
+  * `concurrently` submits all checkpoint jobs through [[Fanout]] so
   * INDEPENDENT subtrees overlap (guide §2.6) instead of serializing on the
-  * driver thread; Spark job descriptions/groups are thread-local, so
-  * per-job attribution in the UI stays correct.
+  * driver thread; every leg's job carries the caller's job group, and the
+  * call returns only after every leg has finished.
   */
 object Materialize {
   def concurrently(dfs: Seq[DataFrame]): Seq[DataFrame] =
-    if (dfs.size <= 1) dfs.map(_.localCheckpoint())
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(dfs.size, 4))
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      try scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(
-          dfs.map(df => scala.concurrent.Future(df.localCheckpoint()))),
-        scala.concurrent.duration.Duration.Inf)
-      finally pool.shutdown()
-    }
+    Fanout.map(dfs)(_.localCheckpoint())
 }

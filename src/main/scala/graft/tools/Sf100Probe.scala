@@ -92,6 +92,7 @@ object Sf100Probe {
     val ordered = graft.gen.TpcdsGen.tableNames.partition(!keep(_)) match {
       case (transient, resident) => transient ++ resident
     }
+    val gen = graft.gen.GenUtil.generationSession(spark)
     for (tbl <- ordered) {
       val out = dir.resolve(s"$tbl.parquet")
       // resume only on a COMPLETE write (Spark's _SUCCESS marker) — a
@@ -103,16 +104,15 @@ object Sf100Probe {
       } else {
         rm(out) // partial from a killed run
         val t0 = System.nanoTime()
-        // Same execution discipline as generateParquet (r15): fused
+        // Same execution discipline as generateParquet (r15), on its
+        // whole-stage-codegen-off session clone: fused
         // whole-stage methods for the widest facts exceed HotSpot's 8 KB
         // JIT limit and run INTERPRETED — the r14 probe wrote via a bare
         // table().write and paid ~3x on the two big facts (sf10 A/B:
         // catalog_sales 27.1 s fused vs 9.2 s non-fused, store_sales
         // 36.1 vs 8.8). Queries in leg 2 keep WSCG.
-        graft.gen.GenUtil.withoutWholeStageCodegen(spark) {
-          graft.gen.TpcdsGen.table(spark, tbl, sf, cpus.toInt)
-            .write.mode("overwrite").parquet(out.toString)
-        }
+        graft.gen.TpcdsGen.table(gen, tbl, sf, cpus.toInt)
+          .write.mode("overwrite").parquet(out.toString)
         val secs = (System.nanoTime() - t0) / 1e9
         val bytes = du(out)
         totalSecs += secs; totalBytes += bytes

@@ -25,7 +25,7 @@ import org.apache.spark.sql.SparkSession
   *  4. Delete before the next table — transient disk never exceeds the
   *     budget.
   *
-  * Writes run `withoutWholeStageCodegen` like every committed generation
+  * Writes run on `GenUtil.generationSession` like every committed generation
   * measurement (fused wide-fact projection methods blow HotSpot's 8 KB
   * JIT limit and run interpreted ~3× slower — the r15 root cause).
   *
@@ -80,13 +80,12 @@ object WrittenGenProbe {
       val s = java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
       try s.forEach(java.nio.file.Files.delete(_)) finally s.close()
     }
+    val gen = graft.gen.GenUtil.generationSession(spark)
     def writeSlice(tbl: String, lo: Long, hi: Long, out: java.nio.file.Path): Double = {
       rm(out)
       val t0 = System.nanoTime()
-      graft.gen.GenUtil.withoutWholeStageCodegen(spark) {
-        graft.gen.TpcdsGen.tableSlice(spark, tbl, sf, cpus, lo, hi)
-          .write.mode("overwrite").parquet(out.toString)
-      }
+      graft.gen.TpcdsGen.tableSlice(gen, tbl, sf, cpus, lo, hi)
+        .write.mode("overwrite").parquet(out.toString)
       (System.nanoTime() - t0) / 1e9
     }
 

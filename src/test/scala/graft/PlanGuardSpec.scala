@@ -393,9 +393,10 @@ class PlanGuardSpec extends AnyFunSuite {
       s"Q64 year slices not pushed into the date_dim scans:\n$q64")
     assert(q64.contains("sr_ticket_number") && q64.contains("cr_order_number"),
       s"Q64 lost a (order/ticket, item) PK join:\n$q64")
-    // the sf1-pinned PUBLISHED twin shares q64At, so it must keep the
-    // exact same physical guarantees — disjoint pushed year slices, two
-    // fact scans, PK joins (the slice parameters are the only difference)
+    // the sf1-pinned PUBLISHED twin is a second text with the same staged
+    // shape (its item slice and pinned sf1 inputs differ), so it must keep
+    // the exact same physical guarantees — disjoint pushed year slices, two
+    // fact scans, PK joins
     val q64p = fmt("q_tpcds_q64_pub")
     assert(factScans(q64p, "store_sales") == 2,
       s"Q64_pub cross_sales pairing lost a year-sliced subtree:\n$q64p")

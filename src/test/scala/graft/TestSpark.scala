@@ -3,9 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole forked test JVM. It takes the
-  * engine's codegen-cache bound from [[graft.plans.SessionDefaults]] (a
-  * static conf, so it must be set by the JVM's first session) but not the
-  * join-strategy defaults, so the plans the tests assert are unchanged. */
+  * engine's codegen-cache bound and local FileSystem from
+  * [[graft.plans.SessionDefaults]] (both static for the JVM, so the first
+  * session must set them) but not the join-strategy defaults, so the plans
+  * the tests assert are unchanged. */
 object TestSpark {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -17,6 +18,8 @@ object TestSpark {
       .config("spark.sql.warehouse.dir", "/tmp/graft-test-warehouse")
       .config(graft.plans.SessionDefaults.codegenCache._1,
         graft.plans.SessionDefaults.codegenCache._2)
+      .config(graft.plans.SessionDefaults.localFs._1,
+        graft.plans.SessionDefaults.localFs._2)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
