@@ -20,6 +20,10 @@ import java.nio.file.{Files, Paths}
   *    we create it — Spark's writer needs to own the table subdirs anyway;
   *  - generate --format parquet is the Spark-native fast path the reference
   *    doesn't have (skips the raw text intermediate).
+  *  - generate --partitions N is at most N parts per table: a table with
+  *    fewer than [[graft.gen.GenUtil.rowsPerPartition]] rows per part writes
+  *    fewer (the 20-row income_band writes one file at any N), where the
+  *    reference's generators split their work N ways.
   * Short aliases match structopt's derived short flags: -b -s -p -i -o.
   */
 object Main {
@@ -127,10 +131,12 @@ object Main {
   }
 
   val usage: String =
-    """usage: graft.cli.Main <generate|convert> [options]
+    s"""usage: graft.cli.Main <generate|convert> [options]
       |  generate -b|--benchmark tpch|tpcds -s|--scale N [-p|--partitions N]
       |           -o|--output DIR [-f|--format raw|parquet] [-c|--codec snappy]
       |           [--sequential-parts true]
+      |           (-p: at most N parts per table; tables with fewer than
+      |           ${graft.gen.GenUtil.rowsPerPartition} rows per part write fewer)
       |  convert  -b|--benchmark tpch|tpcds -i|--input DIR -o|--output DIR
       |           [-c|--codec snappy] [--keep-ignore true]
       |  query    -q|--query NAME -i|--input SFDIR [-o|--output DIR]
@@ -165,11 +171,7 @@ object Main {
             bench.generate(spark, scale, partitions, out)
             if (seqParts) bench.tableNames.foreach(t =>
               graft.gen.GenUtil.sequentialParts(out, t, bench.tableExt))
-          case "parquet" => bench match {
-            case g: graft.gen.TpchGen.type  => g.generateParquet(spark, scale, partitions, out, codec)
-            case g: graft.gen.TpcdsGen.type => g.generateParquet(spark, scale, partitions, out, codec)
-            case _ => throw new IllegalArgumentException(s"no parquet path for $b")
-          }
+          case "parquet" => bench.generateParquet(spark, scale, partitions, out, codec)
           case other => throw new IllegalArgumentException(s"unknown generate format: $other")
         }
         // wall-clock print mirrors src/tpch.rs:85-90 / src/tpcds.rs:79-84

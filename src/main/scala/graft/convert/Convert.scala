@@ -29,6 +29,9 @@ import org.apache.hadoop.fs.Path
   * driver-side data). At 100 TB the work is embarrassingly parallel over
   * input splits; per-table jobs are independent and are submitted
   * concurrently (the reference converts file-sequentially, src/lib.rs:86).
+  * A table's task count follows its raw file count (one split per small
+  * file), so raw tables the generators wrote as one part
+  * ([[graft.gen.GenUtil.partitionsFor]]) convert in one task each.
   *
   * Local files: every file a write creates (part, `.crc`, `_SUCCESS`) and
   * every directory gets its permission set by Hadoop's local FileSystem,

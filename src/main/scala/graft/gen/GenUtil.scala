@@ -67,6 +67,25 @@ object GenUtil {
     (pmod(h(tag + 2), lit(900)) + 100).cast(StringType), lit("-"),
     (pmod(h(tag + 3), lit(9000)) + 1000).cast(StringType))
 
+  /** Rows of a table's id range per written part, at most. A part is one
+    * task, and a task pays a fixed cost whatever its size (its split is in
+    * [[TpcdsGen]]'s scale design). 50,000 keeps the sf0.1 store_sales
+    * cache at 6 files, so its scans still use every core of a 4-core host;
+    * a floor of one file per table (1M rows) measured the store_sales-only
+    * q28 ×1.19 slower there. A constant, like
+    * [[graft.plans.Fanout.poolSize]]: it sizes work units, and results do
+    * not depend on it. */
+  val rowsPerPartition = 50000L
+
+  /** Parts to write a table of `rows` range ids in when the caller asks for
+    * `requested`: one per [[rowsPerPartition]] rows, never more than
+    * `requested`, never fewer than one. Every generation writer sizes its
+    * tables here; `table`/`tableSlice` keep the exact count their caller
+    * passes. */
+  def partitionsFor(rows: Long, requested: Int): Int =
+    math.max(1L, math.min(requested.toLong,
+      if (rows <= 0) 0 else (rows - 1) / rowsPerPartition + 1)).toInt
+
   val vocab: Seq[String] = Seq("blithely", "bold", "carefully", "quickly",
     "slyly", "furiously", "ironic", "final", "express", "regular", "special",
     "pending", "even", "silent", "deposits", "requests", "accounts", "packages",

@@ -3,9 +3,8 @@ package graft.gen
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.schema.{Benchmark, TpcdsSchemas}
+import graft.schema.TpcdsSchemas
 import GenUtil._
-import graft.plans.Fanout
 
 /** TPC-DS data generation as native Spark jobs — replaces the reference's
   * dsdgen process fan-out (/root/reference/src/tpcds.rs:34-104:
@@ -42,12 +41,18 @@ import graft.plans.Fanout
   * shuffle, no driver data; 100 TB generation is bounded by write bandwidth.
   * The 24 table jobs are submitted concurrently ([[graft.plans.Fanout]]),
   * and Spark's FIFO scheduler fills the slots a finishing table leaves idle
-  * with the next one's tasks (at sf0.01 a table is 116–383 ms of mostly
-  * fixed per-job cost, which one job at a time left the cores idle for).
+  * with the next one's tasks. Each table writes one part per
+  * [[GenUtil.rowsPerPartition]] range ids, up to the caller's partition
+  * count ([[Generator]]): at small scales a task is mostly fixed cost —
+  * ~45% of executor-task samples in warm sf0.01 ingest passes (task
+  * deserialization 18%, re-generating the projection's source before the
+  * codegen-cache lookup 17%, task commit 6%, writer open 3%) — so the
+  * 20-row income_band writes one part, not one per core, and sf0.01 at
+  * `partitions = 4` writes its 24 tables in 28 parts.
   * Nullable columns carry ~5% deterministic nulls so downstream null-handling
   * paths (outer joins, null-safe predicates) are actually exercised.
   */
-object TpcdsGen extends Benchmark {
+object TpcdsGen extends Generator {
   val name = "tpcds"
   def tableNames: Seq[String] = TpcdsSchemas.tableNames
   def tableExt: String = TpcdsSchemas.tableExt
@@ -1449,26 +1454,7 @@ object TpcdsGen extends Benchmark {
         baseDf.select(cols.toIndexedSeq: _*)
     }
 
-  /** Raw-layout generation (reference parity: `{out}/{table}.dat/part-*.dat`
-    * pipe-delimited, src/tpcds.rs:86-101; no trailing '|' — TPC-DS schemas
-    * carry no `ignore` column, SURVEY §1.2). */
-  def generate(spark: SparkSession, scale: Double, partitions: Int, outputPath: String): Unit = {
-    val gen = generationSession(spark)
-    Fanout.map(tableNames) { tbl =>
-      writeRaw(table(gen, tbl, scale, partitions), outputPath, tbl, tableExt,
-        trailingPipe = false)
-    }
-  }
-
-  /** Spark-native fast path: straight to Parquet (100 TB-scale default). */
-  def generateParquet(spark: SparkSession, scale: Double, partitions: Int,
-                      outputPath: String, codec: String = "snappy"): Unit = {
-    val compression = graft.convert.Convert.validateCodec(codec)
-    val gen = generationSession(spark)
-    Fanout.map(tableNames) { tbl =>
-      table(gen, tbl, scale, partitions).write
-        .option("compression", compression)
-        .parquet(s"$outputPath/$tbl.parquet")
-    }
-  }
+  /** Raw rows carry no trailing '|': TPC-DS schemas have no `ignore`
+    * column (src/tpcds.rs:86-101, SURVEY §1.2). */
+  protected def rawTrailingPipe: Boolean = false
 }

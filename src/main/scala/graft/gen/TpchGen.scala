@@ -3,9 +3,8 @@ package graft.gen
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.schema.{Benchmark, TpchSchemas}
+import graft.schema.TpchSchemas
 import GenUtil._
-import graft.plans.Fanout
 
 /** TPC-H data generation as native Spark jobs — replaces the reference's
   * dbgen process fan-out (/root/reference/src/tpch.rs:35-132) with
@@ -35,11 +34,15 @@ import graft.plans.Fanout
   * embarrassingly parallel and bounded only by write bandwidth. The eight
   * table jobs are submitted concurrently ([[graft.plans.Fanout]]), and
   * Spark's FIFO scheduler fills the slots a finishing small table leaves
-  * idle with the next one's tasks — at small scales a table is a few tasks
-  * and mostly fixed per-job cost, which one job at a time left the cores
-  * idle for.
+  * idle with the next one's tasks. Each table writes one part per
+  * [[GenUtil.rowsPerPartition]] range ids, up to the caller's partition
+  * count ([[Generator]]): at small scales a task is mostly fixed cost —
+  * ~45% of executor-task samples in warm sf0.01 ingest passes (task
+  * deserialization 18%, re-generating the projection's source before the
+  * codegen-cache lookup 17%, task commit 6%, writer open 3%) — so the
+  * 5-row region and the 25-row nation write one part, not one per core.
   */
-object TpchGen extends Benchmark {
+object TpchGen extends Generator {
   val name = "tpch"
   /** Generated-content version for marker-gated caches
     * ([[graft.ops.TpchFull]] via [[GenCache]]): bump when generation
@@ -81,6 +84,19 @@ object TpchGen extends Benchmark {
     "part" -> math.max(1, (200000 * sf).toLong),
     "orders" -> math.max(1, (1500000 * sf).toLong))
 
+  /** Length of the id range `tbl` is generated from: its row count for
+    * every table but lineitem, which explodes its 1–7 lines from each id
+    * of the orders range (so a lineitem part holds ~4× the rows of its
+    * range). */
+  def rowCount(tbl: String, sf: Double): Long = {
+    val n = counts(sf)
+    tbl match {
+      case "partsupp" => n("part") * 4
+      case "lineitem" => n("orders")
+      case t => n.getOrElse(t, throw new IllegalArgumentException(s"unknown TPC-H table: $t"))
+    }
+  }
+
   private def key(c: Column): Column = c + 1
 
   /** Deterministic retail price as a function of partkey (TPC-H-spec shape),
@@ -117,20 +133,20 @@ object TpchGen extends Benchmark {
     * the raw-file-only `ignore` column). */
   def table(spark: SparkSession, tbl: String, sf: Double, partitions: Int): DataFrame = {
     val n = counts(sf)
-    def base(rows: Long) = spark.range(0, rows, 1, math.max(1, partitions))
+    val base = spark.range(0, rowCount(tbl, sf), 1, math.max(1, partitions))
     val S = n("supplier"); val C = n("customer"); val P = n("part")
     tbl match {
       case "region" =>
-        base(5).select(col("id").as("r_regionkey"),
+        base.select(col("id").as("r_regionkey"),
           element_at(array(regions.map(lit): _*), col("id").cast(IntegerType) + 1).as("r_name"),
           comment(3).as("r_comment"))
       case "nation" =>
-        base(25).select(col("id").as("n_nationkey"),
+        base.select(col("id").as("n_nationkey"),
           element_at(array(nations.map(x => lit(x._1)): _*), col("id").cast(IntegerType) + 1).as("n_name"),
           element_at(array(nations.map(x => lit(x._2.toLong)): _*), col("id").cast(IntegerType) + 1).as("n_regionkey"),
           comment(5).as("n_comment"))
       case "supplier" =>
-        base(S).select(key(col("id")).as("s_suppkey"),
+        base.select(key(col("id")).as("s_suppkey"),
           concat(lit("Supplier#"), lpad(key(col("id")).cast(StringType), 9, "0")).as("s_name"),
           words(7, 4, vocab).as("s_address"),
           uniLong(11, 0, 24).as("s_nationkey"),
@@ -138,7 +154,7 @@ object TpchGen extends Benchmark {
           money(17, -999.99, 9999.99).as("s_acctbal"),
           comment(19).as("s_comment"))
       case "part" =>
-        base(P).select(key(col("id")).as("p_partkey"),
+        base.select(key(col("id")).as("p_partkey"),
           concat_ws(" ", pick(23, colors), pick(29, colors), pick(31, colors)).as("p_name"),
           concat(lit("Manufacturer#"), (pmod(h(37), lit(5)) + 1).cast(StringType)).as("p_mfgr"),
           concat(lit("Brand#"), (pmod(h(37), lit(5)) + 1).cast(StringType),
@@ -158,14 +174,14 @@ object TpchGen extends Benchmark {
         // collide — fail loudly rather than silently break the PK.
         require(S >= 4,
           s"partsupp needs S >= 4 suppliers for the 4.2.3 assignment formula (got S=$S; use sf >= 0.0004)")
-        base(P * 4).select((expr("id div 4") + 1).as("ps_partkey"),
+        base.select((expr("id div 4") + 1).as("ps_partkey"),
           (pmod(expr(s"(id div 4 + 1) + pmod(id, 4) * (${S / 4} + (id div 4) div $S)"),
             lit(S)) + 1).as("ps_suppkey"),
           uniLong(73, 1, 9999).cast(IntegerType).as("ps_availqty"),
           money(79, 1.00, 1000.00).as("ps_supplycost"),
           comment(83).as("ps_comment"))
       case "customer" =>
-        base(C).select(key(col("id")).as("c_custkey"),
+        base.select(key(col("id")).as("c_custkey"),
           concat(lit("Customer#"), lpad(key(col("id")).cast(StringType), 9, "0")).as("c_name"),
           words(89, 4, vocab).as("c_address"),
           uniLong(97, 0, 24).as("c_nationkey"),
@@ -181,7 +197,7 @@ object TpchGen extends Benchmark {
         // plain-Catalyst fold produced a 14 KB codegen method, past
         // HotSpot's 8 KB JIT limit, and ran interpreted at 5.4x the cost.)
         val drv = TpchOrderDerived.column(col("id"), P)
-        base(n("orders")).select(col("id"), drv.as("drv"))
+        base.select(col("id"), drv.as("drv"))
           .select(key(col("id")).as("o_orderkey"),
           // dbgen never assigns orders to custkeys divisible by 3 (spec
           // 4.2.3): draw uniformly over the 2C/3 valid keys and map
@@ -205,7 +221,7 @@ object TpchGen extends Benchmark {
       case "lineitem" =>
         // 1–7 lines per order, exploded from the orders id range (narrow op —
         // no shuffle; line values hash on (orderkey, linenumber)).
-        val o = base(n("orders")).select(col("id"),
+        val o = base.select(col("id"),
           key(col("id")).as("l_orderkey"),
           date(137, "1992-01-01", 2406).as("o_orderdate"),
           explode(sequence(lit(1).cast(LongType), nLines)).as("ln"))
@@ -239,27 +255,6 @@ object TpchGen extends Benchmark {
     }
   }
 
-  /** Raw-layout generation (reference parity: `{out}/{table}.tbl/part-*.tbl`
-    * pipe-delimited with trailing '|', src/tpch.rs:96-129). */
-  def generate(spark: SparkSession, scale: Double, partitions: Int, outputPath: String): Unit = {
-    val gen = generationSession(spark)
-    Fanout.map(tableNames) { tbl =>
-      writeRaw(table(gen, tbl, scale, partitions), outputPath, tbl, tableExt,
-        trailingPipe = true)
-    }
-  }
-
-  /** Spark-native fast path: generate straight to Parquet, skipping the text
-    * intermediate entirely (the reference can't do this; we note it as the
-    * 100 TB-scale default). */
-  def generateParquet(spark: SparkSession, scale: Double, partitions: Int,
-                      outputPath: String, codec: String = "snappy"): Unit = {
-    val compression = graft.convert.Convert.validateCodec(codec)
-    val gen = generationSession(spark)
-    Fanout.map(tableNames) { tbl =>
-      table(gen, tbl, scale, partitions).write
-        .option("compression", compression)
-        .parquet(s"$outputPath/$tbl.parquet")
-    }
-  }
+  /** Raw rows end in '|' like dbgen's (src/tpch.rs:96-129). */
+  protected def rawTrailingPipe: Boolean = true
 }

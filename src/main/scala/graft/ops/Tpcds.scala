@@ -67,7 +67,8 @@ object Tpcds {
     * shared crash-safe cache protocol ([[graft.gen.GenCache]]: exclusive
     * file lock, tmp + atomic rename, marker-gated, stale-generation
     * sweeping). Generation is deterministic and partition-count invariant
-    * (GenSpec). */
+    * (GenSpec); each table gets at most 16 parts, one per
+    * [[graft.gen.GenUtil.rowsPerPartition]] rows. */
   def ensure(spark: SparkSession, sfDir: String): String = {
     val dir = graft.gen.GenCache.ensure(spark, liveRoot(spark), sfDir) { (s, sf, tmp) =>
       TpcdsGen.generateParquet(s, sf, 16, tmp)

@@ -24,7 +24,7 @@ trait Benchmark {
 object Benchmark {
   /** Benchmark name resolution incl. the reference's CLI aliases
     * (/root/reference/src/main.rs:113-119: `tpcds|tpc-ds`, `tpch|tpc-h`). */
-  def apply(name: String): Benchmark = name.toLowerCase match {
+  def apply(name: String): graft.gen.Generator = name.toLowerCase match {
     case "tpch" | "tpc-h"   => graft.gen.TpchGen
     case "tpcds" | "tpc-ds" => graft.gen.TpcdsGen
     case other => throw new IllegalArgumentException(s"invalid benchmark name: $other")

@@ -131,11 +131,13 @@ class ConvertSpec extends AnyFunSuite {
     // numbering (src/lib.rs:85-115); Spark names parts per task — the
     // opt-in rename closes SURVEY §1.4's naming deviation
     val dir = Files.createTempDirectory("graft-sq").toString
-    TpchGen.generate(spark, 0.001, 3, s"$dir/raw")
+    // three parts to flatten (the writers give sf0.001 lineitem one part)
+    graft.gen.GenUtil.writeRaw(TpchGen.table(spark, "lineitem", 0.001, 3), s"$dir/raw",
+      "lineitem", TpchGen.tableExt, trailingPipe = true)
     graft.gen.GenUtil.sequentialParts(s"$dir/raw", "lineitem", TpchGen.tableExt)
     val files = new java.io.File(s"$dir/raw/lineitem.tbl").listFiles
       .map(_.getName).filter(_.startsWith("part-"))
-    assert(files.nonEmpty && files.forall(_.matches("part-\\d+\\.tbl")),
+    assert(files.length == 3 && files.forall(_.matches("part-\\d+\\.tbl")),
       s"non-reference part names: ${files.mkString(", ")}")
     assert(files.map(_.stripPrefix("part-").stripSuffix(".tbl").toInt).sorted
       .toSeq == (0 until files.length), "numbering must be contiguous from 0")

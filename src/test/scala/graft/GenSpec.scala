@@ -231,6 +231,75 @@ class GenSpec extends AnyFunSuite {
     }
   }
 
+  /** Part files per table under `dir` (`<table>.<ext>` dirs). */
+  private def partsPerTable(dir: String, b: graft.gen.Generator, ext: String): Map[String, Int] =
+    b.tableNames.map { t =>
+      t -> new java.io.File(s"$dir/$t.$ext").listFiles().count(_.getName.startsWith("part-"))
+    }.toMap
+
+  /** sf0.01 written at `partitions` parts at most: TPC-DS straight to
+    * Parquet, TPC-H raw text. */
+  private def writeSized(partitions: Int): String = {
+    val dir = java.nio.file.Files.createTempDirectory(s"genspec_sized$partitions").toString
+    TpcdsGen.generateParquet(spark, 0.01, partitions, s"$dir/ds")
+    TpchGen.generate(spark, 0.01, partitions, s"$dir/h")
+    dir
+  }
+  private lazy val sized4 = writeSized(4)
+
+  test("generation writers give each table partitionsFor(rows, requested) parts") {
+    import graft.gen.GenUtil.{partitionsFor, rowsPerPartition}
+    assert(partitionsFor(0, 4) == 1 && partitionsFor(rowsPerPartition, 4) == 1)
+    assert(partitionsFor(rowsPerPartition + 1, 4) == 2 && partitionsFor(Long.MaxValue, 4) == 4)
+    assert(partitionsFor(20, 0) == 1)
+    val ds = partsPerTable(s"$sized4/ds", TpcdsGen, "parquet")
+    val h = partsPerTable(s"$sized4/h", TpchGen, TpchGen.tableExt)
+    for ((b, got) <- Seq[(graft.gen.Generator, Map[String, Int])](TpcdsGen -> ds, TpchGen -> h);
+         (t, n) <- got)
+      assert(n == partitionsFor(b.rowCount(t, 0.01), 4), s"${b.name} $t: $n parts")
+    assert(Seq(ds("income_band"), ds("reason"), h("region"), h("nation")).forall(_ == 1))
+    assert(ds("inventory") >= 2, s"inventory: ${ds("inventory")} parts")
+    assert((ds.values ++ h.values).forall(_ <= 4))
+    val one = writeSized(1)
+    assert(partsPerTable(s"$one/ds", TpcdsGen, "parquet").values.forall(_ == 1))
+    assert(partsPerTable(s"$one/h", TpchGen, TpchGen.tableExt).values.forall(_ == 1))
+  }
+
+  test("a sized write holds the same rows as the one-partition table") {
+    def same(written: org.apache.spark.sql.DataFrame, expected: org.apache.spark.sql.DataFrame) =
+      written.exceptAll(expected).count() == 0 && expected.exceptAll(written).count() == 0
+    Seq("item", "inventory").foreach { t =>
+      val written = spark.read.parquet(s"$sized4/ds/$t.parquet")
+      assert(same(written, TpcdsGen.table(spark, t, 0.01, 1)), s"tpcds $t")
+    }
+    Seq("nation", "lineitem").foreach { t =>
+      val written = graft.convert.Convert.readRaw(spark, s"$sized4/h/$t.${TpchGen.tableExt}",
+        TpchGen.schema(t))
+      assert(same(written, TpchGen.table(spark, t, 0.01, 1)), s"tpch $t")
+    }
+  }
+
+  test("TpchGen.rowCount is each table's id-range length") {
+    import org.apache.spark.sql.functions.countDistinct
+    TpchGen.tableNames.filterNot(_ == "lineitem").foreach { t =>
+      assert(TpchGen.table(spark, t, 0.001, 1).count() == TpchGen.rowCount(t, 0.001), t)
+    }
+    // lineitem explodes 1–7 lines from each id of the orders range
+    assert(TpchGen.table(spark, "lineitem", 0.001, 1).agg(countDistinct("l_orderkey"))
+      .head.getLong(0) == TpchGen.rowCount("orders", 0.001))
+    assert(TpchGen.rowCount("lineitem", 0.001) == TpchGen.rowCount("orders", 0.001))
+  }
+
+  test("table and tableSlice keep the exact partition count they are given") {
+    // GenSpec's invariance laws and RobustnessSpec's fault probes (8
+    // partitions of sf0.001 store_sales) need the count they ask for,
+    // even where the writers would write fewer parts
+    assert(TpcdsGen.table(spark, "store_sales", 0.001, 8).rdd.getNumPartitions == 8)
+    assert(TpcdsGen.tableSlice(spark, "store_sales", 0.001, 8, 0L, 100L).rdd.getNumPartitions == 8)
+    assert(TpchGen.table(spark, "lineitem", 0.001, 8).rdd.getNumPartitions == 8)
+    assert(TpchGen.table(spark, "region", 0.001, 4).rdd.getNumPartitions == 4)
+  }
+
   test("tableSlice ≡ the full table's id range; concatenated slices ≡ full") {
     // the disk-budgeted written-generation probe (r15 verdict #4)
     // extrapolates slice-write wall-clock ×denominator — sound only if a
