@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * `contention_index` is the median of all sample/ref ratios.
   *
   * CALIBRATION (r13, committed): refs come from a FRESH JVM
-  * (ControlCal); mid-run samples carry the suite JVM's own GC/JIT
+  * (`Diag controlcal`); mid-run samples carry the suite JVM's own GC/JIT
   * pressure, so an IDLE-window full 239-query run scores ≈ 1.35, not
   * 1.0 (the r13 record; its first pre-suite sample matched the fresh-JVM
   * ref exactly, mid-run samples rose, the final sort sample came in
@@ -60,26 +60,17 @@ object Bench {
   }
 
   /** Committed idle-window reference medians (seconds) for the control
-    * tasks: measured r13 on the build host via `graft.tools.ControlCal 15
-    * 32` (median of 15 back-to-back samples, idle window). A live run's
-    * sample/ref ratios ~1.0 mean the record is as clean as the reference
-    * window; re-measure and update alongside any control-task change. */
+    * tasks: measured r13 on the build host (median of 15 back-to-back
+    * samples in a fresh `local[32]` JVM, idle window) by the calibration
+    * main of commit 6115878, `graft.tools.ControlCal 15 32`; recalibrate
+    * with `graft.tools.Diag controlcal`. A live run's sample/ref ratios
+    * ~1.0 mean the record is as clean as the reference window; re-measure
+    * and update alongside any control-task change. */
   val controlRef: Map[String, Double] = Map(
     "ctl_cpu" -> 0.122, "ctl_shuffle" -> 0.440, "ctl_sort" -> 0.641)
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // reader batch-size parity knob (the reference pins its parquet batch
-    // size; Spark's columnar-reader equivalent is configurable here)
-    val batch = sys.env.getOrElse("SPARK_GRAFT_PARQUET_BATCH", "4096")
-    val spark = graft.plans.SessionDefaults.tuned(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.parquet.columnarReaderBatchSize", batch)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.plans.SessionDefaults.session()
     // untimed warmup: ONE full pass over every query. Generic warmups
     // (scan each table, prime the regexp engine) still left 1-4 s of
     // per-query first-run cost — each query pays its own whole-stage-codegen

@@ -1,6 +1,5 @@
 package graft.cli
 
-import org.apache.spark.sql.SparkSession
 import graft.schema.Benchmark
 import graft.convert.Convert
 import java.nio.file.{Files, Paths}
@@ -153,14 +152,7 @@ object Main {
 
   def main(args: Array[String]): Unit = {
     val cmd = parse(args.toIndexedSeq)
-    val spark = graft.plans.SessionDefaults.tuned(SparkSession.builder())
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("graft")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.plans.SessionDefaults.session()
     val t0 = System.nanoTime()
     cmd match {
       case Generate(b, scale, partitions, out, format, codec, seqParts) =>

@@ -46,17 +46,6 @@ object GenCache {
       val dir = s"$root/$base"
       val dirPath = Paths.get(dir)
       val marker = dirPath.resolve("_GRAFT_COMPLETE")
-      // A disk-budget probe (tools.Sf100Probe) may leave a deliberately
-      // PARTIAL cache — a keep-set of tables with `_GRAFT_PARTIAL` instead
-      // of the completeness marker. Only a session that explicitly opts in
-      // (spark.graft.acceptPartial=true, set by the probe itself) may read
-      // it; every other session treats the dir as a markerless partial and
-      // regenerates — which is the safe behavior the r14 probe's
-      // unconditional _GRAFT_COMPLETE marker broke (FileNotFoundException
-      // instead of regeneration for later sessions).
-      if (spark.conf.get("spark.graft.acceptPartial", "false") == "true" &&
-          Files.exists(dirPath.resolve("_GRAFT_PARTIAL")))
-        return dir
       if (!Files.exists(marker)) {
         Files.createDirectories(Paths.get(root))
         val lockPath = Paths.get(root, s"$base.lock")

@@ -80,7 +80,7 @@ object GenUtil {
   /** Parts to write a table of `rows` range ids in when the caller asks for
     * `requested`: one per [[rowsPerPartition]] rows, never more than
     * `requested`, never fewer than one. Every generation writer sizes its
-    * tables here; `table`/`tableSlice` keep the exact count their caller
+    * tables here; `table` keeps the exact count its caller
     * passes. */
   def partitionsFor(rows: Long, requested: Int): Int =
     math.max(1L, math.min(requested.toLong,

@@ -182,7 +182,9 @@ object TpcdsGen extends Generator {
     * committed density probes for non-units predicates carry over.
     *
     * BUMP LOG (r12 advice: classify every bump as semantic vs refactor,
-    * and record the check that matched the class):
+    * and record the check that matched the class). GenDiff (bit identity)
+    * and GenScopeDiff (column-scoped diff) are the mains of commit
+    * 6115878; both checks are now `graft.tools.Diag gendiff`:
     *   v18 — SEMANTIC (seasonal popularity redraws item colors + basket
     *         tours); bit-diff expected, change SCOPE column-diffed old-vs-
     *         new per table (only item_sk/i_color and basket item draws
@@ -1386,7 +1388,18 @@ object TpcdsGen extends Generator {
     val rows = rowCount(tbl, sf)
     checkBasketRange(tbl, sf)
     val baseDf = spark.range(0, rows, 1, math.max(1, partitions)).toDF()
-    fromBase(tbl, sf, baseDf, st)
+    tbl match {
+      case "date_dim" => dateDim(baseDf)
+      case "time_dim" => timeDim(baseDf)
+      case t if returnsLinks.contains(t) => returnsDf(t, sf, baseDf)
+      case t if basketLines.contains(t) => salesDf(t, sf, baseDf)
+      case _ =>
+        val line = col("id")
+        val cols = st.fields.zipWithIndex.map { case (f, i) =>
+          colFor(tbl, sf, f, tagOf(tbl, i), isFirst = i == 0, line, line).as(f.name)
+        }
+        baseDf.select(cols.toIndexedSeq: _*)
+    }
   }
 
   /** Ticket/order numbers are Int32 per the reference schema; past
@@ -1421,38 +1434,6 @@ object TpcdsGen extends Generator {
           f"${Int.MaxValue.toLong * avgLines / (sf1Counts(basketSrc)._1.toDouble)}%.0f.")
     }
   }
-
-  /** Rows `[loRow, hiRow)` of `table(tbl, sf)` — every builder is a pure
-    * per-line function of the range's `id`, so a slice is BIT-IDENTICAL to
-    * the same id-range of the full table (GenSpec pins slice ≡ filter and
-    * concatenated slices ≡ full). Lets a disk-budgeted probe measure
-    * written generation of a table bigger than free space
-    * (tools.WrittenGenProbe, r15 verdict #4). */
-  def tableSlice(spark: SparkSession, tbl: String, sf: Double, partitions: Int,
-                 loRow: Long, hiRow: Long): DataFrame = {
-    val rows = rowCount(tbl, sf)
-    require(0 <= loRow && loRow <= hiRow && hiRow <= rows,
-      s"slice [$loRow,$hiRow) out of bounds for $tbl at sf=$sf ($rows rows)")
-    checkBasketRange(tbl, sf)
-    fromBase(tbl, sf,
-      spark.range(loRow, hiRow, 1, math.max(1, partitions)).toDF(), schema(tbl))
-  }
-
-  private def fromBase(tbl: String, sf: Double,
-                       baseDf: DataFrame,
-                       st: org.apache.spark.sql.types.StructType): DataFrame =
-    tbl match {
-      case "date_dim" => dateDim(baseDf)
-      case "time_dim" => timeDim(baseDf)
-      case t if returnsLinks.contains(t) => returnsDf(t, sf, baseDf)
-      case t if basketLines.contains(t) => salesDf(t, sf, baseDf)
-      case _ =>
-        val line = col("id")
-        val cols = st.fields.zipWithIndex.map { case (f, i) =>
-          colFor(tbl, sf, f, tagOf(tbl, i), isFirst = i == 0, line, line).as(f.name)
-        }
-        baseDf.select(cols.toIndexedSeq: _*)
-    }
 
   /** Raw rows carry no trailing '|': TPC-DS schemas have no `ignore`
     * column (src/tpcds.rs:86-101, SURVEY §1.2). */

@@ -72,7 +72,8 @@ object Similarity {
     * r12 flagged this query as a ~4-6× regression (r11 0.53 s → 2.11 s
     * builder / 3.31 s driver at sf0.1). The committed r13 A/B closes it:
     * same code, same fixtures — in-suite (graft.Bench, 239 queries, one
-    * JVM) 0.63 s median [0.57, 0.94]; isolated (TimeQuery, 7 reps) warm
+    * JVM) 0.63 s median [0.57, 0.94]; isolated (TimeQuery of commit
+    * 6115878, now `Diag stats`; 7 reps) warm
     * median 0.84 s after a 6.7 s first-run codegen cold. Neither context
     * reproduces the r12 number, so it was transient host state in BOTH r12
     * measurement windows — not suite-position GC, not a plan change —
@@ -368,7 +369,7 @@ object Similarity {
   /** `numCells <= 0` derives the cell count from the corpus via
     * [[ivfCells]] (one count job, index build only) — and lifts `probes`
     * to at least cells/10, the knob every measured recall figure used
-    * (AnnBench probes = max(4, C/10); 4 probes of 256 derived cells
+    * (AnnBench of commit 6115878: probes = max(4, C/10); 4 probes of 256 derived cells
     * would silently miss any neighbor outside an anchor's top-4 cells). */
   def ivfNeighbors(emb: DataFrame, anchorPred: Column, k: Int = 10,
                    numCells: Int = 16, probes: Int = 4,

@@ -129,7 +129,36 @@ object SessionDefaults {
     * explicit -D override) is left to that value — defaults never shadow a
     * deliberate setting. */
   def tuned(b: SparkSession.Builder): SparkSession.Builder =
-    defaults.foldLeft(b) { case (bb, (k, v)) =>
-      if (sys.props.contains(k)) bb else bb.config(k, v)
-    }
+    unlessSet(defaults).foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+
+  private def unlessSet(kvs: Seq[(String, String)]): Seq[(String, String)] =
+    kvs.filterNot { case (k, _) => sys.props.contains(k) }
+
+  /** Task slots of a [[session]]: `SPARK_GRAFT_CPUS`, else every core. */
+  val cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
+
+  /** Every conf [[session]] sets, in order: [[defaults]], one shuffle
+    * partition per task slot, UTC, no UI, then the caller's `extra`. As in
+    * [[tuned]], a key set as a system property is left out, so the
+    * property wins. */
+  def settings(extra: Seq[(String, String)]): Seq[(String, String)] =
+    unlessSet(defaults ++ Seq(
+      "spark.sql.shuffle.partitions" -> cpus,
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.ui.enabled" -> "false") ++ extra)
+
+  /** The one session factory of graft's mains (Bench, Verify, the CLI and
+    * every `graft.tools.Diag` subcommand), so each times and checks the
+    * engine the others do: master `SPARK_MASTER` (e.g.
+    * `local-cluster[4,8,4096]`), else `local[`[[cpus]]`]`, the confs of
+    * [[settings]], log level WARN. */
+  def session(extra: (String, String)*): SparkSession = {
+    val b = SparkSession.builder().appName("graft")
+      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
+    val spark = settings(extra).foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

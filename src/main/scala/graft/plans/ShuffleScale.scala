@@ -42,7 +42,8 @@ import org.apache.spark.sql.SparkSession
   * Q72's sf100 decade clean.
   *
   * Escape hatch: a session that must PIN its shuffle count — an A/B
-  * (SpillBench heap ladders, the probe's SPARK_GRAFT_SHUFFLE override) or
+  * (the `Diag stats` heap ladder; at commit 6115878 also SpillBench and
+  * Sf100Probe's SPARK_GRAFT_SHUFFLE override) or
   * a user-chosen count on the CLI query/export path — sets
   * `spark.graft.fixedShuffle=true` and tuneFor leaves the session
   * untouched (documented in the CLI usage text, `cli/Main.scala`).

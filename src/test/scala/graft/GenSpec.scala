@@ -290,35 +290,13 @@ class GenSpec extends AnyFunSuite {
     assert(TpchGen.rowCount("lineitem", 0.001) == TpchGen.rowCount("orders", 0.001))
   }
 
-  test("table and tableSlice keep the exact partition count they are given") {
+  test("table keeps the exact partition count it is given") {
     // GenSpec's invariance laws and RobustnessSpec's fault probes (8
     // partitions of sf0.001 store_sales) need the count they ask for,
     // even where the writers would write fewer parts
     assert(TpcdsGen.table(spark, "store_sales", 0.001, 8).rdd.getNumPartitions == 8)
-    assert(TpcdsGen.tableSlice(spark, "store_sales", 0.001, 8, 0L, 100L).rdd.getNumPartitions == 8)
     assert(TpchGen.table(spark, "lineitem", 0.001, 8).rdd.getNumPartitions == 8)
     assert(TpchGen.table(spark, "region", 0.001, 4).rdd.getNumPartitions == 4)
-  }
-
-  test("tableSlice ≡ the full table's id range; concatenated slices ≡ full") {
-    // the disk-budgeted written-generation probe (r15 verdict #4)
-    // extrapolates slice-write wall-clock ×denominator — sound only if a
-    // slice IS the table restricted to that row range, bit for bit
-    Seq("store_sales", "store_returns", "date_dim", "item").foreach { t =>
-      val rows = TpcdsGen.rowCount(t, 0.001)
-      val full = TpcdsGen.table(spark, t, 0.001, 4)
-      val mid = rows / 3
-      val a = TpcdsGen.tableSlice(spark, t, 0.001, 4, 0L, mid)
-      val b = TpcdsGen.tableSlice(spark, t, 0.001, 4, mid, rows)
-      assert(a.count() + b.count() === rows, t)
-      val cat = a.unionByName(b)
-      assert(cat.exceptAll(full).count() == 0 && full.exceptAll(cat).count() == 0,
-        s"$t: slices do not reassemble the full table")
-    }
-    // out-of-bounds slices fail loudly
-    intercept[IllegalArgumentException] {
-      TpcdsGen.tableSlice(spark, "item", 0.001, 4, 5L, 4L)
-    }
   }
 
   test("fixed-cardinality TPC-DS dims ignore scale factor") {
@@ -432,6 +410,26 @@ class GenSpec extends AnyFunSuite {
       assert(Files.exists(Paths.get(dir, "_GRAFT_COMPLETE")), "marker missing")
       assert(Files.exists(Paths.get(dir, "t.parquet")), "data missing")
     } finally spark.conf.unset("spark.graft.cacheRoot")
+  }
+
+  test("a cache dir marked _GRAFT_PARTIAL and not _GRAFT_COMPLETE is regenerated once") {
+    import java.nio.file.{Files, Paths}
+    val root = Files.createTempDirectory("graft_partial_test").resolve("gen1").toString
+    val dir = Paths.get(root, "sf0.001")
+    Files.createDirectories(dir.resolve("kept.parquet"))
+    Files.createFile(dir.resolve("_GRAFT_PARTIAL"))
+    var runs = 0
+    def ensure(): String = graft.gen.GenCache.ensure(spark, root, "/root/testdata/sf0.001") {
+      (s, _, tmp) =>
+        runs += 1
+        s.range(10).write.parquet(s"$tmp/t.parquet")
+    }
+    assert(ensure() == dir.toString)
+    assert(ensure() == dir.toString)
+    assert(runs == 1, s"generated $runs times")
+    assert(Files.exists(dir.resolve("_GRAFT_COMPLETE")) && Files.exists(dir.resolve("t.parquet")))
+    assert(!Files.exists(dir.resolve("_GRAFT_PARTIAL")) && !Files.exists(dir.resolve("kept.parquet")),
+      "the partial dir's contents survived regeneration")
   }
 
   test("stale-generation sweep skips a sibling whose scale lock is held") {
@@ -727,7 +725,7 @@ class GenSpec extends AnyFunSuite {
     // GenCache.ensure on one shared POSIX root. The java.nio file-lock +
     // tmp + atomic-rename + marker protocol must let exactly one generate
     // while the other blocks then reuses, and neither may observe a
-    // partial cache. Each probe (graft.tools.GenOnce) appends to
+    // partial cache. Each probe (graft.probes.GenOnce) appends to
     // <root>/gen.log inside its generate closure and validates marker +
     // exact row counts before exiting 0.
     import java.nio.file.{Files, Paths}
@@ -747,7 +745,7 @@ class GenSpec extends AnyFunSuite {
       (List(javaBin) ++ jvmArgs ++ List("-Xmx2g",
         "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
         "-cp", System.getProperty("java.class.path"),
-        "graft.tools.GenOnce", root, "/root/testdata/sf0.001", id)).asJava)
+        "graft.probes.GenOnce", root, "/root/testdata/sf0.001", id)).asJava)
       .redirectErrorStream(true)
       .redirectOutput(new java.io.File(s"$outDir/probe-$id.out"))
       .start()

@@ -78,7 +78,7 @@ class RobustnessSpec extends AnyFunSuite {
   test("task retries are deterministic: injected fail-once tasks leave query + generation output bit-identical") {
     // r13 verdict #2: hash-based generation/sampling and taskRetries=0
     // runs ASSERTED retry-safety by construction; this demonstrates it.
-    // graft.tools.RetryProbe needs its own JVM (master local[16,2] sets
+    // graft.probes.RetryProbe needs its own JVM (master local[16,2] sets
     // spark.task.maxFailures=2, which the shared TestSpark session can't)
     // — same spawn pattern as GenSpec's two-driver cache-fleet test. The
     // probe kills partition 0's FIRST attempt mid-stream in every shuffle
@@ -98,7 +98,7 @@ class RobustnessSpec extends AnyFunSuite {
       (List(javaBin) ++ jvmArgs ++ List("-Xmx3g",
         "-Dspark.ui.enabled=false",
         "-cp", System.getProperty("java.class.path"),
-        "graft.tools.RetryProbe")).asJava)
+        "graft.probes.RetryProbe")).asJava)
       .redirectErrorStream(true)
       .redirectOutput(outFile)
       .start()
@@ -133,7 +133,7 @@ class RobustnessSpec extends AnyFunSuite {
       (List(javaBin) ++ jvmArgs ++ List("-Xmx3g",
         "-Dspark.ui.enabled=false",
         "-cp", System.getProperty("java.class.path"),
-        "graft.tools.ExecutorLossProbe")).asJava)
+        "graft.probes.ExecutorLossProbe")).asJava)
       .redirectErrorStream(true)
       .redirectOutput(outFile)
     // local-cluster workers exec fresh executor JVMs via the Spark dist
@@ -172,7 +172,7 @@ class RobustnessSpec extends AnyFunSuite {
       (List(javaBin) ++ jvmArgs ++ List("-Xmx3g",
         "-Dspark.ui.enabled=false",
         "-cp", System.getProperty("java.class.path"),
-        "graft.tools.SpeculationProbe")).asJava)
+        "graft.probes.SpeculationProbe")).asJava)
       .redirectErrorStream(true)
       .redirectOutput(outFile)
     pb.environment().put("SPARK_HOME", "/opt/spark")

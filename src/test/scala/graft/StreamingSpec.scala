@@ -569,7 +569,7 @@ class StreamingSpec extends AnyFunSuite {
       (List(javaBin) ++ jvmArgs ++ List("-Xmx3g",
         "-Dspark.ui.enabled=false",
         "-cp", System.getProperty("java.class.path"),
-        "graft.tools.StreamCrashProbe")).asJava)
+        "graft.probes.StreamCrashProbe")).asJava)
       .redirectErrorStream(true)
       .redirectOutput(outFile)
       .start()

@@ -1,4 +1,4 @@
-package graft.tools
+package graft.probes
 
 import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD

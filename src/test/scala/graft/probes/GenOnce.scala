@@ -1,4 +1,4 @@
-package graft.tools
+package graft.probes
 
 import org.apache.spark.sql.SparkSession
 
@@ -16,7 +16,7 @@ import org.apache.spark.sql.SparkSession
   * table reads with the exact declared row count. Exit 0 on success; any
   * require failure exits nonzero (the spec asserts on exit codes too).
   *
-  * Used by GenCacheSpec's "two concurrent drivers" case; also runnable by
+  * Used by GenSpec's "two concurrent driver JVMs" case; also runnable by
   * hand against an NFS mount to rehearse a real fleet rollout. */
 object GenOnce {
   def main(args: Array[String]): Unit = {

@@ -1,4 +1,4 @@
-package graft.tools
+package graft.probes
 
 import java.util.concurrent.atomic.AtomicInteger
 

@@ -1,4 +1,4 @@
-package graft.tools
+package graft.probes
 
 import java.util.concurrent.atomic.AtomicLong
 
@@ -39,7 +39,7 @@ import graft.streaming.EventStreams
   *
   * Exit 0 = crash attested + exactly-once through the severed checkpoint.
   * Spawned by StreamingSpec; also runnable by hand:
-  *   runMain graft.tools.StreamCrashProbe [eventsParquet]
+  *   Test/runMain graft.probes.StreamCrashProbe [eventsParquet]
   */
 object StreamCrashProbe {
   /** Cross-batch input-row counter for the crash-phase child. local[8]
@@ -155,7 +155,7 @@ object StreamCrashProbe {
       (List(javaBin) ++ jvmArgs ++ List("-Xmx3g",
         "-Dspark.ui.enabled=false",
         "-cp", System.getProperty("java.class.path"),
-        "graft.tools.StreamCrashProbe",
+        "graft.probes.StreamCrashProbe",
         "crash", src, out, cp, haltAfter.toString)).asJava)
       .redirectErrorStream(true)
       .redirectOutput(childOut.toFile)

@@ -5,8 +5,8 @@
 #
 #   trap 1 (single-JVM shuffle-scratch ENOSPC): every query dumps in its
 #     own child JVM with a pinned, orchestrator-swept spark.local.dir
-#     (Sf100Dump --per-jvm);
-#   trap 2 (oracle_sql.json clobber on top-up): Sf100Dump rebuilds the
+#     (Diag dump --per-jvm);
+#   trap 2 (oracle_sql.json clobber on top-up): the dump rebuilds the
 #     slice from ALL dump dirs present, so phases merge;
 #   trap 3 (orphan blockmgr scratch): each child's scratch lives under the
 #     dump dir and is deleted the moment that child exits — nothing is
@@ -39,15 +39,15 @@ cd "$REPO"
 # declared name lists come from the entry map itself (never hand-kept):
 # TPC-DS = q_tpcds_* minus the sf1-pinned *_pub twins + returns; TpchFull =
 # the q_tpch_* whose oracle pins the tpchfull cache.
-NAMES_TPCDS=$(sbt -batch -error "runMain graft.tools.ListNames tpcds-generated" | tail -1)
-NAMES_TPCH=$(sbt -batch -error "runMain graft.tools.ListNames tpchfull" | tail -1)
+NAMES_TPCDS=$(sbt -batch -error "runMain graft.tools.Diag names tpcds-generated" | tail -1)
+NAMES_TPCH=$(sbt -batch -error "runMain graft.tools.Diag names tpchfull" | tail -1)
 [ -n "$NAMES_TPCDS" ] && [ -n "$NAMES_TPCH" ] || {
   echo "name listing failed" >&2; exit 1; }
 
 echo "== phase 1: TPC-DS ($(echo "$NAMES_TPCDS" | wc -w | tr -d ' ') queries) at $SF =="
 # shellcheck disable=SC2086
 SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-48g}" sbt -batch \
-  "runMain graft.tools.Sf100Dump /tmp $DUMP --per-jvm --sf=$SF $NAMES_TPCDS"
+  "runMain graft.tools.Diag dump $DUMP --per-jvm --sf=$SF $NAMES_TPCDS"
 RC1=0
 python3 tools/sf100_check.py oracle "$DUMP" "/tmp/graft_tpcds/gen20/$SF" \
   --timeout "$TIMEOUT" --mem "$MEM" || RC1=$?
@@ -58,7 +58,7 @@ echo "   (removing the TPC-DS $SF cache first — the two caches do not fit toge
 rm -rf "/tmp/graft_tpcds/gen20/$SF"
 # shellcheck disable=SC2086
 SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-48g}" sbt -batch \
-  "runMain graft.tools.Sf100Dump /tmp ${DUMP}_tpch --per-jvm --sf=$SF $NAMES_TPCH"
+  "runMain graft.tools.Diag dump ${DUMP}_tpch --per-jvm --sf=$SF $NAMES_TPCH"
 RC2=0
 python3 tools/sf100_check.py oracle "${DUMP}_tpch" "/tmp/graft_tpcds/gen20/$SF" \
   --timeout "$TIMEOUT" --mem "$MEM" || RC2=$?
