@@ -47,6 +47,7 @@ trait Generator extends graft.schema.Benchmark {
     }
   }
 
-  private def sized(spark: SparkSession, tbl: String, sf: Double, partitions: Int): DataFrame =
+  /** `tbl` over the parts the writers write for a ceiling of `partitions`. */
+  private[graft] def sized(spark: SparkSession, tbl: String, sf: Double, partitions: Int): DataFrame =
     table(spark, tbl, sf, partitionsFor(rowCount(tbl, sf), partitions))
 }

@@ -24,7 +24,10 @@ object Dedup {
     * (grouping by raw text would shuffle every byte of every document).
     * md5 is used (not xxhash64) because DuckDB has the identical function, so
     * the digest itself is oracle-matched; 128 bits makes collisions
-    * negligible (~1e-18 at 10^10 docs). */
+    * negligible (~1e-18 at 10^10 docs).
+    *
+    * Kept as a hand form: the text gives the same result on Spark, but the
+    * LLM-pipeline forms have not been through the paired timing yet. */
   def q_dedup_exact(s: SparkSession, d: String): DataFrame =
     Tables(s, d, "documents")
       .groupBy(md5(col("text").cast("binary")).as("text_md5"))
@@ -35,7 +38,10 @@ object Dedup {
     * lowercase, punctuation→space, whitespace collapse) — catches the
     * formatting-only near-dups exact byte dedup misses while staying one
     * hash aggregate keyed on a 128-bit digest (the same 100 TB shape as
-    * [Q-dedup-exact]: the shuffle moves 32-byte keys, never documents). */
+    * [Q-dedup-exact]: the shuffle moves 32-byte keys, never documents).
+    *
+    * Kept as a hand form: the text passes DuckDB's `'g'` flag to
+    * `regexp_replace`, which Spark reads as a position and rejects. */
   def q_dedup_norm(s: SparkSession, d: String): DataFrame =
     Tables(s, d, "documents")
       .groupBy(md5(TextOps.normExpr).as("norm_md5"))
@@ -293,7 +299,10 @@ object Dedup {
     * fixture's 500 at sf0.01 — true boilerplate) are excluded from both the
     * candidate join and the per-doc sizes. This is the shape that holds at
     * corpus scale: candidate fan-out per shingle is bounded by cap², and the
-    * cap itself is ONE keyed count aggregate. DuckDB-oracle-matched. */
+    * cap itself is ONE keyed count aggregate. DuckDB-oracle-matched.
+    *
+    * Kept as a hand form: the text calls DuckDB's `list_distinct`, which
+    * Spark does not have. */
   def q_dedup_ngram_capped(s: SparkSession, d: String): DataFrame =
     ngramPairs(Tables(s, d, "documents"), threshold = 0.2, maxDocFreq = Some(100L))
       .orderBy(col("jacc").desc, col("a_id"), col("b_id"))
@@ -366,7 +375,10 @@ object Dedup {
     * connected components, the cluster id is the min doc_id and is also the
     * kept survivor — the step that turns pairwise dedup signals into "keep
     * this row, drop those". Singleton docs form their own cluster.
-    * DuckDB-oracle-matched (recursive-CTE transitive closure). */
+    * DuckDB-oracle-matched (recursive-CTE transitive closure).
+    *
+    * Kept as a hand form: the text is a recursive CTE (`WITH RECURSIVE
+    * reach`), which the Spark text path does not resolve. */
   def q_dedup_cluster(s: SparkSession, d: String): DataFrame = {
     val docs = Tables(s, d, "documents")
     val labels = connectedComponents(ngramPairs(docs, 0.5))
@@ -390,7 +402,10 @@ object Dedup {
     * cap bounds fan-out at cap² via one keyed count aggregate; AQE skew-join
     * only smooths moderate cases). This uncapped form is the exact-recall
     * twin for oracle scale factors — DedupSpec asserts the two agree
-    * wherever no shingle exceeds the cap. DuckDB-oracle-matched. */
+    * wherever no shingle exceeds the cap. DuckDB-oracle-matched.
+    *
+    * Kept as a hand form: the text calls DuckDB's `list_distinct`, which
+    * Spark does not have. */
   def q_dedup_ngram(s: SparkSession, d: String): DataFrame = {
     // Shingles are DISTINCT per doc (TextOps.shingleExpr), so the number of
     // equi-join matches for a pair IS |A ∩ B| — counting matches in the

@@ -76,7 +76,9 @@ object Multimodal {
 
   /** [Q-mm-meta] binary-column metadata path — oracle-matched (byte length
     * is engine-independent; the fake-decode features are not, so they stay
-    * out of the declared query). */
+    * out of the declared query).
+    *
+    * Kept as a hand form: the text's `BLOB` type is DuckDB's. */
   def q_mm_meta(s: SparkSession, d: String): DataFrame =
     asBinaryTable(s, d).select(
       col("doc_id"),
@@ -114,7 +116,10 @@ object Multimodal {
     * character-length substrings, which agree iff the fixture text is
     * ASCII — true of the generated documents corpus and asserted by the
     * oracle match itself; a multi-byte corpus would need an octet-based
-    * oracle instead. */
+    * oracle instead.
+    *
+    * Kept as a hand form: the text gives the same result on Spark, but the
+    * LLM-pipeline forms have not been through the paired timing yet. */
   def q_mm_frames(s: SparkSession, d: String): DataFrame =
     asBinaryTable(s, d)
       .withColumn("fr", frames("payload"))

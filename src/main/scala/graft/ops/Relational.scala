@@ -6,24 +6,26 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables
 
-/** SURVEY.md §2.3–§2.8 declared relational query inventory.
+/** The fixture queries of SURVEY.md §2.3–§2.8 that keep a hand-written
+  * DataFrame form.
   *
-  * Scale-first design rules applied throughout:
-  *  - Money arithmetic runs in DecimalType on BOTH the Spark side and the
-  *    DuckDB oracle side. Decimal sums are exact and order-independent, so
-  *    results are bit-identical at any parallelism — a raw double sum would
-  *    flap in the last ulp across 1000 executors (and across engines).
-  *  - Dimension joins (region/nation) carry explicit broadcast() hints;
-  *    fact⋈fact joins are left to sort-merge + AQE.
-  *  - Every LIMIT sits on a total order (unique tiebreak key) so the selected
-  *    rows are deterministic across engines and partitionings.
+  * Every other fixture query is one SQL text in `SparkEntry.fixtureSql`,
+  * which DuckDB runs as the oracle and Spark runs through [[TpcSql]]. A
+  * form stays here only for the reason its doc gives after `Kept as a hand
+  * form:`, or because it has no text at all (the rows-only sketches).
+  *
+  * Rules both kinds follow:
+  *  - Money arithmetic runs in DecimalType on both engines. Decimal sums
+  *    are exact and order-independent, so results are bit-identical at any
+  *    parallelism — a raw double sum would flap in the last ulp across
+  *    1000 executors (and across engines).
+  *  - Every LIMIT sits on a total order (unique tiebreak key) so the
+  *    selected rows are deterministic across engines and partitionings.
   *  - No UDFs anywhere: everything is Catalyst built-ins and stays inside
   *    whole-stage codegen.
   */
 object Relational {
   private def t(s: SparkSession, d: String, n: String): DataFrame = Tables(s, d, n)
-  /** Exact 2-dp money value recovered from the fixture double. */
-  private def dec(c: Column, p: Int = 12, s: Int = 2): Column = c.cast(DecimalType(p, s))
   /** Money/metric SUM input at DECIMAL(8,2): p ≤ 8 keeps the sum on
     * Catalyst's DecimalAggregates long path (sum buffer p+10 ≤ 18 = compact
     * long adds, no per-row BigDecimal buffer round-trip) — q_agg_pricing's
@@ -37,34 +39,7 @@ object Relational {
   private def dec8(c: Column): Column = c.cast(DecimalType(8, 2))
   private val D = DoubleType
 
-  // ---- §2.3 projection / filter -------------------------------------------
-
-  /** [Q-proj] projection + rename over lineitem; net price in exact decimal. */
-  def q_proj(s: SparkSession, d: String): DataFrame =
-    t(s, d, "lineitem").select(
-      col("l_orderkey").as("okey"),
-      col("l_linenumber").as("lnum"),
-      col("l_quantity").as("qty"),
-      (dec(col("l_extendedprice")) * (lit(1) - dec(col("l_discount"), 4, 2)))
-        .cast(D).as("net_price"))
-
-  /** [Q-filter] TPC-H Q6 shape: date range + between + comparison, revenue agg. */
-  def q_filter(s: SparkSession, d: String): DataFrame =
-    t(s, d, "lineitem")
-      .filter(col("l_shipdate") >= lit("1997-01-01").cast(TimestampType) &&
-        col("l_shipdate") < lit("1998-01-01").cast(TimestampType) &&
-        col("l_discount").between(0.05, 0.07) && col("l_quantity") < 24)
-      .agg(count(lit(1)).as("n"),
-        sum(dec(col("l_extendedprice")) * dec(col("l_discount"), 4, 2))
-          .cast(D).as("revenue"))
-
   // ---- §2.4 joins ----------------------------------------------------------
-
-  /** [Q-join-bcast] broadcast hash join: nation ⋈ region (dim ⋈ dim). */
-  def q_join_bcast(s: SparkSession, d: String): DataFrame =
-    t(s, d, "nation")
-      .join(broadcast(t(s, d, "region")), col("n_regionkey") === col("r_regionkey"))
-      .select(col("n_nationkey"), col("n_name"), col("r_name"))
 
   /** [Q-join-sm] shuffle/sort-merge equi-join: orders ⋈ lineitem on orderkey.
     * Aggregate pushed BELOW the join (legal because the group keys are the
@@ -74,7 +49,15 @@ object Relational {
     * shuffles narrow (key, partial) rows with map-side combine. Catalyst
     * doesn't do this rewrite itself; it's the shape to hand-author at
     * 100 TB. Result is identical to join-then-group (inner join, FK-valid
-    * keys). */
+    * keys).
+    *
+    * Kept as a hand form: the text runs 1.88x its time at sf0.1 (hand 0.72 s,
+    * text 1.35 s) and 1.72x at sf1 (hand 3.48 s, text 5.99 s); with its sum
+    * narrowed to DECIMAL(8,2) it still runs 1.44x (0.77 s / 1.11 s) and 1.51x
+    * (3.47 s / 5.23 s). The text joins before it aggregates, so the join
+    * moves every lineitem row. Paired cross-commit timing: min over 3-4
+    * alternating JVMs per side of the median of 5-9 warm reps (3 at sf1, the
+    * 10x fixture replica), local[4]. */
   def q_join_sm(s: SparkSession, d: String): DataFrame = {
     val perOrder = t(s, d, "lineitem")
       .groupBy(col("l_orderkey"))
@@ -91,83 +74,6 @@ object Relational {
         col("n_lines"), col("sum_qty"), col("gross"))
   }
 
-  /** [Q-tpch-q3] TPC-H Q3 (shipping priority): segment-filtered customers'
-    * unshipped revenue per order, top-10 — selective filters pushed to all
-    * three scans, then keyed joins and one re-aggregation. */
-  def q_tpch_q3(s: SparkSession, d: String): DataFrame = {
-    val cut = lit("1995-03-15").cast(TimestampType)
-    t(s, d, "customer").filter(col("c_mktsegment") === "BUILDING")
-      .join(t(s, d, "orders").filter(col("o_orderdate") < cut),
-        col("c_custkey") === col("o_custkey"))
-      .join(t(s, d, "lineitem").filter(col("l_shipdate") > cut),
-        col("o_orderkey") === col("l_orderkey"))
-      .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-      .agg(sum(dec(col("l_extendedprice")) * (lit(1) - dec(col("l_discount"), 4, 2)))
-        .as("rev_d"))
-      .orderBy(col("rev_d").desc, col("o_orderdate"), col("l_orderkey"))
-      .select(col("l_orderkey"), col("rev_d").cast(D).as("revenue"),
-        col("o_orderdate"), col("o_orderpriority"))
-      .limit(10)
-  }
-
-  /** [Q-tpch-q18] TPC-H Q18 (large-volume customer): orders whose lineitem
-    * quantity total exceeds a threshold — a HAVING subquery turned into a
-    * pre-aggregated SEMI-join (the IN-subquery never materializes per-row),
-    * then the customer/order detail join re-aggregates quantities. The
-    * composite shape: agg → semi-join → 3-way join → agg → top-k on a
-    * total order. */
-  def q_tpch_q18(s: SparkSession, d: String): DataFrame = {
-    val big = t(s, d, "lineitem")
-      .groupBy(col("l_orderkey").as("bk"))
-      .agg(sum(col("l_quantity")).as("tot"))
-      .filter(col("tot") > 250).select("bk")
-    t(s, d, "orders")
-      .join(big, col("o_orderkey") === col("bk"), "left_semi")
-      .join(t(s, d, "customer"), col("c_custkey") === col("o_custkey"))
-      .join(t(s, d, "lineitem"), col("o_orderkey") === col("l_orderkey"))
-      .groupBy("c_name", "c_custkey", "o_orderkey", "o_orderdate", "o_totalprice")
-      .agg(sum(col("l_quantity")).as("sum_qty"))
-      .orderBy(col("o_totalprice").desc, col("o_orderdate"), col("o_orderkey"))
-      .limit(100)
-  }
-
-  /** [Q-join-star] TPC-H Q5 shape: 6-way star, dims broadcast, revenue/nation. */
-  def q_join_star(s: SparkSession, d: String): DataFrame =
-    t(s, d, "customer")
-      .join(t(s, d, "orders"), col("c_custkey") === col("o_custkey"))
-      .join(t(s, d, "lineitem"), col("o_orderkey") === col("l_orderkey"))
-      .join(t(s, d, "supplier"),
-        col("l_suppkey") === col("s_suppkey") && col("c_nationkey") === col("s_nationkey"))
-      .join(broadcast(t(s, d, "nation")), col("s_nationkey") === col("n_nationkey"))
-      .join(broadcast(t(s, d, "region")), col("n_regionkey") === col("r_regionkey"))
-      .filter(col("r_name") === "ASIA" &&
-        col("o_orderdate") >= lit("1997-01-01").cast(TimestampType) &&
-        col("o_orderdate") < lit("1999-01-01").cast(TimestampType))
-      .groupBy("n_name")
-      .agg(sum(dec(col("l_extendedprice")) * (lit(1) - dec(col("l_discount"), 4, 2)))
-        .cast(D).as("revenue"))
-
-  /** [Q-join-outer] TPC-H Q13 shape: customer left-outer orders → distribution. */
-  def q_join_outer(s: SparkSession, d: String): DataFrame =
-    t(s, d, "customer")
-      .join(t(s, d, "orders"), col("c_custkey") === col("o_custkey"), "left_outer")
-      .groupBy("c_custkey").agg(count(col("o_orderkey")).as("c_count"))
-      .groupBy("c_count").agg(count(lit(1)).as("custdist"))
-
-  /** [Q-join-semi] EXISTS decorrelation: customers with a big order. */
-  def q_join_semi(s: SparkSession, d: String): DataFrame =
-    t(s, d, "customer")
-      .join(t(s, d, "orders").filter(col("o_totalprice") > 300000),
-        col("c_custkey") === col("o_custkey"), "left_semi")
-      .select(col("c_custkey"), col("c_name"))
-
-  /** [Q-join-anti] NOT EXISTS: customers with no big order. */
-  def q_join_anti(s: SparkSession, d: String): DataFrame =
-    t(s, d, "customer")
-      .join(t(s, d, "orders").filter(col("o_totalprice") > 300000),
-        col("c_custkey") === col("o_custkey"), "left_anti")
-      .select(col("c_custkey"), col("c_name"))
-
   /** [Q-join-theta] range self-join: per-user event pairs within one hour.
     * Banded range join: `b.ts ∈ (a.ts, a.ts + 1h]` implies b's hour bucket
     * is a's bucket or the next one, so the a-side explodes to those two
@@ -175,7 +81,15 @@ object Relational {
     * range as residual. Candidates are bounded by events-per-user-HOUR
     * (each b joins ≤2 exploded a-rows' buckets), not events-per-user² —
     * the difference between a keyed join that scales and one that
-    * quadratically degrades on long-lived users. */
+    * quadratically degrades on long-lived users.
+    *
+    * Kept as a hand form: StreamingSpec's interval-join test compares the
+    * stream join with this form, and the text runs 2.24x its time at sf0.1
+    * (hand 0.37 s, text 0.83 s) and 2.26x at sf1 (hand 2.21 s, text 4.99 s):
+    * the text plans a user-keyed join whose range residual sees every same-
+    * user pair. Paired cross-commit timing: min over 3 alternating JVMs per
+    * side of the median of 5 warm reps (3 at sf1, the 10x fixture replica),
+    * local[4]. */
   def q_join_theta(s: SparkSession, d: String): DataFrame = {
     val ev = t(s, d, "events")
     val bkt = expr("floor(unix_micros(ts) / 3600000000)")
@@ -196,7 +110,9 @@ object Relational {
     * then ONE user-keyed window pass carries the last purchase forward —
     * a single keyed shuffle + sort, no range join, no per-pair work.
     * At equal timestamps purchases sort before clicks (ts >= semantics);
-    * event_id breaks remaining ties deterministically. */
+    * event_id breaks remaining ties deterministically.
+    *
+    * Kept as a hand form: the text's `ASOF JOIN` is DuckDB syntax. */
   def q_join_asof(s: SparkSession, d: String): DataFrame = {
     val ev = t(s, d, "events")
     val probe = ev.filter(col("event_type") === "click")
@@ -217,51 +133,7 @@ object Relational {
       .select(col("event_id"), col("user_id"), col("asof_ts"), col("asof_value"))
   }
 
-  /** [Q-join-cross] cartesian over the two fixed-size dims (5 × 25 rows). */
-  def q_join_cross(s: SparkSession, d: String): DataFrame =
-    t(s, d, "region").crossJoin(t(s, d, "nation"))
-      .select(col("r_name"), col("n_name"))
-
   // ---- §2.5 aggregations ---------------------------------------------------
-
-  /** [Q-agg-pricing] TPC-H Q1: multi-aggregate pricing summary. */
-  def q_agg_pricing(s: SparkSession, d: String): DataFrame = {
-    val ext = dec(col("l_extendedprice"))
-    // p=8 keeps the PLAIN-money sum on Spark's compact-long Decimal path
-    // (sum buffer = p+10 ≤ 18): same exact value as the p=12 cast (prices
-    // < $1M), codegen'd long arithmetic instead of BigDecimal. The 4-6-dec
-    // product sums below need p ≥ 13 and take the BigDecimal path — the
-    // exactness they buy is the point (see SURVEY §7.5 analysis).
-    val ext8 = dec(col("l_extendedprice"), 8, 2)
-    val oneMinusDisc = lit(1) - dec(col("l_discount"), 4, 2)
-    val onePlusTax = lit(1) + dec(col("l_tax"), 4, 2)
-    // The two product sums convert through an exact BIGINT of MILLIONTHS
-    // before the double cast: above 2^53 micro-units (~sf1 fixtures) a
-    // direct decimal→double cast is correctly rounded in Spark
-    // (BigDecimal) but double-rounds in DuckDB (int128→double, then the
-    // scale divide), drifting 1 ULP. int64→double + one IEEE division is
-    // identical everywhere (headroom to ~9.2e12 dollars per group).
-    def viaMicros(c: Column): Column =
-      (sum(c) * 1000000).cast(LongType).cast(D) / 1000000.0
-    t(s, d, "lineitem")
-      .filter(col("l_shipdate") <= lit("2000-09-02").cast(TimestampType))
-      .groupBy("l_returnflag", "l_linestatus")
-      .agg(
-        sum(col("l_quantity")).as("sum_qty"),
-        sum(ext8).cast(D).as("sum_base_price"),
-        viaMicros(ext * oneMinusDisc).as("sum_disc_price"),
-        viaMicros(ext * oneMinusDisc * onePlusTax).as("sum_charge"),
-        (sum(col("l_quantity")) / count(lit(1))).as("avg_qty"),
-        (sum(ext8).cast(D) / count(lit(1))).as("avg_price"),
-        (sum(dec(col("l_discount"), 4, 2)).cast(D) / count(lit(1))).as("avg_disc"),
-        count(lit(1)).as("count_order"))
-  }
-
-  /** [Q-agg-distinct] exact distinct count (shuffles on the distinct key). */
-  def q_agg_distinct(s: SparkSession, d: String): DataFrame =
-    t(s, d, "orders").agg(
-      countDistinct(col("o_custkey")).as("n_cust"),
-      count(lit(1)).as("n_orders"))
 
   /** [Q-agg-hll] approx_count_distinct (HLL++) — tolerance-checked, no oracle:
     * HLL sketches differ across engines by design. */
@@ -271,20 +143,13 @@ object Relational {
       approx_count_distinct(col("l_partkey")).as("approx_parts"),
       count(lit(1)).as("n_rows"))
 
-  /** [Q-agg-rollup] hierarchical totals region → nation. */
-  def q_agg_rollup(s: SparkSession, d: String): DataFrame =
-    t(s, d, "nation")
-      .join(broadcast(t(s, d, "region")), col("n_regionkey") === col("r_regionkey"))
-      .select("r_name", "n_name")
-      // rollup(String*) trips Spark 4.1's ambiguous-self-join check on joined
-      // inputs; the Column overload resolves cleanly.
-      .rollup(col("r_name"), col("n_name"))
-      .agg(count(lit(1)).as("n"))
-
   /** [Q-agg-pivot] pivot events into one count column per event type (with
     * explicit pivot values — at scale, enumerating values avoids the extra
     * distinct-collection job pivot otherwise runs on the driver). Absent
-    * (user, type) combos fill to 0 to match conditional-count semantics. */
+    * (user, type) combos fill to 0 to match conditional-count semantics.
+    *
+    * Kept as a hand form: the text's `count(*) FILTER (cond)` is DuckDB
+    * syntax; Spark needs `FILTER (WHERE cond)`. */
   def q_agg_pivot(s: SparkSession, d: String): DataFrame = {
     val types = Seq("click", "view", "purchase", "signup", "error")
     t(s, d, "events")
@@ -310,7 +175,10 @@ object Relational {
     * ([[graft.Tables.footerRowCount]], cached per dir) — zero Spark jobs, so
     * the fence adds nothing to the measured query path. The scalable variant
     * is [[q_agg_approx_quantile]] (t-digest/GK — same API shape,
-    * sketch-mergeable, no full sort per group). */
+    * sketch-mergeable, no full sort per group).
+    *
+    * Kept as a hand form: the text calls DuckDB's `quantile_cont`, which
+    * Spark does not have. */
   def q_agg_quantile(s: SparkSession, d: String): DataFrame = {
     val orders = t(s, d, "orders")
     val n = graft.Tables.footerRowCount(s, d, "orders")
@@ -325,90 +193,7 @@ object Relational {
         count(lit(1)).as("n"))
   }
 
-  /** [Q-agg-gsets] explicit GROUPING SETS ((r_name), (n_name)) — both
-    * one-dimension marginals in a single pass (one shuffle; Catalyst expands
-    * the sets map-side, so the fact rows are read once, not once per set). */
-  def q_agg_gsets(s: SparkSession, d: String): DataFrame =
-    t(s, d, "nation")
-      .join(broadcast(t(s, d, "region")), col("n_regionkey") === col("r_regionkey"))
-      .select("r_name", "n_name")
-      .groupingSets(Seq(Seq(col("r_name")), Seq(col("n_name"))),
-        col("r_name"), col("n_name"))
-      .agg(count(lit(1)).as("n"))
-
-  /** [Q-agg-cube] cube over events (type × day). */
-  def q_agg_cube(s: SparkSession, d: String): DataFrame =
-    t(s, d, "events")
-      .select(col("event_type"), to_date(col("ts")).as("d"), col("value"))
-      .cube(col("event_type"), col("d"))
-      .agg(count(lit(1)).as("n"),
-        sum(dec8(col("value"))).cast(D).as("sum_value"))
-
   // ---- §2.6 window functions ----------------------------------------------
-
-  /** [Q-win-rank] rank/dense_rank/row_number of orders by price per priority.
-    * NOTE the window partitions on a 5-value key: at 100× scale that is five
-    * tasks each sorting n/5 rows — [[q_win_rank2]] is the scale-safe
-    * two-phase formulation of the same ranking (parallelism ∝ data). */
-  def q_win_rank(s: SparkSession, d: String): DataFrame = {
-    val byPrice = Window.partitionBy("o_orderpriority").orderBy(col("o_totalprice").desc)
-    val total = Window.partitionBy("o_orderpriority")
-      .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-    t(s, d, "orders").select(
-      col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"),
-      rank().over(byPrice).as("rnk"),
-      dense_rank().over(byPrice).as("drnk"),
-      row_number().over(total).as("rn"))
-  }
-
-  /** [Q-win-lag] lag/lead of value per user ordered by event time. */
-  def q_win_lag(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    t(s, d, "events").select(
-      col("event_id"), col("user_id"), col("value"),
-      lag("value", 1).over(w).as("prev_value"),
-      lead("value", 1).over(w).as("next_value"))
-  }
-
-  /** [Q-win-frame] running sum + sliding 3-row average (decimal-exact). */
-  def q_win_frame(s: SparkSession, d: String): DataFrame = {
-    val order = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    val run = order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val slide = order.rowsBetween(-2, 0)
-    t(s, d, "events").select(
-      col("event_id"), col("user_id"), col("value"),
-      sum(dec8(col("value"))).over(run).cast(D).as("run_sum"),
-      (sum(dec8(col("value"))).over(slide).cast(D) /
-        count(col("value")).over(slide)).as("slide_avg"))
-  }
-
-  /** [Q-win-firstlast] first_value / last_value / nth_value over the full
-    * per-user frame (unbounded both ways), total-ordered for determinism. */
-  def q_win_firstlast(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy("user_id")
-      .orderBy(col("ts"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    t(s, d, "events").select(
-      col("event_id"), col("user_id"), col("value"),
-      first(col("value")).over(w).as("first_v"),
-      last(col("value")).over(w).as("last_v"),
-      nth_value(col("value"), 2).over(w).as("second_v"))
-  }
-
-  /** [Q-win-ntile] distribution windows: quartile bucket, percent_rank,
-    * cume_dist of order price within priority. ntile needs the total order
-    * (unique tiebreak) to be deterministic; percent_rank/cume_dist are
-    * tie-aware so they run on the price ordering alone. */
-  def q_win_ntile(s: SparkSession, d: String): DataFrame = {
-    val total = Window.partitionBy("o_orderpriority")
-      .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-    val byPrice = Window.partitionBy("o_orderpriority").orderBy(col("o_totalprice").desc)
-    t(s, d, "orders").select(
-      col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"),
-      ntile(4).over(total).as("quartile"),
-      percent_rank().over(byPrice).as("pr"),
-      cume_dist().over(byPrice).as("cd"))
-  }
 
   /** [Q-win-rank2] scale-safe two-phase rank: the low-cardinality-window
     * escape hatch for [[q_win_rank]]'s 5-value partition key.
@@ -438,7 +223,10 @@ object Relational {
     * slicing assumes the order column is not pathologically clustered on
     * one value; a skewed deployment would swap in sampled-quantile
     * boundaries, keeping the same determinism (boundaries become data,
-    * not partitioner state). */
+    * not partitioner state).
+    *
+    * Kept as a hand form: its oracle is the plain window, so the text would
+    * turn it into a copy of q_win_rank. */
   def q_win_rank2(s: SparkSession, d: String): DataFrame = {
     val ties = Window.partitionBy("o_orderpriority", "o_totalprice")
     twoPhaseRowNumbers(s, d)
@@ -492,7 +280,10 @@ object Relational {
     * `percent_rank` = (tie-rank − 1)/(n − 1); `cume_dist` = (last tie
     * row's rn)/n. The only window over the raw 5-value key is gone; tie
     * windows key on the diverse (priority, price) pair. Replaces
-    * [[q_win_ntile]]'s single-partition-per-key plan at scale. */
+    * [[q_win_ntile]]'s single-partition-per-key plan at scale.
+    *
+    * Kept as a hand form: its oracle is the plain window, so the text would
+    * turn it into a copy of q_win_ntile. */
   def q_win_ntile2(s: SparkSession, d: String): DataFrame = {
     val k = 4
     // null-safe key match so a NULL priority group keeps its count row
@@ -515,86 +306,13 @@ object Relational {
         (col("mx").cast(DoubleType) / col("n")).as("cd"))
   }
 
-  // ---- §2.7 sort / limit / top-k / set ops ----------------------------------
-
-  /** [Q-sort] multi-key order + limit → TakeOrderedAndProject (no full sort
-    * materialization; each partition keeps only its top 100). */
-  def q_sort(s: SparkSession, d: String): DataFrame =
-    t(s, d, "lineitem")
-      .orderBy(col("l_shipdate").desc, col("l_orderkey").asc, col("l_linenumber").asc)
-      .select(col("l_orderkey"), col("l_linenumber"), col("l_shipdate"), col("l_quantity"))
-      .limit(100)
-
-  /** [Q-sort-nulls] explicit NULLS FIRST placement under a LIMIT: a derived
-    * nullable measure sorted ascending-nulls-first with a unique tiebreak, so
-    * the null block's position is observable in the selected rows (Spark and
-    * DuckDB have opposite ASC null-ordering defaults — this pins it). */
-  def q_sort_nulls(s: SparkSession, d: String): DataFrame =
-    t(s, d, "lineitem")
-      .select(col("l_orderkey"), col("l_linenumber"),
-        when(col("l_quantity") >= 3, col("l_quantity")).as("qty_or_null"))
-      .orderBy(col("qty_or_null").asc_nulls_first, col("l_orderkey"), col("l_linenumber"))
-      .limit(100)
-
-  /** [Q-topk] top-10 customers by revenue; ordered on the exact decimal sum. */
-  def q_topk(s: SparkSession, d: String): DataFrame =
-    t(s, d, "customer")
-      .join(t(s, d, "orders"), col("c_custkey") === col("o_custkey"))
-      .groupBy("c_custkey", "c_name")
-      .agg(sum(dec8(col("o_totalprice"))).as("rev_d"))
-      .orderBy(col("rev_d").desc, col("c_custkey"))
-      .select(col("c_custkey"), col("c_name"), col("rev_d").cast(D).as("revenue"))
-      .limit(10)
-
-  /** [Q-set-union] UNION (distinct) of two order slices. The second slice
-    * projects its columns in the opposite order, so this goes through
-    * unionByName (position-based union would mis-align the branches). */
-  def q_set_union(s: SparkSession, d: String): DataFrame = {
-    val o = t(s, d, "orders")
-    o.filter(col("o_totalprice") > 400000).select(col("o_orderkey"), col("o_orderpriority"))
-      .unionByName(o.filter(col("o_orderpriority") === "1-URGENT")
-        .select(col("o_orderpriority"), col("o_orderkey")))
-      .distinct()
-  }
-
-  /** [Q-set-intersect] positive-balance customers ∩ customers with orders. */
-  def q_set_intersect(s: SparkSession, d: String): DataFrame =
-    t(s, d, "customer").filter(col("c_acctbal") > 0).select(col("c_custkey"))
-      .intersect(t(s, d, "orders").select(col("o_custkey").as("c_custkey")))
-
-  /** [Q-set-except] customers minus those with a big order. */
-  def q_set_except(s: SparkSession, d: String): DataFrame =
-    t(s, d, "customer").select(col("c_custkey"))
-      .except(t(s, d, "orders").filter(col("o_totalprice") > 300000)
-        .select(col("o_custkey").as("c_custkey")))
-
-  /** [Q-set-except-all] MULTISET except: per-customer order rows minus one
-    * occurrence per matching row in the subtrahend — multiplicities
-    * subtract instead of the whole key vanishing (the EXCEPT ALL vs EXCEPT
-    * distinction). Aggregated afterwards so the oracle compares a total
-    * order. */
-  def q_set_except_all(s: SparkSession, d: String): DataFrame =
-    t(s, d, "orders").select(col("o_custkey"))
-      .exceptAll(t(s, d, "orders").filter(col("o_totalprice") > 150000)
-        .select(col("o_custkey")))
-      .groupBy("o_custkey").agg(count(lit(1)).as("n_small"))
-
-  /** [Q-join-nullsafe] null-safe equality join (`<=>` / IS NOT DISTINCT
-    * FROM): null keys MATCH null keys, unlike `=` which drops them. The
-    * nullable key is a derived nullif; Spark plans EqualNullSafe as a
-    * keyed hash join, not a nested loop (PlanGuardSpec enforces). */
-  def q_join_nullsafe(s: SparkSession, d: String): DataFrame = {
-    val o = t(s, d, "orders")
-    val keys = o.select(nullif(col("o_orderpriority"), lit("1-URGENT")).as("k")).distinct()
-    val rows = o.select(nullif(col("o_orderpriority"), lit("1-URGENT")).as("k2"),
-      col("o_orderkey"))
-    keys.join(rows, col("k") <=> col("k2"))
-      .groupBy("k").agg(count(lit(1)).as("n"))
-  }
-
   // ---- §2.8 scalar function families ----------------------------------------
 
-  /** [Q-fn-string] string family over part. */
+  /** [Q-fn-string] string family over part.
+    *
+    * Kept as a hand form: the text gives a different result on Spark: Spark's
+    * parser unescapes the `\\w` in the `regexp_extract` pattern literal to
+    * `w`. */
   def q_fn_string(s: SparkSession, d: String): DataFrame =
     t(s, d, "part").select(
       col("p_partkey"),
@@ -607,57 +325,11 @@ object Relational {
       concat(col("p_brand"), lit("#"), col("p_type")).as("brand_type"),
       col("p_name").like("%a%").as("has_a"))
 
-  /** [Q-fn-date] date family over orders. */
-  def q_fn_date(s: SparkSession, d: String): DataFrame =
-    t(s, d, "orders").select(
-      col("o_orderkey"),
-      year(col("o_orderdate")).as("y"),
-      month(col("o_orderdate")).as("m"),
-      dayofmonth(col("o_orderdate")).as("dom"),
-      quarter(col("o_orderdate")).as("q"),
-      date_trunc("month", col("o_orderdate")).as("month_start"),
-      date_add(col("o_orderdate"), 30).as("plus30"))
-
-  /** [Q-fn-decimal] per-row decimal arithmetic with exact precision. */
-  def q_fn_decimal(s: SparkSession, d: String): DataFrame = {
-    val ext = dec(col("l_extendedprice"))
-    val om = lit(1) - dec(col("l_discount"), 4, 2)
-    val op = lit(1) + dec(col("l_tax"), 4, 2)
-    t(s, d, "lineitem").select(
-      col("l_orderkey"), col("l_linenumber"),
-      (ext * om).cast(D).as("disc_price"),
-      (ext * om * op).cast(D).as("charge"))
-  }
-
-  /** [Q-fn-cond] conditional family: CASE/WHEN price banding, nullif,
-    * coalesce — all codegen'd row-local expressions. */
-  def q_fn_cond(s: SparkSession, d: String): DataFrame =
-    t(s, d, "orders").select(
-      col("o_orderkey"),
-      when(col("o_totalprice") > 300000, "big")
-        .when(col("o_totalprice") > 150000, "mid")
-        .otherwise("small").as("bucket"),
-      nullif(col("o_orderpriority"), lit("1-URGENT")).as("pri_or_null"),
-      coalesce(nullif(col("o_orderpriority"), lit("1-URGENT")), lit("URGENT"))
-        .as("pri_filled"))
-
-  /** [Q-win-range] event-time RANGE frame: trailing 1-hour window per user
-    * keyed by VALUE, not row position — a tie-insensitive frame (ROWS
-    * frames need a total order; RANGE frames don't), and the window shape
-    * sliding event-time aggregations take outside streaming. */
-  def q_win_range(s: SparkSession, d: String): DataFrame =
-    t(s, d, "events")
-      .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-      .withColumn("n_1h", expr(
-        "count(*) OVER (PARTITION BY user_id ORDER BY ts " +
-          "RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)"))
-      .withColumn("sum_1h", expr(
-        "CAST(sum(CAST(value AS DECIMAL(10,2))) OVER (PARTITION BY user_id ORDER BY ts " +
-          "RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW) AS DOUBLE)"))
-      .drop("ts")
-
   /** [Q-agg-bool] boolean aggregate family: conditional count, universally/
-    * existentially quantified predicates per group. */
+    * existentially quantified predicates per group.
+    *
+    * Kept as a hand form: the text's `count(*) FILTER (cond)` is DuckDB
+    * syntax; Spark needs `FILTER (WHERE cond)`. */
   def q_agg_bool(s: SparkSession, d: String): DataFrame =
     t(s, d, "orders")
       .groupBy("o_orderpriority")
@@ -669,7 +341,10 @@ object Relational {
   /** [Q-fn-bitwise] bitwise function family: and/or/xor, shifts, popcount
     * — exact integer ops, row-local, cross-engine deterministic (unlike
     * libm-backed float math, which differs per implementation and is
-    * deliberately NOT oracle-matched). */
+    * deliberately NOT oracle-matched).
+    *
+    * Kept as a hand form: the text calls DuckDB's `xor`, which Spark does not
+    * have. */
   def q_fn_bitwise(s: SparkSession, d: String): DataFrame =
     t(s, d, "orders").select(
       col("o_orderkey"),
@@ -682,7 +357,10 @@ object Relational {
 
   /** [Q-fn-map] map functions: parse props into map<string,bigint>, explode
     * to (k, v) rows, aggregate per key. from_json → MapType + generator
-    * explode is the §2.8 map-family surface. */
+    * explode is the §2.8 map-family surface.
+    *
+    * Kept as a hand form: the text calls DuckDB's `unnest`, which Spark does
+    * not have. */
   def q_fn_map(s: SparkSession, d: String): DataFrame =
     t(s, d, "events")
       .select(explode(from_json(col("props"), "map<string,bigint>",
@@ -690,7 +368,10 @@ object Relational {
       .groupBy("k")
       .agg(count(lit(1)).as("n"), sum("v").as("sum_v"), max("v").as("max_v"))
 
-  /** [Q-fn-json] JSON extraction over events.props. */
+  /** [Q-fn-json] JSON extraction over events.props.
+    *
+    * Kept as a hand form: the text calls DuckDB's `json_extract_string`,
+    * which Spark does not have. */
   def q_fn_json(s: SparkSession, d: String): DataFrame =
     t(s, d, "events")
       .select(get_json_object(col("props"), "$.k").cast(IntegerType).as("k"), col("value"))
@@ -699,7 +380,10 @@ object Relational {
         sum(dec8(col("value"))).cast(D).as("sum_value"))
 
   /** [Q-fn-array] higher-order array functions over embeddings: fold (dot with
-    * itself = squared L2 norm), size, max — all inside codegen, no UDF. */
+    * itself = squared L2 norm), size, max — all inside codegen, no UDF.
+    *
+    * Kept as a hand form: the text calls DuckDB's `list_sum`, which Spark
+    * does not have. */
   def q_fn_array(s: SparkSession, d: String): DataFrame =
     t(s, d, "embeddings").select(
       col("vec_id"), col("label"),
@@ -711,24 +395,13 @@ object Relational {
 
   // ---- round-4 additions ---------------------------------------------------
 
-  /** [Q-agg-stats] statistical aggregate family: Pearson correlation, sample
-    * covariance / stddev / variance per group — one keyed hash aggregate with
-    * map-side partial co-moments (Spark merges per-partition (n, mean, M2,
-    * co-moment) states, so the shuffle carries O(groups) rows regardless of
-    * input size). Outputs are rounded coarsely enough that the two engines'
-    * merge orders agree in every digit compared. */
-  def q_agg_stats(s: SparkSession, d: String): DataFrame =
-    t(s, d, "lineitem").groupBy("l_returnflag")
-      .agg(round(corr(col("l_quantity"), col("l_extendedprice")), 6).as("corr_qp"),
-        round(covar_samp(col("l_quantity"), col("l_extendedprice")), 3).as("cov_qp"),
-        round(stddev_samp(col("l_discount")), 6).as("sd_disc"),
-        round(var_samp(col("l_quantity")), 6).as("var_qty"),
-        count(lit(1)).as("n"))
-
   /** [Q-agg-listagg] ordered string aggregation (LISTAGG / string_agg):
     * nation names per region, sorted then joined — the deterministic form
     * (collect_list order is partition-dependent, so the sort INSIDE the
-    * aggregate is what makes this reproducible at any parallelism). */
+    * aggregate is what makes this reproducible at any parallelism).
+    *
+    * Kept as a hand form: the text's `string_agg(x, ',' ORDER BY x)` is
+    * DuckDB syntax. */
   def q_agg_listagg(s: SparkSession, d: String): DataFrame =
     t(s, d, "nation")
       .join(broadcast(t(s, d, "region")), col("n_regionkey") === col("r_regionkey"))
@@ -742,7 +415,10 @@ object Relational {
     * write as a subquery rerun the scan; max_by folds it into the partial
     * aggregation). Tie-break: the ranking value is value·10¹⁰ + event_id —
     * fixture values have 2 decimals and ids stay < 10¹⁰−¹⁰⁴ ulp-exact in a
-    * double, so equal values deterministically resolve by id. */
+    * double, so equal values deterministically resolve by id.
+    *
+    * Kept as a hand form: the text calls DuckDB's `arg_max`, which Spark does
+    * not have. */
   def q_agg_argmax(s: SparkSession, d: String): DataFrame =
     t(s, d, "events").groupBy("user_id")
       .agg(expr("max_by(event_id, value * 10000000000D + event_id)").as("ev_max"),
@@ -751,53 +427,13 @@ object Relational {
         min(col("value")).as("min_v"),
         count(lit(1)).as("n"))
 
-  /** [Q-join-minsub] groupwise-min subquery join (decorrelated correlated
-    * scalar subquery): every lineitem that is the EARLIEST-shipped line of
-    * its order. The correlated form (`WHERE l_shipdate = (SELECT min ...)`)
-    * decorrelates to aggregate-then-equi-join — the min side reduces to one
-    * row per order BEFORE the join, so the shuffle carries keys + one date,
-    * never the fact table twice. Ties (same min date) all qualify. */
-  def q_join_minsub(s: SparkSession, d: String): DataFrame = {
-    val l = t(s, d, "lineitem")
-    val m = l.groupBy(col("l_orderkey").as("mk"))
-      .agg(min(col("l_shipdate")).as("ms"))
-    l.join(m, col("l_orderkey") === col("mk") && col("l_shipdate") === col("ms"))
-      .select(col("l_orderkey"), col("l_linenumber"), col("l_shipdate"))
-  }
-
-  /** [Q-set-intersect-all] multiset INTERSECT ALL: per-customer multiplicity
-    * is min(count_left, count_right), vs INTERSECT's key dedup — the other
-    * half of the bag-semantics pair with [Q-set-except-all]. Aggregated so
-    * the oracle compares a total order. */
-  def q_set_intersect_all(s: SparkSession, d: String): DataFrame = {
-    val o = t(s, d, "orders")
-    o.filter(col("o_totalprice") > 150000).select(col("o_custkey"))
-      .intersectAll(o.filter(col("o_orderpriority") === "1-URGENT")
-        .select(col("o_custkey")))
-      .groupBy("o_custkey").agg(count(lit(1)).as("n_both"))
-  }
-
-  /** [Q-compact-latest] latest-record-per-key compaction — the CDC/upsert
-    * materialization step (dedupe a change stream to current state): one
-    * keyed window, row_number on (ts, id) DESC picks the survivor, the
-    * version count rides along for audit. At 100 TB this is one shuffle on
-    * the primary key; the window never materializes more than a partition. */
-  def q_compact_latest(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy("user_id")
-      .orderBy(col("ts").desc, col("event_id").desc)
-    t(s, d, "events")
-      .select(col("user_id"), col("event_id"), col("ts"), col("value"))
-      .withColumn("rn", row_number().over(w))
-      .withColumn("n_versions", count(lit(1)).over(Window.partitionBy("user_id")))
-      .filter(col("rn") === 1)
-      .select(col("user_id"), col("event_id").as("last_event_id"),
-        col("ts").as("last_ts"), col("value").as("last_value"), col("n_versions"))
-  }
-
   /** [Q-fn-interval] interval / timestamp arithmetic family: interval add,
     * minutes-into-day (aligned-boundary diff), epoch seconds — all row-local.
     * `div 60` (integer) rather than `/60` so both engines count whole
-    * minutes from the midnight-aligned origin identically. */
+    * minutes from the midnight-aligned origin identically.
+    *
+    * Kept as a hand form: the text's `date_diff('minute', …)` (a quoted unit)
+    * and `epoch` are DuckDB SQL. */
   def q_fn_interval(s: SparkSession, d: String): DataFrame =
     t(s, d, "events").select(
       col("event_id"),
@@ -811,7 +447,10 @@ object Relational {
     * q_stream_session): a session starts when the gap from the previous
     * event exceeds 30 min; the session id is the running count of session
     * starts. Two stacked windows over ONE keyed shuffle (same partitioning,
-    * same order → Spark plans a single sort + two window operators). */
+    * same order → Spark plans a single sort + two window operators).
+    *
+    * Kept as a hand form: the text calls DuckDB's `epoch`, which Spark does
+    * not have. */
   def q_win_sessionize(s: SparkSession, d: String): DataFrame = {
     val byTs = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
     t(s, d, "events")
@@ -827,7 +466,10 @@ object Relational {
   /** [Q-fn-hash] cryptographic digest family: md5 / sha256 content digests —
     * the content-addressing primitives every dedup and lineage pass keys on
     * (32/64-hex-char strings, engine-independent by definition of the
-    * algorithms — unlike xxhash64, whose seed differs per engine). */
+    * algorithms — unlike xxhash64, whose seed differs per engine).
+    *
+    * Kept as a hand form: the text calls DuckDB's `sha256`, which Spark does
+    * not have. */
   def q_fn_hash(s: SparkSession, d: String): DataFrame =
     t(s, d, "documents").select(
       col("doc_id"),
@@ -835,82 +477,14 @@ object Relational {
       sha2(col("text"), 256).as("text_sha256"),
       substring(sha2(col("text"), 256), 1, 16).as("shard_key"))
 
-  /** [Q-agg-hist] histogram binning: fixed-width buckets over a value range
-    * with count + mass per bucket. The bin id is floor arithmetic (NOT
-    * width_bucket, whose edge semantics differ across engines) — one
-    * row-local projection then one keyed aggregate; the standard
-    * distribution-profiling pass before choosing partition bounds. */
-  def q_agg_hist(s: SparkSession, d: String): DataFrame = {
-    val lo = 0.0; val width = 30000.0
-    t(s, d, "orders")
-      .withColumn("bin",
-        least(floor((col("o_totalprice") - lo) / width), lit(19.0)).cast("int"))
-      .groupBy("bin")
-      .agg(count(lit(1)).as("n"),
-        sum(dec8(col("o_totalprice"))).cast(D).as("mass"))
-  }
-
-  /** [Q-tpch-q10] TPC-H Q10 (returned-item reporting) composite: filter a
-    * quarter of orders + returned lineitems, 3-way keyed join with the
-    * nation dim broadcast, revenue aggregate, top-20 on a total order. */
-  def q_tpch_q10(s: SparkSession, d: String): DataFrame = {
-    val rev = (dec(col("l_extendedprice")) * (lit(1) - dec(col("l_discount"), 4, 2)))
-    t(s, d, "customer")
-      .join(t(s, d, "orders"),
-        col("c_custkey") === col("o_custkey") &&
-          col("o_orderdate") >= lit("1997-01-01").cast(TimestampType) &&
-          col("o_orderdate") < lit("1997-04-01").cast(TimestampType))
-      .join(t(s, d, "lineitem"),
-        col("o_orderkey") === col("l_orderkey") && col("l_returnflag") === "R")
-      .join(broadcast(t(s, d, "nation")), col("c_nationkey") === col("n_nationkey"))
-      .groupBy(col("c_custkey"), col("c_name"), col("c_acctbal"), col("n_name"))
-      .agg(sum(rev).cast(D).as("revenue"))
-      .orderBy(col("revenue").desc, col("c_custkey"))
-      .limit(20)
-  }
-
-  /** [Q-win-rundistinct] RUNNING DISTINCT COUNT per key — SQL windows can't
-    * express `count(DISTINCT) OVER`, so this is the standard two-window
-    * composition: mark each (user, event_type)'s FIRST occurrence with
-    * row_number()=1, then running-sum the markers in event order. Both
-    * windows share the user_id partitioning → one keyed shuffle, two sorts.
-    * The "how many distinct pages/actions so far" session-analytics shape. */
-  def q_win_rundistinct(s: SparkSession, d: String): DataFrame = {
-    val firstSeen = Window.partitionBy("user_id", "event_type")
-      .orderBy(col("ts"), col("event_id"))
-    val running = Window.partitionBy("user_id")
-      .orderBy(col("ts"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    t(s, d, "events")
-      .select(col("event_id"), col("user_id"), col("event_type"), col("ts"))
-      .withColumn("first_occ",
-        when(row_number().over(firstSeen) === 1, 1L).otherwise(0L))
-      .withColumn("n_distinct_types", sum(col("first_occ")).over(running))
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        col("first_occ"), col("n_distinct_types"))
-  }
-
-  /** [Q-join-full] FULL OUTER join: two customer-key sets with disjoint and
-    * overlapping regions — rows survive from BOTH sides, null-padded where
-    * unmatched (the reconciliation shape: neither side is the driver).
-    * Planned as a sort-merge full outer on the key, one shuffle per side. */
-  def q_join_full(s: SparkSession, d: String): DataFrame = {
-    val o = t(s, d, "orders")
-    val big = o.filter(col("o_totalprice") > 300000)
-      .groupBy(col("o_custkey").as("k1")).agg(count(lit(1)).as("n_big"))
-    val urgent = o.filter(col("o_orderpriority") === "1-URGENT")
-      .groupBy(col("o_custkey").as("k2")).agg(count(lit(1)).as("n_urgent"))
-    big.join(urgent, col("k1") === col("k2"), "full_outer")
-      .select(coalesce(col("k1"), col("k2")).as("custkey"),
-        coalesce(col("n_big"), lit(0L)).as("n_big"),
-        coalesce(col("n_urgent"), lit(0L)).as("n_urgent"),
-        (col("k1").isNotNull && col("k2").isNotNull).as("in_both"))
-  }
-
   /** [Q-fn-date2] second date family: last_day, aligned day-of-week,
     * ISO week number, day-of-year, epoch-day diff — row-local calendar
     * arithmetic. (Spark's dayofweek is 1=Sunday; DuckDB's is 0=Sunday —
-    * the oracle adds 1 to align, a documented engine-semantics bridge.) */
+    * the oracle adds 1 to align, a documented engine-semantics bridge.)
+    *
+    * Kept as a hand form: the text gives a different result on Spark: its
+    * `dayofweek(x) + 1` aligns DuckDB's 0-based day of week, and Spark's is
+    * already 1-based. */
   def q_fn_date2(s: SparkSession, d: String): DataFrame =
     t(s, d, "orders").select(
       col("o_orderkey"),
@@ -923,7 +497,10 @@ object Relational {
   /** [Q-fn-explode-outer] generator NULL semantics: explode_outer keeps
     * the parent row (with a NULL element) when the array filters down to
     * empty — plain explode silently DROPS it, which at corpus scale is a
-    * data-loss bug that no row count on the happy path catches. */
+    * data-loss bug that no row count on the happy path catches.
+    *
+    * Kept as a hand form: the text calls DuckDB's `unnest`, which Spark does
+    * not have. */
   def q_fn_explode_outer(s: SparkSession, d: String): DataFrame =
     t(s, d, "embeddings").select(
       col("vec_id"),
@@ -932,7 +509,10 @@ object Relational {
 
   /** [Q-fn-array2] second array family: slice + fold, element position
     * lookup, negative indexing — all codegen'd row-local higher-order /
-    * positional ops over the embedding vectors. */
+    * positional ops over the embedding vectors.
+    *
+    * Kept as a hand form: the text calls DuckDB's `list_sum`, which Spark
+    * does not have. */
   def q_fn_array2(s: SparkSession, d: String): DataFrame =
     t(s, d, "embeddings").select(
       col("vec_id"),
@@ -946,7 +526,10 @@ object Relational {
   /** [Q-text-mask] character-class masking (mask(): upper→X, lower→x,
     * digit→n, punctuation kept) — the PII-shape-preserving scrub that
     * keeps format signal (lengths, word shapes) while destroying content.
-    * Row-local; the oracle mirrors it with three regexp passes. */
+    * Row-local; the oracle mirrors it with three regexp passes.
+    *
+    * Kept as a hand form: the text passes DuckDB's `'g'` flag to
+    * `regexp_replace`, which Spark reads as a position and rejects. */
   def q_text_mask(s: SparkSession, d: String): DataFrame =
     t(s, d, "customer").select(
       col("c_custkey"),
@@ -957,7 +540,10 @@ object Relational {
     * forward per key (`last_value IGNORE NULLS` over an unbounded-preceding
     * frame) — the time-series imputation step before any model sees a gappy
     * series. Nulls are planted deterministically (every 7th event) so both
-    * engines fill the identical gaps. One keyed window. */
+    * engines fill the identical gaps. One keyed window.
+    *
+    * Kept as a hand form: the text's `last_value(x IGNORE NULLS)` inside the
+    * call is DuckDB syntax. */
   def q_win_ffill(s: SparkSession, d: String): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -969,26 +555,12 @@ object Relational {
       .select(col("event_id"), col("user_id"), col("v_gappy"), col("v_filled"))
   }
 
-  /** [Q-join-lateral] LATERAL correlated subquery join through the SQL
-    * entry path (every other declared query uses the DataFrame API; this
-    * one exercises `spark.sql` + temp views as a first-class surface):
-    * for each region, its top-2 nations by name. Catalyst decorrelates
-    * the lateral limit into a ranked window join — same plan family as
-    * the hand-written row_number approach. */
-  def q_join_lateral(s: SparkSession, d: String): DataFrame = {
-    t(s, d, "region").createOrReplaceTempView("v_region")
-    t(s, d, "nation").createOrReplaceTempView("v_nation")
-    s.sql(
-      """SELECT r.r_name, t.n_name, t.n_nationkey
-        |FROM v_region r,
-        |LATERAL (SELECT n_name, n_nationkey FROM v_nation n
-        |         WHERE n.n_regionkey = r.r_regionkey
-        |         ORDER BY n_name LIMIT 2) t""".stripMargin)
-  }
-
   /** [Q-fn-string2] second string family: padding (fixed-width keys),
     * reverse, translate (char-map scrub), repeat, ascii/chr — row-local,
-    * codegen'd; the formatting toolkit for key normalization and export. */
+    * codegen'd; the formatting toolkit for key normalization and export.
+    *
+    * Kept as a hand form: the text's `CAST(x AS VARCHAR)` without a length is
+    * DuckDB SQL. */
   def q_fn_string2(s: SparkSession, d: String): DataFrame =
     t(s, d, "part").select(
       col("p_partkey"),
@@ -1001,116 +573,15 @@ object Relational {
       concat(col("p_brand"), lit(":"),
         expr("chr(65 + CAST(p_size % 26 AS INT))")).as("brand_letter"))
 
-  /** [Q-agg-moments] exact central moments per group: mean, variance, and
-    * skewness derived from DECIMAL power sums (Σx, Σx², Σx³ — exact and
-    * order-independent), expanded via E[(x-μ)ᵏ] moment identities in
-    * IEEE-identical double arithmetic. This sidesteps the engines'
-    * DIFFERENT built-in `skewness` bias corrections (Spark: population g1;
-    * DuckDB: sample-adjusted) — with exact moments both sides compute the
-    * same number, so the statistic itself is oracle-matched. One keyed
-    * aggregate, map-side partials, same shuffle shape as any sum. */
-  def q_agg_moments(s: SparkSession, d: String): DataFrame = {
-    val x = dec(col("l_quantity"), 8, 1)
-    t(s, d, "lineitem").groupBy("l_returnflag")
-      .agg(count(lit(1)).as("n"),
-        sum(x).cast(D).as("s1"),
-        sum(x * x).cast(D).as("s2"),
-        sum(x * x * x).cast(D).as("s3"))
-      .select(col("l_returnflag"), col("n"),
-        round((col("s1") / col("n")), 6).as("mean_q"),
-        round((col("s2") / col("n") - (col("s1") / col("n")) * (col("s1") / col("n"))), 6).as("var_q"),
-        round(
-          (col("s3") / col("n")
-            - lit(3.0) * (col("s1") / col("n")) * (col("s2") / col("n"))
-            + lit(2.0) * (col("s1") / col("n")) * (col("s1") / col("n")) * (col("s1") / col("n"))),
-          6).as("m3_q"))
-  }
-
-  /** [Q-merge-upsert] batch MERGE / upsert-by-rewrite: apply an updates
-    * batch over a base table by key — updates win, unmatched base rows
-    * survive. Without a transactional table format this is the standard
-    * rewrite shape: updates ∪ (base ANTI-JOIN updates on the key) — one
-    * keyed anti-join, no full outer join, no row-by-row driver logic. The
-    * CDC-apply step that [Q-compact-latest] prepares batches for.
-    * Aggregated per priority so the oracle compares a small total order. */
-  def q_merge_upsert(s: SparkSession, d: String): DataFrame = {
-    val base = t(s, d, "orders")
-      .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
-    // the "updates batch": big orders re-prioritized (a derived, deterministic stand-in)
-    val updates = base.filter(col("o_totalprice") > 400000)
-      .select(col("o_orderkey"), lit("0-UPDATED").as("o_orderpriority"),
-        col("o_totalprice"))
-    val merged = updates.unionByName(
-      base.join(updates.select(col("o_orderkey")), Seq("o_orderkey"), "left_anti"))
-    merged.groupBy("o_orderpriority")
-      .agg(count(lit(1)).as("n"),
-        sum(dec8(col("o_totalprice"))).cast(D).as("sum_price"))
-  }
-
-  /** [Q-agg-groupingid] grouping() / grouping_id() over a rollup: the
-    * standard way to tell "this column was aggregated away" from "this
-    * group's value is NULL" — without it, rollup outputs over nullable
-    * columns are ambiguous. grouping_id doubles as a deterministic level
-    * key for routing subtotal rows. */
-  def q_agg_groupingid(s: SparkSession, d: String): DataFrame =
-    t(s, d, "nation")
-      .join(broadcast(t(s, d, "region")), col("n_regionkey") === col("r_regionkey"))
-      .rollup(col("r_name"), col("n_name"))
-      .agg(count(lit(1)).as("n"),
-        grouping(col("r_name")).cast("int").as("g_r"),
-        grouping(col("n_name")).cast("int").as("g_n"),
-        grouping_id().cast("int").as("gid"))
-
-  /** [Q-fn-trycast] error-safe conversion family: try_cast returns NULL
-    * where ANSI cast throws, try_divide nulls division by zero — the
-    * "dirty input doesn't kill the 100 TB job" contract (one malformed row
-    * failing a full corpus pass is the alternative).
-    *
-    * PERF NOTE (measured): Spark implements try_cast's failure path with a
-    * caught JVM exception PER FAILING ROW (~10 µs each) — an all-rows-dirty
-    * column cost 1.5 s/150k rows where the clean-cast projection runs in
-    * 0.2 s. try_cast is the safety net for the RARE dirty row, not a bulk
-    * parser; the dirty fraction here is a realistic 1/1000 (one bad batch
-    * in a corpus), which keeps the cost invisible. */
-  def q_fn_trycast(s: SparkSession, d: String): DataFrame =
-    t(s, d, "orders").select(
-      col("o_orderkey"),
-      expr("try_cast(substring(o_orderpriority, 1, 1) AS INT)").as("pri_num"),
-      // dirty 0.1%: non-numeric text reaches the cast only for key%1000=0
-      expr("try_cast(CASE WHEN o_orderkey % 1000 = 0 THEN o_orderpriority " +
-        "ELSE substring(o_orderpriority, 1, 1) END AS INT)").as("mostly_clean"),
-      // double division (not decimal): the two engines' decimal-quotient
-      // precision rules differ, while double/long division is IEEE-identical
-      expr("try_divide(o_totalprice, o_orderkey % 5)").as("div_or_null"))
-
-  /** [Q-agg-regr] linear-regression aggregate family: slope / intercept /
-    * count per group (same mergeable co-moment machinery as [Q-agg-stats]) —
-    * trend fitting inside the aggregate, no model export round-trip. */
-  def q_agg_regr(s: SparkSession, d: String): DataFrame =
-    t(s, d, "lineitem").groupBy("l_returnflag")
-      .agg(round(expr("regr_slope(l_extendedprice, l_quantity)"), 4).as("slope"),
-        round(expr("regr_intercept(l_extendedprice, l_quantity)"), 4).as("icept"),
-        expr("regr_count(l_extendedprice, l_quantity)").as("n_pairs"))
-
-  /** [Q-agg-unpivot] UNPIVOT / melt via the stack generator: wide per-row
-    * measures become (measure, value) rows — the inverse of [Q-agg-pivot] —
-    * then one keyed aggregate per measure. stack() is a codegen'd generator:
-    * the 3x row fan-out happens inside the scan stage, no shuffle until the
-    * final small aggregate. */
-  def q_agg_unpivot(s: SparkSession, d: String): DataFrame =
-    t(s, d, "lineitem")
-      .select(expr(
-        "stack(3, 'qty', l_quantity, 'disc', l_discount, 'tax', l_tax)")
-        .as(Seq("measure", "v")))
-      .groupBy("measure")
-      .agg(count(lit(1)).as("n"), sum(dec8(col("v"))).cast(D).as("sum_v"))
-
   /** [Q-ts-gapfill] time-series resample + gap fill: an hourly bucket grid
     * per event_type spanning [min, max] (sequence + explode — generated
     * PER GROUP ROW, so there is no driver scalar and no 1-row cross join),
     * left-joined to actual bucket counts, missing buckets filled with 0.
     * The canonical densification step before any windowed model sees the
-    * series; grid size is O(groups · span/step), never corpus-sized. */
+    * series; grid size is O(groups · span/step), never corpus-sized.
+    *
+    * Kept as a hand form: the text calls DuckDB's `unnest`, which Spark does
+    * not have. */
   def q_ts_gapfill(s: SparkSession, d: String): DataFrame = {
     val ev = t(s, d, "events")
       .select(col("event_type"), date_trunc("HOUR", col("ts")).as("b"))
@@ -1143,7 +614,10 @@ object Relational {
     * q_embed_quantize. DuckDB-oracle-matched.
     *
     * The declared entry pins the 4-term literal set below for the oracle;
-    * `bm25` is the parameterized API (any query term set, any top-k). */
+    * `bm25` is the parameterized API (any query term set, any top-k).
+    *
+    * Kept as a hand form: the text calls DuckDB's `string_split`, which Spark
+    * does not have. */
   def q_text_bm25(s: SparkSession, d: String): DataFrame =
     bm25(t(s, d, "documents"), Seq("hash", "join", "fast", "scan"))
 
@@ -1182,7 +656,10 @@ object Relational {
     * tf · N / df (rational in exact-integer doubles — no libm log, so both
     * engines compute the identical value), top-3 terms per doc on a total
     * order. The relevance-weighting pass behind corpus search and keyword
-    * extraction. */
+    * extraction.
+    *
+    * Kept as a hand form: the text calls DuckDB's `unnest`, which Spark does
+    * not have. */
   def q_text_tfidf(s: SparkSession, d: String): DataFrame = {
     val docs = t(s, d, "documents")
     // r18: corpus size from parquet footers (driver-side metadata, no

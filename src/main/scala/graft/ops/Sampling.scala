@@ -41,7 +41,10 @@ object Sampling {
     * so DuckDB can verify the bookkeeping cell-exact; the production
     * operators above use xxhash64 (engine-specific → covered by the
     * determinism/fraction property tests instead). en keeps 50%, everything
-    * else 10% — the mixing-ratio shape. */
+    * else 10% — the mixing-ratio shape.
+    *
+    * Kept as a hand form: the text's `count(*) FILTER (cond)` is DuckDB
+    * syntax; Spark needs `FILTER (WHERE cond)`. */
   def q_sample(s: SparkSession, d: String): DataFrame = {
     val rate = when(col("lang") === "en", 50).otherwise(10)
     Tables(s, d, "documents")

@@ -329,7 +329,11 @@ object Scale {
     * the order column and a min/max pass, so it generalizes to computed
     * frames). The oracle is the plain unpartitioned window — the driver's
     * hash match is the EXTERNAL proof that the two-phase plan is
-    * value-for-value that window, ties and all. */
+    * value-for-value that window, ties and all.
+    *
+    * Kept as a hand form: the oracle text is the plain form this scale design
+    * must equal, so running it would drop the design, and an sf0.1 timing
+    * does not decide a design built for sf≥100. */
   def q_win_grank(s: SparkSession, d: String): DataFrame =
     globalRank(
       graft.Tables(s, d, "orders").select(col("o_orderkey"), col("o_totalprice")),
@@ -340,7 +344,11 @@ object Scale {
     * [[topKRank]] (per-partition partial-limit threshold, broadcast hash
     * attach, only survivors ranked). The oracle is the plain
     * `rank() ... WHERE rnk <= k` subquery — the driver's hash match is
-    * the external proof of the threshold algebra, ties included. */
+    * the external proof of the threshold algebra, ties included.
+    *
+    * Kept as a hand form: the oracle text is the plain form this scale design
+    * must equal, so running it would drop the design, and an sf0.1 timing
+    * does not decide a design built for sf≥100. */
   def q_win_topk_rank(s: SparkSession, d: String): DataFrame =
     topKRank(
       graft.Tables(s, d, "orders").select(col("o_orderkey"), col("o_totalprice")),
@@ -352,7 +360,11 @@ object Scale {
     * is the proof that salting is purely a physical-layout transform (the
     * ScalaTest equality check, made external). This is the static escalation
     * for a pathologically hot key that AQE's runtime skew split can't fix
-    * (one logical key too big for ANY single task). */
+    * (one logical key too big for ANY single task).
+    *
+    * Kept as a hand form: the oracle text is the plain form this scale design
+    * must equal, so running it would drop the design, and an sf0.1 timing
+    * does not decide a design built for sf≥100. */
   def q_join_salted(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
     val big = graft.Tables(s, d, "orders")

@@ -39,7 +39,10 @@ object Similarity {
 
   /** [Q-sim-topk] brute-force exact top-10 cosine neighbors of anchor vectors
     * (vec_id < 5). Broadcast the tiny anchor set against the full table; the
-    * per-anchor top-k is a window on the anchor partition. */
+    * per-anchor top-k is a window on the anchor partition.
+    *
+    * Kept as a hand form: the text calls DuckDB's `list_sum`, which Spark
+    * does not have. */
   def q_sim_topk(s: SparkSession, d: String): DataFrame = {
     val emb = Tables(s, d, "embeddings")
     val scored = emb.select(col("vec_id").as("b_id"), col("embedding").as("vb"))
@@ -78,7 +81,10 @@ object Similarity {
     * reproduces the r12 number, so it was transient host state in BOTH r12
     * measurement windows — not suite-position GC, not a plan change —
     * exactly the failure mode the bench's contention_index (r13) now
-    * makes visible inside the record itself. */
+    * makes visible inside the record itself.
+    *
+    * Kept as a hand form: the text calls DuckDB's `list_sum`, which Spark
+    * does not have. */
   def q_dedup_embed(s: SparkSession, d: String): DataFrame =
     // r18: the fence's row count comes from parquet footers (driver-side
     // metadata, no Spark job) — one fewer job per run, same exact guard
@@ -417,7 +423,10 @@ object Similarity {
     * shuffle; emits scalar summaries (code sum, max reconstruction error)
     * so the oracle compares engine-independent values, not arrays.
     * `floor(x + 0.5)` instead of round() keeps the two engines' halfway
-    * behavior trivially identical. DuckDB-oracle-matched. */
+    * behavior trivially identical. DuckDB-oracle-matched.
+    *
+    * Kept as a hand form: the text calls DuckDB's `list_transform`, which
+    * Spark does not have. */
   def q_embed_quantize(s: SparkSession, d: String): DataFrame =
     Tables(s, d, "embeddings")
       .withColumn("v", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))

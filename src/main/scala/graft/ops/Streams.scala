@@ -39,16 +39,28 @@ object Streams {
       .select(col("user_id"), col("session_window.start").as("s_start"),
         col("n"), col("sum_value"))
 
-  /** [Q-stream-tumble] 10-minute tumbling window per event_type. */
+  /** [Q-stream-tumble] 10-minute tumbling window per event_type.
+    *
+    * Kept as a hand form: the batch transform is the one the streaming
+    * execution runs (`EventStreams.tumble`), and StreamingSpec compares the
+    * two; the text also calls DuckDB's `time_bucket`. */
   def q_stream_tumble(s: SparkSession, d: String): DataFrame =
     tumbleAgg(Tables(s, d, "events"))
 
-  /** [Q-stream-slide] 10-minute windows sliding by 5 — each event lands in 2. */
+  /** [Q-stream-slide] 10-minute windows sliding by 5 — each event lands in 2.
+    *
+    * Kept as a hand form: the batch transform is the one the streaming
+    * execution runs (`EventStreams.slide`), and StreamingSpec compares the
+    * two; the text also calls DuckDB's `time_bucket`. */
   def q_stream_slide(s: SparkSession, d: String): DataFrame =
     slideAgg(Tables(s, d, "events"))
 
   /** [Q-stream-session] 30-minute-gap session windows per user.
-    * Oracle expresses the same via gaps-and-islands window functions. */
+    * Oracle expresses the same via gaps-and-islands window functions.
+    *
+    * Kept as a hand form: the batch transform is the one the streaming
+    * execution runs (`EventStreams.session`), and StreamingSpec compares the
+    * two (the text gives the same result on Spark). */
   def q_stream_session(s: SparkSession, d: String): DataFrame =
     sessionAgg(Tables(s, d, "events"))
 }

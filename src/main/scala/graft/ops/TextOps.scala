@@ -25,7 +25,10 @@ object TextOps {
        |      i -> concat_ws(' ', slice(t, i, $k))))
        |  ELSE array_distinct(array(text)) END), 1)""".stripMargin)
 
-  /** [Q-text-tokens] corpus token frequency, top-50 (total order via token). */
+  /** [Q-text-tokens] corpus token frequency, top-50 (total order via token).
+    *
+    * Kept as a hand form: the text calls DuckDB's `unnest`, which Spark does
+    * not have. */
   def q_text_tokens(s: SparkSession, d: String): DataFrame =
     Tables(s, d, "documents")
       .select(explode(tokens).as("token"))
@@ -35,7 +38,10 @@ object TextOps {
 
   /** [Q-text-tokens-re] BPE-ish regex tokenization: letter runs, digit runs,
     * and single non-alphanumeric marks as separate tokens (the pre-merge
-    * vocabulary a byte-pair tokenizer starts from), top-50 by frequency. */
+    * vocabulary a byte-pair tokenizer starts from), top-50 by frequency.
+    *
+    * Kept as a hand form: the text calls DuckDB's `unnest`, which Spark does
+    * not have. */
   def q_text_tokens_re(s: SparkSession, d: String): DataFrame =
     Tables(s, d, "documents")
       .select(explode(expr(
@@ -45,7 +51,10 @@ object TextOps {
       .limit(50)
 
   /** [Q-text-quality] per-doc quality metrics: token count, avg token length,
-    * stopword ratio, composite score. Integer-derived doubles → exact. */
+    * stopword ratio, composite score. Integer-derived doubles → exact.
+    *
+    * Kept as a hand form: the text calls DuckDB's `string_split`, which Spark
+    * does not have. */
   def q_text_quality(s: SparkSession, d: String): DataFrame =
     Tables(s, d, "documents")
       .select(col("doc_id"), col("lang"),
@@ -62,7 +71,10 @@ object TextOps {
 
   /** [Q-text-langid] marker-token language ID (n-gram-heuristic stand-in):
     * counts membership of per-language marker words, argmax with fixed
-    * priority. Deterministic and SQL-expressible for the oracle. */
+    * priority. Deterministic and SQL-expressible for the oracle.
+    *
+    * Kept as a hand form: the text calls DuckDB's `list_filter`, which Spark
+    * does not have. */
   def q_text_langid(s: SparkSession, d: String): DataFrame = {
     def markers(ws: Seq[String]): Column = {
       val cond = ws.map(w => s"x = '$w'").mkString(" OR ")
@@ -92,7 +104,10 @@ object TextOps {
     * per-position lambda, NO SHUFFLE (the previous explode+groupBy shuffled
     * ~len rows per document — at 100 TB that's re-shuffling the corpus ×3).
     * The oracle keeps the position-enumeration formulation; the equality of
-    * the two countings is the cross-check. */
+    * the two countings is the cross-check.
+    *
+    * Kept as a hand form: the text calls DuckDB's `list_filter`, which Spark
+    * does not have. */
   def q_text_langid_ngram(s: SparkSession, d: String): DataFrame = {
     def occ(tri: String): Column =
       (length(col("text")) - length(replace(col("text"), lit(tri), lit("")))) / 3
@@ -112,7 +127,10 @@ object TextOps {
   /** [Q-text-redact] dictionary-based redaction: blocklist terms replaced
     * with a placeholder, per-doc hit count carried for audit — the
     * banned-term / PII-list scrubbing pass every training-data pipeline
-    * runs before export. Pure regexp expressions, row-local, no shuffle. */
+    * runs before export. Pure regexp expressions, row-local, no shuffle.
+    *
+    * Kept as a hand form: the text passes DuckDB's `'g'` flag to
+    * `regexp_replace`, which Spark reads as a position and rejects. */
   def q_text_redact(s: SparkSession, d: String): DataFrame = {
     val re = "\\b(customer|key|vector)\\b"
     Tables(s, d, "documents").select(
@@ -125,7 +143,10 @@ object TextOps {
     * budget (sum), exact token-count percentiles, average byte length — the
     * reporting pass that sizes a training mix. ONE keyed aggregate with
     * map-side partials; percentiles use the same exact interpolated
-    * `percentile` == `quantile_cont` correspondence as q_agg_quantile. */
+    * `percentile` == `quantile_cont` correspondence as q_agg_quantile.
+    *
+    * Kept as a hand form: the text calls DuckDB's `string_split`, which Spark
+    * does not have. */
   def q_text_stats(s: SparkSession, d: String): DataFrame =
     Tables(s, d, "documents")
       .select(col("lang"), size(tokens).as("nt"), length(col("text")).as("len"))
@@ -139,7 +160,10 @@ object TextOps {
   /** [Q-text-repetition] intra-document repetition ratio: 1 − distinct /
     * total 3-gram shingles — the "repetitive text" quality filter (looping
     * generations, boilerplate padding). Row-local, no shuffle. Docs shorter
-    * than one shingle score 0. */
+    * than one shingle score 0.
+    *
+    * Kept as a hand form: the text calls DuckDB's `string_split`, which Spark
+    * does not have. */
   def q_text_repetition(s: SparkSession, d: String): DataFrame =
     Tables(s, d, "documents")
       .select(col("doc_id"), size(tokens).as("n_tokens"),
@@ -153,7 +177,10 @@ object TextOps {
     * bounds, mean-word-length bounds, symbol ratio, minimum stopword
     * evidence — each rule emitted as a measure plus the composite keep
     * flag. Row-local, no shuffle; the shape of every rule-based corpus
-    * filter pass. */
+    * filter pass.
+    *
+    * Kept as a hand form: the text calls DuckDB's `string_split`, which Spark
+    * does not have. */
   def q_text_gopher(s: SparkSession, d: String): DataFrame =
     Tables(s, d, "documents")
       .select(col("doc_id"),
@@ -177,7 +204,10 @@ object TextOps {
     * equi-join whose left side is the corpus shingle stream and right side
     * the (much smaller, distinct) eval shingle set; never a text scan per
     * eval doc. The decontamination pass every serious training corpus
-    * runs. */
+    * runs.
+    *
+    * Kept as a hand form: the text calls DuckDB's `list_distinct`, which
+    * Spark does not have. */
   def q_text_decontaminate(s: SparkSession, d: String): DataFrame = {
     val sh = Tables(s, d, "documents")
       .select(col("doc_id"), explode(txt.shingle_hashes(col("text"), 8)).as("g"))
@@ -200,7 +230,10 @@ object TextOps {
     * the result is IDENTICAL to [[q_text_decontaminate]] and shares its
     * DuckDB oracle. The bloom reaches the tasks as a SCALAR SUBQUERY
     * (executed once, its result broadcast as a literal) — the same
-    * mechanism Spark's injected runtime filters use; no join carries it. */
+    * mechanism Spark's injected runtime filters use; no join carries it.
+    *
+    * Kept as a hand form: its oracle is q_text_decontaminate's text (the
+    * bloom prefilter loses nothing), which calls DuckDB's `list_distinct`. */
   def q_text_decontaminate_bloom(s: SparkSession, d: String): DataFrame = {
     val sh = Tables(s, d, "documents")
       .select(col("doc_id"), explode(txt.shingle_hashes(col("text"), 8)).as("g"))
@@ -221,7 +254,10 @@ object TextOps {
     * be one-partition sequential — the scale-killer — while sharded packing
     * runs one keyed window per shard and wastes at most one partial bin per
     * shard. This emits the assignment (shard, bin, offset); the actual
-    * concat/pad step is the writer's job. */
+    * concat/pad step is the writer's job.
+    *
+    * Kept as a hand form: the text calls DuckDB's `string_split`, which Spark
+    * does not have. */
   def q_pack(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val budget = 2048
@@ -243,7 +279,10 @@ object TextOps {
     * in production the candidates come from LSH/shingle blocking, never
     * all-pairs). Edit distance is O(len²) per pair, which is exactly why
     * it only ever runs on blocked candidates. Emits a similarity ratio
-    * 1 - dist/maxlen on a total order. */
+    * 1 - dist/maxlen on a total order.
+    *
+    * Kept as a hand form: the text gives the same result on Spark, but the
+    * LLM-pipeline forms have not been through the paired timing yet. */
   def q_text_editdist(s: SparkSession, d: String): DataFrame = {
     val docs = Tables(s, d, "documents")
       .filter(col("doc_id") < 30).select(col("doc_id"), col("text"))
@@ -266,7 +305,10 @@ object TextOps {
       " +", " "))
 
   /** [Q-text-normalize] text canonicalization audit: raw vs normalized
-    * length and the normalized digest (the dedup key for [Q-dedup-norm]). */
+    * length and the normalized digest (the dedup key for [Q-dedup-norm]).
+    *
+    * Kept as a hand form: the text passes DuckDB's `'g'` flag to
+    * `regexp_replace`, which Spark reads as a position and rejects. */
   def q_text_normalize(s: SparkSession, d: String): DataFrame =
     Tables(s, d, "documents").select(
       col("doc_id"),
@@ -285,7 +327,10 @@ object TextOps {
     *
     * The filters compare UNROUNDED doubles on both sides: each ratio is the
     * same two integer-derived operands divided in IEEE double, so the Spark
-    * and DuckDB decisions are bit-identical — no boundary flapping. */
+    * and DuckDB decisions are bit-identical — no boundary flapping.
+    *
+    * Kept as a hand form: the text's `count(*) FILTER (cond)` is DuckDB
+    * syntax; Spark needs `FILTER (WHERE cond)`. */
   def q_pipeline_clean(s: SparkSession, d: String): DataFrame = {
     val docs = Tables(s, d, "documents")
     val keeper = docs

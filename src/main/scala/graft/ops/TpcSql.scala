@@ -2,27 +2,34 @@ package graft.ops
 
 import java.util.Locale
 import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.{MultiInstanceRelation, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
 import org.apache.spark.sql.types.StructType
 
-/** One SQL text per generated-data TPC query, run by both engines.
+/** One SQL text per query, run by both engines: the fixture queries and
+  * the generated-data TPC queries alike.
   *
-  * Each text in [[Tpcds]] / [[TpchFull]] is written once against a
-  * [[Dialect]] and rendered twice:
+  * A fixture text (`SparkEntry.fixtureSql`) reads bare table names.
+  * DuckDB runs it over bare-name views of the fixture tables
+  * (tools/check.py); Spark runs it through [[dataFrame]] with
+  * `graft.Tables` as the resolver, which keeps the `events.ts`
+  * normalisation.
+  *
+  * A generated-data text in [[Tpcds]] / [[TpchFull]] is written once
+  * against a [[Dialect]] and rendered twice:
   *   - for DuckDB ([[duckdb]]), every table is a parquet glob pinned to the
   *     generated cache at [[oracleScale]] (the `*_pub` twins' tables at
-  *     their pinned scale), and staged CTEs read `AS MATERIALIZED`. This is
-  *     the `SparkEntry.oracleSql` the correctness gate runs.
+  *     their pinned scale), and staged CTEs read `AS MATERIALIZED`.
   *   - for Spark ([[spark]]), every table is its bare name, CTEs carry no
   *     staging hint and integer division is `div` (DuckDB's `//`).
-  *     [[dataFrame]] parses the text with the session's own parser and
-  *     replaces each table name with its [[graft.Catalog]] read.
+  *     [[dataFrame]] resolves each name with [[catalog]], a
+  *     [[graft.Catalog]] read against the declared schema.
   *
-  * So the gate compares two engines running the same text. Scale hints
-  * that matter to Spark live in the text as `/*+ BROADCAST(x) */`, which
-  * DuckDB reads as a comment.
+  * So the gate compares two engines running the same text, and a query
+  * keeps a hand-written DataFrame form only where its doc says why. Scale
+  * hints that matter to Spark live in the text as `/*+ BROADCAST(x) */`,
+  * which DuckDB reads as a comment.
   */
 object TpcSql {
   /** The one fixture scale whose generated data the DuckDB renderings
@@ -56,35 +63,33 @@ object TpcSql {
         s"$name's oracle is pinned to $oracleScale-generated data; verifying " +
           s"at '$sfDir' would compare against the wrong scale. Run Verify at $oracleScale.")
 
-  /** `text` (rendered by [[spark]]) as a DataFrame over the tables under
-    * `dir`. Every table name the text reads — in the main query, CTE bodies
-    * and subquery expressions alike, unless a CTE of that name is in scope
-    * — becomes a [[graft.Catalog]] read of `dir/<name>.parquet` with its
-    * `declared` schema. A name with no declaration throws
-    * IllegalArgumentException naming it. Nothing touches the session: no
-    * temp view, no conf write, no job (the catalog reads one footer per
-    * table in-process and caches it).
+  /** `text` as a DataFrame whose tables come from `resolve`. Every table
+    * name the text reads — in the main query, CTE bodies and subquery
+    * expressions alike, unless a CTE of that name is in scope — becomes
+    * `resolve(name)`, called once per reference so each reference gets its
+    * own attribute ids (a self-join reads two relations). A name `resolve`
+    * does not know throws IllegalArgumentException naming it. Parsing and
+    * substitution register no temp view and run no job; whatever else
+    * touches the session is the resolver's ([[catalog]] reads one footer
+    * per table in-process and caches it).
     *
-    * The texts sum money as exact long cents (`CAST(x * 100 AS BIGINT)`),
-    * so the session must have ANSI mode on ([[requireAnsi]]). */
-  def dataFrame(spark: SparkSession, text: String, dir: String,
-                declared: String => Option[StructType]): DataFrame = {
+    * The texts sum money as exact long cents (`CAST(x * 100 AS BIGINT)`) or
+    * as narrow decimals, so the session must have ANSI mode on
+    * ([[requireAnsi]]). */
+  def dataFrame(spark: SparkSession, text: String, resolve: String => DataFrame): DataFrame = {
     requireAnsi(spark)
-    val reads = scala.collection.mutable.Map.empty[String, LogicalPlan]
-    def table(name: String): LogicalPlan = {
-      val schema = declared(name).getOrElse(throw new IllegalArgumentException(
-        s"table '$name' in the query text has no declared schema"))
-      val read = reads.getOrElseUpdate(name,
-        graft.Catalog.table(spark, s"$dir/$name.parquet", schema).queryExecution.logical)
-      // each reference gets its own attribute ids, as a fresh read would
-      SubqueryAlias(name, read match {
-        case r: MultiInstanceRelation => r.newInstance()
-        case p => p
-      })
-    }
+    def table(name: String): LogicalPlan =
+      SubqueryAlias(name, resolve(name).queryExecution.analyzed)
     GraftColumnBridge.ofRows(spark,
       substitute(spark.sessionState.sqlParser.parsePlan(text), Set.empty, table))
   }
+
+  /** A resolver over the tables under `dir` whose schemas `declared` knows:
+    * each is a [[graft.Catalog]] read of `dir/<name>.parquet`. */
+  def catalog(spark: SparkSession, dir: String, declared: String => Option[StructType])(
+      name: String): DataFrame =
+    graft.Catalog.table(spark, s"$dir/$name.parquet", declared(name).getOrElse(
+      throw new IllegalArgumentException(s"table '$name' in the query text has no declared schema")))
 
   /** Long-cents money sums (the texts' `CAST(x * 100 AS BIGINT)`, the hand
     * forms' `Tpcds.centsL`) document ANSI's loud error as their overflow
@@ -114,7 +119,7 @@ object TpcSql {
       if (ctes(name)) u else table(name)
     case u: UnresolvedRelation =>
       throw new IllegalArgumentException(
-        s"table '${u.multipartIdentifier.mkString(".")}' in the query text is not a bare TPC table name")
+        s"table '${u.multipartIdentifier.mkString(".")}' in the query text is not a bare table name")
     case p =>
       p.mapChildren(substitute(_, ctes, table)).transformExpressions {
         case s: SubqueryExpression => s.withNewPlan(substitute(s.plan, ctes, table))

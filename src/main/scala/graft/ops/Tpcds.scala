@@ -862,10 +862,13 @@ object Tpcds {
     * single-partition exchange carries ≤ 10·P rows, not the frame.
     * [[Scale.globalRank]]/[[Scale.topKRank]] remain the escape hatches
     * for shapes the pushdown can't serve.
-    * Kept as a hand form: Materialize barrier (one store_sales scan instead
-    * of two). At sf0.1 the text is faster (0.85x: hand 0.50 s, text 0.43 s,
-    * median of 5 interleaved runs, local[4]); re-measure at sf1 before
-    * converting. */
+    * Kept as a hand form: PlanGuardSpec "every unfenced declared query
+    * plans keyed joins only" — the text attaches the baseline by a comma
+    * join with a non-equi condition, which plans BroadcastNestedLoopJoin.
+    * The Materialize barrier does not pay on its own: the text runs 0.91x
+    * this form's time at sf0.1 (hand 0.44 s, text 0.40 s) and 0.92x at sf1
+    * (hand 0.88 s, text 0.81 s; min over 3 alternating cross-commit JVMs of
+    * the median warm rep, local[4]). */
   def q_tpcds_q44(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = ensure(spark, sfDir)
     // Hash-stable discipline (SURVEY §7.4): profit summed as exact integer
@@ -4265,9 +4268,9 @@ object Tpcds {
   /** `name`'s text run on Spark over the fixture-matched generated cache
     * (a pub twin's over its pinned one). */
   private def sql(name: String)(spark: SparkSession, sfDir: String): DataFrame =
-    TpcSql.dataFrame(spark, sparkTexts(name),
+    TpcSql.dataFrame(spark, sparkTexts(name), TpcSql.catalog(spark,
       if (pubTwins(name)) pubDir(spark) else ensure(spark, sfDir),
-      n => Option.when(graft.schema.TpcdsSchemas.tableNames.contains(n))(graft.schema.TpcdsSchemas(n)))
+      n => Option.when(graft.schema.TpcdsSchemas.tableNames.contains(n))(graft.schema.TpcdsSchemas(n))))
 
   /** SparkEntry glue: every declared q_tpcds_* runs its one text
     * ([[TpcSql]]) unless it keeps a hand-written form below. */

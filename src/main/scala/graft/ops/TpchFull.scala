@@ -150,9 +150,9 @@ object TpchFull {
   }
 
   /** [Q-tpch-q22-full] TPC-H Q22 with the PUBLISHED phone-prefix country
-    * codes — the twin of the fixture-adapted [[Tpch.q_tpch_q22]] (the
-    * fixture has no c_phone; the generated one carries the spec's
-    * 'CC-nnn-nnn-nnnn' shape). Positive-balance average over the 7-code
+    * codes — the twin of the fixture-adapted `q_tpch_q22` text in
+    * [[graft.SparkEntry.fixtureSql]] (the fixture has no c_phone; the
+    * generated one carries the spec's 'CC-nnn-nnn-nnnn' shape). Positive-balance average over the 7-code
     * cohort attaches as a 1-row broadcast HASH join on a nullable-derived
     * key; NOT EXISTS folds to LEFT ANTI on the customer key.
     * Kept as a hand form: the text runs 1.15x its time at sf0.1 (hand 0.25
@@ -180,8 +180,8 @@ object TpchFull {
 
   /** `name`'s text run on Spark over the fixture-matched generated cache. */
   private def sql(name: String)(s: SparkSession, d: String): DataFrame =
-    TpcSql.dataFrame(s, sparkTexts(name), ensure(s, d),
-      n => Option.when(TpchSchemas.tableNames.contains(n))(TpchSchemas.stored(n)))
+    TpcSql.dataFrame(s, sparkTexts(name), TpcSql.catalog(s, ensure(s, d),
+      n => Option.when(TpchSchemas.tableNames.contains(n))(TpchSchemas.stored(n))))
 
   /** Every declared query runs its one text ([[TpcSql]]) unless it keeps a
     * hand-written form below. */
@@ -291,7 +291,8 @@ object TpchFull {
          |GROUP BY l_shipmode""".stripMargin,
     // [Q-tpch-q4-full] TPC-H Q4 with the PUBLISHED late-line predicate
     // (l_commitdate < l_receiptdate) over the generated full-schema parquet —
-    // the published-predicate twin of the fixture-adapted [[Tpch.q_tpch_q4]].
+    // the published-predicate twin of the fixture-adapted `q_tpch_q4` text
+    // in [[graft.SparkEntry.fixtureSql]].
     "q_tpch_q4_full" ->
       s"""SELECT o_orderpriority, count(*) AS order_count FROM ${P("orders")}
          |WHERE o_orderdate >= DATE '1993-07-01'
@@ -301,9 +302,9 @@ object TpchFull {
          |GROUP BY o_orderpriority""".stripMargin,
     // [Q-tpch-q21-full] TPC-H Q21 with the PUBLISHED fault predicate
     // (l_receiptdate > l_commitdate) and nation/status filters — the twin of
-    // the fixture-adapted [[Tpch.q_tpch_q21]]; the published correlated
-    // EXISTS (another supplier) AND NOT EXISTS (another faulty supplier)
-    // decorrelate to semi/anti joins on the order key.
+    // the fixture-adapted `q_tpch_q21` text (SparkEntry.fixtureSql); the
+    // published correlated EXISTS (another supplier) AND NOT EXISTS (another
+    // faulty supplier) decorrelate to semi/anti joins on the order key.
     "q_tpch_q21_full" ->
       s"""SELECT s_name, count(*) AS numwait
          |FROM ${P("lineitem")} l1, ${P("orders")}, ${P("supplier")}, ${P("nation")}
@@ -327,7 +328,8 @@ object TpchFull {
          |  FROM ${P("lineitem")} l2 WHERE l2.l_partkey = p_partkey)""".stripMargin,
     // [Q-tpch-q19-full] TPC-H Q19 with the PUBLISHED three-branch disjunction
     // (brand × container-class × quantity band × size band × air shipping, in
-    // person) — the twin of the fixture-adapted [[Tpch.q_tpch_q19]].
+    // person) — the twin of the fixture-adapted `q_tpch_q19` text in
+    // [[graft.SparkEntry.fixtureSql]].
     "q_tpch_q19_full" ->
       s"""SELECT CAST(sum(l_extendedprice * (1 - l_discount)) AS DOUBLE) AS revenue
          |FROM ${P("lineitem")}, ${P("part")}

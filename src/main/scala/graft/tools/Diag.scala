@@ -44,7 +44,8 @@ object Diag {
       |  names <tpcds-generated|tpchfull>
       |      declared query names on one line (for shell sweeps)
       |  gentime <tpch|tpcds> <sf> <partitions> [table...]
-      |      per-table generation wall (GRAFT_DEBUG_CODEGEN=1 prints code)
+      |      per-table generation wall, cold and warm, of the frame the
+      |      writers build (GRAFT_DEBUG_CODEGEN=1 prints code)
       |  warm <sfName...>
       |      build the TPC-DS gen cache at each scale (e.g. sf0.01 sf1)
       |  controlcal [reps]
@@ -96,15 +97,14 @@ object Diag {
         val ts = if (tables.isEmpty) gen.tableNames else tables
         ok(withSession() { spark =>
           ts.foreach { t =>
-            val secs = time {
-              val df = gen.table(spark, t, scale, p)
-              if (sys.env.contains("GRAFT_DEBUG_CODEGEN")) {
-                import org.apache.spark.sql.execution.debug._
-                df.debugCodegen()
-              }
-              noop(df)
+            if (sys.env.contains("GRAFT_DEBUG_CODEGEN")) {
+              import org.apache.spark.sql.execution.debug._
+              genFrame(spark, gen, t, scale, p).debugCodegen()
             }
-            println(f"[gentime] $t%-24s $secs%.2f")
+            def run(): Double = time(noop(genFrame(spark, gen, t, scale, p)))
+            val cold = run() // pays this table's first compiles
+            val warm = run()
+            println(f"[gentime] $t%-24s cold $cold%.2f warm $warm%.2f")
           }
         })
       case Seq("warm", sfs @ _*) =>
@@ -278,6 +278,13 @@ object Diag {
       val (as, bs) = Seq.fill(reps)((run(a), run(b))).unzip
       println(f"[confab] $n%-22s A=${median(as)}%.2f B=${median(bs)}%.2f  (A: ${fmt(as)} | B: ${fmt(bs)})")
     }
+
+  /** Table `t` of `gen` at scale `sf` as its writers build it: on the
+    * generation session (whole-stage codegen off), split into the parts
+    * they write for a ceiling of `p` ([[graft.gen.GenUtil.partitionsFor]]). */
+  private[graft] def genFrame(spark: SparkSession, gen: graft.gen.Generator, t: String,
+                              sf: Double, p: Int): DataFrame =
+    gen.sized(graft.gen.GenUtil.generationSession(spark), t, sf, p)
 
   /** Plan audit: keyed joins (no BroadcastNestedLoopJoin outside fenced
     * baselines), filters pushed to the scan, pruned columns, wide codegen

@@ -53,12 +53,40 @@ class CatalogSpec extends AnyFunSuite {
   test("an undeclared table name in a query text fails construction, naming the table") {
     val dir = graft.ops.Tpcds.ensure(spark, TestSpark.sf0001)
     def declared(n: String) = Option.when(TpcdsSchemas.tableNames.contains(n))(TpcdsSchemas(n))
+    val resolve = graft.ops.TpcSql.catalog(spark, dir, declared) _
     val e = intercept[IllegalArgumentException](graft.ops.TpcSql.dataFrame(spark,
-      "SELECT count(*) FROM store_sales JOIN stores ON ss_store_sk = s_store_sk", dir, declared))
+      "SELECT count(*) FROM store_sales JOIN stores ON ss_store_sk = s_store_sk", resolve))
     assert(e.getMessage.contains("'stores'"), e.getMessage)
     // a CTE of that name shadows the table, so the same text with one parses
     graft.ops.TpcSql.dataFrame(spark, "WITH stores AS (SELECT * FROM store) " +
-      "SELECT count(*) FROM store_sales JOIN stores ON ss_store_sk = s_store_sk", dir, declared)
+      "SELECT count(*) FROM store_sales JOIN stores ON ss_store_sk = s_store_sk", resolve)
+  }
+
+  test("a fixture text reads each table reference as its own relation") {
+    import org.apache.spark.sql.functions.col
+    val dir = TestSpark.sf0001
+    val resolved = scala.collection.mutable.Buffer.empty[String]
+    val text = graft.ops.TpcSql.dataFrame(spark, "SELECT count(*) AS n FROM events a " +
+      "JOIN events b ON a.user_id = b.user_id AND a.ts < b.ts",
+      n => { resolved += n; Tables(spark, dir, n) })
+    assert(resolved == Seq("events", "events"))
+    val (a, b) = (Tables(spark, dir, "events").as("a"), Tables(spark, dir, "events").as("b"))
+    val hand = a.join(b, col("a.user_id") === col("b.user_id") && col("a.ts") < col("b.ts")).count()
+    assert(hand > 0)
+    assert(text.head().getLong(0) == hand)
+  }
+
+  test("an unknown fixture table name in a text fails construction, naming the table") {
+    val e = intercept[IllegalArgumentException](graft.ops.TpcSql.dataFrame(spark,
+      "SELECT count(*) FROM orders JOIN order_lines ON o_orderkey = l_orderkey",
+      Tables(spark, TestSpark.sf0001, _)))
+    assert(e.getMessage.contains("order_lines"), e.getMessage)
+  }
+
+  test("every kept fixture hand form has a fixture text, and no rows-only query has one") {
+    val stale = SparkEntry.hand.keySet -- SparkEntry.fixtureSql.keySet
+    assert(stale.isEmpty, s"hand forms with no text: ${stale.mkString(", ")}")
+    assert((SparkEntry.rowsOnly.keySet & SparkEntry.fixtureSql.keySet).isEmpty)
   }
 
   test("a mistyped or undeclared column fails the read, naming the column") {

@@ -39,4 +39,11 @@ class ConstructionSpec extends AnyFunSuite {
     assert(views == v0)
     assert(spark.conf.getAll == c0)
   }
+
+  test("building every declared query leaves the session with no temp view") {
+    val fresh = spark.newSession()
+    SparkEntry.queries.values.foreach(_(fresh, TestSpark.sf0001))
+    val views = fresh.catalog.listTables().collect().filter(_.isTemporary).map(_.name)
+    assert(views.isEmpty, s"temp views left behind: ${views.mkString(", ")}")
+  }
 }

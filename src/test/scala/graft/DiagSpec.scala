@@ -6,7 +6,8 @@ import graft.tools.Diag
 
 /** The parts of graft's mains that run before or without a session: Diag's
   * argument checks and name lists, the session factory's settings, and the
-  * oracle slice Verify and `Diag dump` write. */
+  * oracle slice Verify and `Diag dump` write; and the frame `Diag gentime`
+  * times. */
 class DiagSpec extends AnyFunSuite {
   test("an unknown subcommand or missing arguments throw with the usage text") {
     for (args <- Seq(Seq(), Seq("bogus"), Seq("stats"), Seq("stats", "/d", "3"),
@@ -56,5 +57,18 @@ class DiagSpec extends AnyFunSuite {
     assert(json.size == 2)
     assert(json.get("q_a").asText == text)
     assert(json.get("q_b").asText == "SELECT 2")
+  }
+
+  test("gentime times the frame the writers write: codegen off, the writers' part count") {
+    val spark = TestSpark.spark
+    val gen = graft.gen.TpcdsGen
+    val (sf, ceiling) = (0.01, 8)
+    val df = Diag.genFrame(spark, gen, "store_sales", sf, ceiling)
+    val parts = graft.gen.GenUtil.partitionsFor(gen.rowCount("store_sales", sf), ceiling)
+    assert(parts < ceiling, "the test table must write fewer parts than the ceiling")
+    assert(df.rdd.getNumPartitions == parts)
+    val plan = df.queryExecution.executedPlan
+    assert(plan.collect { case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w }
+      .isEmpty && !plan.toString.contains("*("), plan.toString)
   }
 }
