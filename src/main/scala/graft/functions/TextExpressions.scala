@@ -21,9 +21,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * arrays per row, and profiling shows it dominating the row-local cost of
   * the dedup family (q_text_repetition: 1.3 s vs 0.26 s for a comparable
   * non-shingle scan at sf0.1). This expression produces the IDENTICAL result
-  * in one tight JVM loop: tokenize on single spaces, hash each k-token
-  * shingle with xxhash64 seed 42 (Spark's xxhash64 seed, over the same
-  * UTF-8 bytes — so values are bit-equal to the HOF form, asserted in
+  * in one tight JVM loop: find the single-space token boundaries on the
+  * UTF-8 bytes ([[SpaceTokens]]), hash each k-token shingle's byte range in
+  * place with xxhash64 seed 42 (Spark's xxhash64 seed, over the same UTF-8
+  * bytes — so values are bit-equal to the HOF form, asserted in
   * FunctionsSpec), dedup via a hash set preserving first-occurrence order
   * (array_distinct's order).
   *
@@ -42,32 +43,18 @@ case class ShingleHashes(child: Expression, k: Int) extends UnaryExpression {
       s"expected string input, got ${other.simpleString}")
   }
 
-  private def hashOf(str: String): Long = {
-    val b = str.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    XXH64.hashUnsafeBytes(b, Platform.BYTE_ARRAY_OFFSET, b.length, 42L)
-  }
-
   def compute(s: UTF8String): Any = {
-    val text = s.toString
-    // String.split(" ", -1) matches Spark's split(text, ' ') exactly
-    // (trailing empties kept; the pattern has no regex metacharacters)
-    val toks = text.split(" ", -1)
-    val n = toks.length
-    if (n < k) return new GenericArrayData(Array(hashOf(text)))
+    val text = SpaceTokens.utf8(s)
+    val cuts = SpaceTokens.cuts(text)
+    val n = cuts.length - 1
+    if (n < k) return new GenericArrayData(Array(SpaceTokens.hash(text, 0, text.numBytes)))
     val seen = new java.util.HashSet[java.lang.Long](math.min(n, 1024))
     val out = new Array[Long](n - k + 1)
     var m = 0
-    val sb = new java.lang.StringBuilder
     var i = 0
     while (i <= n - k) {
-      sb.setLength(0)
-      var j = 0
-      while (j < k) {
-        if (j > 0) sb.append(' ')
-        sb.append(toks(i + j))
-        j += 1
-      }
-      val h = hashOf(sb.toString)
+      // tokens i until i + k, with the single spaces between them
+      val h = SpaceTokens.hash(text, cuts(i) + 1, cuts(i + k))
       if (seen.add(h)) { out(m) = h; m += 1 }
       i += 1
     }
@@ -87,14 +74,58 @@ case class ShingleHashes(child: Expression, k: Int) extends UnaryExpression {
     copy(child = newChild)
 }
 
+/** The single-space tokens of a text, read on its UTF-8 bytes in place —
+  * the tokens of Spark's `split(text, ' ')`, with no decode, `String`
+  * split or re-encode per row.
+  *
+  * Spark's split decodes the bytes (an invalid sequence becomes U+FFFD)
+  * and re-encodes each token, so [[utf8]] re-encodes text that is not
+  * valid UTF-8 once up front; valid text (a 0x20 byte never occurs inside
+  * a multi-byte sequence) is used as it is. */
+private object SpaceTokens {
+  /** `s` itself when it is valid UTF-8, else its decoded and re-encoded
+    * bytes. */
+  def utf8(s: UTF8String): UTF8String =
+    if (s.isValid) s else UTF8String.fromString(s.toString)
+
+  /** Token boundaries of `s`: token i spans bytes `cuts(i) + 1` until
+    * `cuts(i + 1)` (`cuts(0) = -1`, the last entry is the byte length), so
+    * tokens i until j span `cuts(i) + 1` until `cuts(j)`, the spaces
+    * between them included. Empty tokens count, as in `split`. */
+  def cuts(s: UTF8String): Array[Int] = {
+    val (base, off, len) = (s.getBaseObject, s.getBaseOffset, s.numBytes)
+    var spaces = 0
+    var i = 0
+    while (i < len) {
+      if (Platform.getByte(base, off + i) == ' ') spaces += 1
+      i += 1
+    }
+    val cuts = new Array[Int](spaces + 2)
+    cuts(0) = -1
+    var t = 1
+    i = 0
+    while (i < len) {
+      if (Platform.getByte(base, off + i) == ' ') { cuts(t) = i; t += 1 }
+      i += 1
+    }
+    cuts(t) = len
+    cuts
+  }
+
+  /** xxhash64 (seed 42, Spark's) of bytes `from` until `until` of `s`. */
+  def hash(s: UTF8String, from: Int, until: Int): Long =
+    XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset + from, until - from, 42L)
+}
+
 /** 64-bit SimHash of space-tokenized text — ROW-LOCAL.
   *
   * Replicates the aggregate formulation exactly (token hash = xxhash64 seed
   * 42 of the token's UTF-8 bytes; per-bit weight = Σ ±term_frequency; bit set
   * when the weight is ≥ 0), but where the aggregate version shuffles the
   * corpus twice (groupBy(doc, token) then 64 bit-sums per doc), this computes
-  * the whole signature inside the row projection: tokenize, count term
-  * frequencies in a local map, one 64-lane weight pass per distinct token.
+  * the whole signature inside the row projection: tokenize on the bytes
+  * ([[SpaceTokens]]), count term frequencies in a local map, one 64-lane
+  * weight pass per distinct token.
   * At 100 TB that is the difference between re-shuffling every token of the
   * corpus and a map-only pass. Bit-equality with the aggregate form is
   * asserted in FunctionsSpec.
@@ -111,13 +142,13 @@ case class SimHash64(child: Expression) extends UnaryExpression {
   }
 
   def compute(s: UTF8String): Long = {
-    val toks = s.toString.split(" ", -1)
-    val freq = new java.util.HashMap[java.lang.Long, Int](math.min(toks.length * 2, 2048))
+    val text = SpaceTokens.utf8(s)
+    val cuts = SpaceTokens.cuts(text)
+    val n = cuts.length - 1
+    val freq = new java.util.HashMap[java.lang.Long, Int](math.min(n * 2, 2048))
     var i = 0
-    while (i < toks.length) {
-      val b = toks(i).getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      val h = XXH64.hashUnsafeBytes(b, Platform.BYTE_ARRAY_OFFSET, b.length, 42L)
-      freq.merge(h, 1, Integer.sum _)
+    while (i < n) {
+      freq.merge(SpaceTokens.hash(text, cuts(i) + 1, cuts(i + 1)), 1, Integer.sum _)
       i += 1
     }
     val w = new Array[Long](64)

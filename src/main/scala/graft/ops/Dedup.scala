@@ -34,20 +34,6 @@ object Dedup {
       .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
       .select(col("text_md5"), col("keep_id"), col("n_copies"))
 
-  /** [Q-dedup-norm] exact dedup on CANONICALIZED text (TextOps.normExpr:
-    * lowercase, punctuation→space, whitespace collapse) — catches the
-    * formatting-only near-dups exact byte dedup misses while staying one
-    * hash aggregate keyed on a 128-bit digest (the same 100 TB shape as
-    * [Q-dedup-exact]: the shuffle moves 32-byte keys, never documents).
-    *
-    * Kept as a hand form: the text passes DuckDB's `'g'` flag to
-    * `regexp_replace`, which Spark reads as a position and rejects. */
-  def q_dedup_norm(s: SparkSession, d: String): DataFrame =
-    Tables(s, d, "documents")
-      .groupBy(md5(TextOps.normExpr).as("norm_md5"))
-      .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
-      .select(col("norm_md5"), col("keep_id"), col("n_copies"))
-
   /** MinHash signatures: `perms` hash permutations in `bands` bands.
     * One shingle row carries all `perms` hashes as SEPARATE min-aggregate
     * columns, so the whole signature reduces in a SINGLE hash-aggregate
@@ -377,8 +363,10 @@ object Dedup {
     * this row, drop those". Singleton docs form their own cluster.
     * DuckDB-oracle-matched (recursive-CTE transitive closure).
     *
-    * Kept as a hand form: the text is a recursive CTE (`WITH RECURSIVE
-    * reach`), which the Spark text path does not resolve. */
+    * Kept as a hand form: the text calls DuckDB's `list_distinct`, which
+    * Spark does not have. Past it, Spark 4.1 refuses the recursive CTE's
+    * `UNION` (UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE: it takes `UNION ALL`
+    * only), and the closure needs UNION's dedup to terminate on a cycle. */
   def q_dedup_cluster(s: SparkSession, d: String): DataFrame = {
     val docs = Tables(s, d, "documents")
     val labels = connectedComponents(ngramPairs(docs, 0.5))

@@ -74,18 +74,6 @@ object Multimodal {
         r.doc_id, r.payload.length, decodeStubJvm(r.payload, dim), r.source)))
   }
 
-  /** [Q-mm-meta] binary-column metadata path — oracle-matched (byte length
-    * is engine-independent; the fake-decode features are not, so they stay
-    * out of the declared query).
-    *
-    * Kept as a hand form: the text's `BLOB` type is DuckDB's. */
-  def q_mm_meta(s: SparkSession, d: String): DataFrame =
-    asBinaryTable(s, d).select(
-      col("doc_id"),
-      length(col("payload")).as("n_bytes"),
-      col("meta.source").as("source"),
-      col("meta.lang").as("lang"))
-
   /** [Q-mm-features] fake-decode feature vectors (rows-only check). */
   def q_mm_features(s: SparkSession, d: String): DataFrame =
     features(s, d).select(col("doc_id"), col("n_bytes"),

@@ -143,56 +143,6 @@ object Relational {
       approx_count_distinct(col("l_partkey")).as("approx_parts"),
       count(lit(1)).as("n_rows"))
 
-  /** [Q-agg-pivot] pivot events into one count column per event type (with
-    * explicit pivot values — at scale, enumerating values avoids the extra
-    * distinct-collection job pivot otherwise runs on the driver). Absent
-    * (user, type) combos fill to 0 to match conditional-count semantics.
-    *
-    * Kept as a hand form: the text's `count(*) FILTER (cond)` is DuckDB
-    * syntax; Spark needs `FILTER (WHERE cond)`. */
-  def q_agg_pivot(s: SparkSession, d: String): DataFrame = {
-    val types = Seq("click", "view", "purchase", "signup", "error")
-    t(s, d, "events")
-      .groupBy("user_id")
-      .pivot("event_type", types)
-      .agg(count(lit(1)))
-      .na.fill(0L, types)
-  }
-
-  /** Hard fence for the exact-percentile oracle baseline: Spark's exact
-    * `percentile` buffers EVERY group value in the aggregation buffer —
-    * with 5 priority groups that is n/5 doubles in one task's memory, an
-    * OOM-class plan at production scale. Same policy as the all-pairs
-    * embed baseline ([[Similarity.embedBaselineMaxRows]]): throw rather
-    * than silently run it big. The scale path is [[q_agg_approx_quantile]]
-    * (mergeable GK sketch, bounded memory). */
-  val exactQuantileMaxRows: Long = 10000000L
-
-  /** [Q-agg-quantile] exact interpolated percentiles per group (Spark
-    * `percentile` == DuckDB `quantile_cont`). FENCED oracle baseline: the
-    * row-count guard refuses input where the per-group value buffer would
-    * be memory-unsafe. The count comes from parquet FOOTERS read driver-side
-    * ([[graft.Tables.footerRowCount]], cached per dir) — zero Spark jobs, so
-    * the fence adds nothing to the measured query path. The scalable variant
-    * is [[q_agg_approx_quantile]] (t-digest/GK — same API shape,
-    * sketch-mergeable, no full sort per group).
-    *
-    * Kept as a hand form: the text calls DuckDB's `quantile_cont`, which
-    * Spark does not have. */
-  def q_agg_quantile(s: SparkSession, d: String): DataFrame = {
-    val orders = t(s, d, "orders")
-    val n = graft.Tables.footerRowCount(s, d, "orders")
-    require(n <= exactQuantileMaxRows,
-      s"q_agg_quantile is the fenced exact-percentile oracle baseline; input " +
-        s"has $n rows (max $exactQuantileMaxRows). Use q_agg_approx_quantile at scale.")
-    orders
-      .groupBy("o_orderpriority")
-      .agg(expr("percentile(o_totalprice, 0.5)").as("p50"),
-        expr("percentile(o_totalprice, 0.9)").as("p90"),
-        expr("percentile(o_totalprice, 0.99)").as("p99"),
-        count(lit(1)).as("n"))
-  }
-
   // ---- §2.6 window functions ----------------------------------------------
 
   /** [Q-win-rank2] scale-safe two-phase rank: the low-cardinality-window
@@ -325,42 +275,12 @@ object Relational {
       concat(col("p_brand"), lit("#"), col("p_type")).as("brand_type"),
       col("p_name").like("%a%").as("has_a"))
 
-  /** [Q-agg-bool] boolean aggregate family: conditional count, universally/
-    * existentially quantified predicates per group.
-    *
-    * Kept as a hand form: the text's `count(*) FILTER (cond)` is DuckDB
-    * syntax; Spark needs `FILTER (WHERE cond)`. */
-  def q_agg_bool(s: SparkSession, d: String): DataFrame =
-    t(s, d, "orders")
-      .groupBy("o_orderpriority")
-      .agg(expr("count_if(o_totalprice > 300000)").as("n_big"),
-        expr("bool_and(o_totalprice > 900)").as("all_above_min"),
-        expr("bool_or(o_totalprice > 500000)").as("any_huge"),
-        count(lit(1)).as("n"))
-
-  /** [Q-fn-bitwise] bitwise function family: and/or/xor, shifts, popcount
-    * — exact integer ops, row-local, cross-engine deterministic (unlike
-    * libm-backed float math, which differs per implementation and is
-    * deliberately NOT oracle-matched).
-    *
-    * Kept as a hand form: the text calls DuckDB's `xor`, which Spark does not
-    * have. */
-  def q_fn_bitwise(s: SparkSession, d: String): DataFrame =
-    t(s, d, "orders").select(
-      col("o_orderkey"),
-      (col("o_orderkey").bitwiseAND(lit(255L))).as("k_and"),
-      (col("o_orderkey").bitwiseOR(lit(4096L))).as("k_or"),
-      (col("o_orderkey").bitwiseXOR(col("o_custkey"))).as("k_xor"),
-      shiftleft(col("o_orderkey"), 3).as("k_shl"),
-      shiftright(col("o_orderkey"), 2).as("k_shr"),
-      expr("bit_count(o_orderkey)").as("k_bits"))
-
   /** [Q-fn-map] map functions: parse props into map<string,bigint>, explode
     * to (k, v) rows, aggregate per key. from_json → MapType + generator
     * explode is the §2.8 map-family surface.
     *
-    * Kept as a hand form: the text calls DuckDB's `unnest`, which Spark does
-    * not have. */
+    * Kept as a hand form: the text calls DuckDB's `json_keys`, which Spark
+    * does not have. */
   def q_fn_map(s: SparkSession, d: String): DataFrame =
     t(s, d, "events")
       .select(explode(from_json(col("props"), "map<string,bigint>",
@@ -370,8 +290,13 @@ object Relational {
 
   /** [Q-fn-json] JSON extraction over events.props.
     *
-    * Kept as a hand form: the text calls DuckDB's `json_extract_string`,
-    * which Spark does not have. */
+    * Kept as a hand form: the text runs 1.13x this form's time at sf0.1
+    * (hand 0.23 s, text 0.26 s) and 1.17x at sf1 (hand 0.70 s, text
+    * 0.82 s). The text sums value at DECIMAL(10,2) where this form sums at
+    * DECIMAL(8,2), Spark's compact-long sum path ([[dec8]]). Paired
+    * cross-commit timing: min over 6 alternating JVMs per side of the
+    * median of 5-9 warm reps (3-5 at sf1, the 10x fixture replica),
+    * local[4]. */
   def q_fn_json(s: SparkSession, d: String): DataFrame =
     t(s, d, "events")
       .select(get_json_object(col("props"), "$.k").cast(IntegerType).as("k"), col("value"))
@@ -407,24 +332,6 @@ object Relational {
       .join(broadcast(t(s, d, "region")), col("n_regionkey") === col("r_regionkey"))
       .groupBy("r_name")
       .agg(array_join(array_sort(collect_list(col("n_name"))), ",").as("nations"),
-        count(lit(1)).as("n"))
-
-  /** [Q-agg-argmax] groupwise argmax/argmin (max_by / arg_max): the event id
-    * carrying each user's max and min value — ONE hash aggregate, no window,
-    * no self-join (the classic "row with the max" shapes that beginners
-    * write as a subquery rerun the scan; max_by folds it into the partial
-    * aggregation). Tie-break: the ranking value is value·10¹⁰ + event_id —
-    * fixture values have 2 decimals and ids stay < 10¹⁰−¹⁰⁴ ulp-exact in a
-    * double, so equal values deterministically resolve by id.
-    *
-    * Kept as a hand form: the text calls DuckDB's `arg_max`, which Spark does
-    * not have. */
-  def q_agg_argmax(s: SparkSession, d: String): DataFrame =
-    t(s, d, "events").groupBy("user_id")
-      .agg(expr("max_by(event_id, value * 10000000000D + event_id)").as("ev_max"),
-        expr("min_by(event_id, value * 10000000000D + event_id)").as("ev_min"),
-        max(col("value")).as("max_v"),
-        min(col("value")).as("min_v"),
         count(lit(1)).as("n"))
 
   /** [Q-fn-interval] interval / timestamp arithmetic family: interval add,
@@ -463,20 +370,6 @@ object Relational {
       .select(col("event_id"), col("user_id"), col("sid"), col("new_s"))
   }
 
-  /** [Q-fn-hash] cryptographic digest family: md5 / sha256 content digests —
-    * the content-addressing primitives every dedup and lineage pass keys on
-    * (32/64-hex-char strings, engine-independent by definition of the
-    * algorithms — unlike xxhash64, whose seed differs per engine).
-    *
-    * Kept as a hand form: the text calls DuckDB's `sha256`, which Spark does
-    * not have. */
-  def q_fn_hash(s: SparkSession, d: String): DataFrame =
-    t(s, d, "documents").select(
-      col("doc_id"),
-      md5(col("text")).as("text_md5"),
-      sha2(col("text"), 256).as("text_sha256"),
-      substring(sha2(col("text"), 256), 1, 16).as("shard_key"))
-
   /** [Q-fn-date2] second date family: last_day, aligned day-of-week,
     * ISO week number, day-of-year, epoch-day diff — row-local calendar
     * arithmetic. (Spark's dayofweek is 1=Sunday; DuckDB's is 0=Sunday —
@@ -499,8 +392,13 @@ object Relational {
     * empty — plain explode silently DROPS it, which at corpus scale is a
     * data-loss bug that no row count on the happy path catches.
     *
-    * Kept as a hand form: the text calls DuckDB's `unnest`, which Spark does
-    * not have. */
+    * Kept as a hand form: the text runs 2.60x this form's time at sf0.1
+    * (hand 0.05 s, text 0.13 s) and 2.43x at sf1 (hand 0.07 s, text
+    * 0.17 s): its `LEFT JOIN LATERAL (SELECT explode(…))` plans a join of
+    * each row with its own generated rows where this form is one
+    * `explode_outer` in the projection. Paired cross-commit timing: min
+    * over 3 alternating JVMs per side of the median of 5 warm reps (3 at
+    * sf1, the 10x fixture replica), local[4]. */
   def q_fn_explode_outer(s: SparkSession, d: String): DataFrame =
     t(s, d, "embeddings").select(
       col("vec_id"),
@@ -528,8 +426,12 @@ object Relational {
     * keeps format signal (lengths, word shapes) while destroying content.
     * Row-local; the oracle mirrors it with three regexp passes.
     *
-    * Kept as a hand form: the text passes DuckDB's `'g'` flag to
-    * `regexp_replace`, which Spark reads as a position and rejects. */
+    * Kept as a hand form: the text runs 1.75x this form's time at sf0.1
+    * (hand 0.04 s, text 0.07 s) and 3.00x at sf1 (hand 0.12 s, text
+    * 0.36 s): it chains three `regexp_replace` passes per column where
+    * this form calls Spark's one-pass `mask`. Paired cross-commit timing:
+    * min over 3 alternating JVMs per side of the median of 5 warm reps (3
+    * at sf1, the 10x fixture replica), local[4]. */
   def q_text_mask(s: SparkSession, d: String): DataFrame =
     t(s, d, "customer").select(
       col("c_custkey"),
@@ -555,24 +457,6 @@ object Relational {
       .select(col("event_id"), col("user_id"), col("v_gappy"), col("v_filled"))
   }
 
-  /** [Q-fn-string2] second string family: padding (fixed-width keys),
-    * reverse, translate (char-map scrub), repeat, ascii/chr — row-local,
-    * codegen'd; the formatting toolkit for key normalization and export.
-    *
-    * Kept as a hand form: the text's `CAST(x AS VARCHAR)` without a length is
-    * DuckDB SQL. */
-  def q_fn_string2(s: SparkSession, d: String): DataFrame =
-    t(s, d, "part").select(
-      col("p_partkey"),
-      lpad(col("p_partkey").cast("string"), 10, "0").as("key10"),
-      rpad(col("p_brand"), 12, ".").as("brand_pad"),
-      reverse(col("p_name")).as("name_rev"),
-      translate(col("p_type"), "aeiou", "_____").as("type_novowel"),
-      repeat(lit("*"), pmod(col("p_size"), lit(5)) + 1).as("stars"),
-      ascii(col("p_brand")).as("brand_ascii"),
-      concat(col("p_brand"), lit(":"),
-        expr("chr(65 + CAST(p_size % 26 AS INT))")).as("brand_letter"))
-
   /** [Q-ts-gapfill] time-series resample + gap fill: an hourly bucket grid
     * per event_type spanning [min, max] (sequence + explode — generated
     * PER GROUP ROW, so there is no driver scalar and no 1-row cross join),
@@ -580,8 +464,8 @@ object Relational {
     * The canonical densification step before any windowed model sees the
     * series; grid size is O(groups · span/step), never corpus-sized.
     *
-    * Kept as a hand form: the text calls DuckDB's `unnest`, which Spark does
-    * not have. */
+    * Kept as a hand form: the text calls DuckDB's `generate_series`, which
+    * Spark does not have. */
   def q_ts_gapfill(s: SparkSession, d: String): DataFrame = {
     val ev = t(s, d, "events")
       .select(col("event_type"), date_trunc("HOUR", col("ts")).as("b"))
@@ -603,7 +487,9 @@ object Relational {
     * (doc, query-term) pairs immediately; tf is one keyed aggregate, df a
     * second over the already-reduced tf table, the df attach a broadcast
     * of ≤|query| rows, and the top-20 cut rides TakeOrdered. N and avgdl
-    * are two 1-row scalar aggregates (the legitimate driver-scalar class).
+    * come from one scalar subquery in the plan (a 1-row aggregate over the
+    * corpus), so building the query runs no job and every join stays
+    * keyed.
     *
     * Determinism contract: the per-term contribution (the only libm-`ln`
     * value) is rounded to DECIMAL(20,6) BEFORE the per-doc sum, so the
@@ -626,22 +512,24 @@ object Relational {
     * doc_id). Plan shape and determinism contract per [Q-text-bm25]. */
   def bm25(docs: DataFrame, qterms: Seq[String], k: Int = 20): DataFrame = {
     require(qterms.nonEmpty, "bm25 needs at least one query term")
-    val stats = docs.select(count(lit(1)).as("n"),
-      sum(size(split(col("text"), " "))).as("tot")).head()
-    val nDocs = stats.getLong(0).toDouble
-    val avgdl = stats.getLong(1).toDouble / stats.getLong(0)
+    val dl = size(split(col("text"), " "))
+    // one scalar subquery for both statistics: its two uses share one
+    // ScalarSubquery, which Spark runs once
+    val stats = docs.select(struct(count(lit(1)).cast("double").as("n"),
+      (sum(dl).cast("double") / count(lit(1))).as("avgdl"))).scalar()
+    val (nDocs, avgdl) = (stats.getField("n"), stats.getField("avgdl"))
     val tf = docs
-      .select(col("doc_id"), size(split(col("text"), " ")).as("dl"),
+      .select(col("doc_id"), dl.as("dl"),
         explode(split(col("text"), " ")).as("term"))
       .filter(col("term").isin(qterms: _*))
       .groupBy("doc_id", "dl", "term").agg(count(lit(1)).as("tf"))
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
     tf.join(broadcast(dfreq), "term")
       .withColumn("idf", log(lit(1.0) +
-        (lit(nDocs) - col("df").cast("double") + lit(0.5)) /
+        (nDocs - col("df").cast("double") + lit(0.5)) /
           (col("df").cast("double") + lit(0.5))))
       .withColumn("contrib", (col("idf") * col("tf") * lit(2.2) /
-          (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / lit(avgdl))))
+          (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / avgdl)))
         .cast("decimal(20,6)"))
       .groupBy("doc_id")
       .agg(sum("contrib").cast("double").as("bm25"),
@@ -650,39 +538,32 @@ object Relational {
       .limit(k)
   }
 
-  /** [Q-text-tfidf] TF-IDF term ranking: term frequency per doc (one keyed
-    * aggregate), document frequency per term (second keyed aggregate over
-    * the ALREADY-reduced tf table — never re-touching the corpus), score =
-    * tf · N / df (rational in exact-integer doubles — no libm log, so both
-    * engines compute the identical value), top-3 terms per doc on a total
-    * order. The relevance-weighting pass behind corpus search and keyword
-    * extraction.
-    *
-    * Kept as a hand form: the text calls DuckDB's `unnest`, which Spark does
-    * not have. */
-  def q_text_tfidf(s: SparkSession, d: String): DataFrame = {
-    val docs = t(s, d, "documents")
-    // r18: corpus size from parquet footers (driver-side metadata, no
-    // Spark job) instead of docs.count() — one fewer job per run, and at
-    // scale a catalog/footer read instead of a cluster pass (the
-    // Tables.footerRowCount contract; same exact value)
-    val nDocs = graft.Tables.footerRowCount(s, d, "documents")
-    val tf = docs.select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-    val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
-    tf.join(dfreq, "term")
-      .withColumn("tfidf", col("tf") * lit(nDocs.toDouble) / col("df"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("doc_id").orderBy(col("tfidf").desc, col("term"))))
-      .filter(col("rn") <= 3)
-      .select(col("doc_id"), col("term"), col("tf"), col("df"), col("tfidf"), col("rn"))
+  /** Hard fence for the exact-percentile oracle baseline: Spark's exact
+    * `percentile_cont` buffers EVERY group value in the aggregation buffer —
+    * with 5 priority groups that is n/5 doubles in one task's memory, an
+    * OOM-class plan at production scale. Same policy as the all-pairs
+    * embed baseline ([[Similarity.embedBaselineMaxRows]]): throw rather
+    * than silently run it big. The scale path is [[q_agg_approx_quantile]]
+    * (mergeable GK sketch, bounded memory). */
+  val exactQuantileMaxRows: Long = 10000000L
+
+  /** Refuses q_agg_quantile's text over more than [[exactQuantileMaxRows]]
+    * orders. The count comes from parquet FOOTERS read driver-side
+    * ([[graft.Tables.footerRowCount]], cached per dir): zero Spark jobs, so
+    * the fence adds nothing to the measured query path. */
+  def exactQuantileFence(s: SparkSession, d: String): Unit = {
+    val n = graft.Tables.footerRowCount(s, d, "orders")
+    require(n <= exactQuantileMaxRows,
+      s"q_agg_quantile is the fenced exact-percentile oracle baseline; input " +
+        s"has $n rows (max $exactQuantileMaxRows). Use q_agg_approx_quantile at scale.")
   }
 
   /** [Q-agg-approx-quantile] quantile-sketch family: approx_percentile
     * (Greenwald-Khanna) per group. Sketches are mergeable — partial sketches
     * combine map-side, so the shuffle carries O(groups · accuracy) summary
     * tuples, not rows; at 100 TB this is THE way to get percentiles (the
-    * exact `percentile` in q_agg_quantile collects each group's values).
+    * exact `percentile_cont` in q_agg_quantile's text buffers each group's
+    * values).
     * Sketch internals are engine-specific → rows-only driver check; the
     * rank-error bound vs the exact quantile is asserted in ScalaTest.
     * Accuracy 1000 (rank error n/1000): the sketch state — and with it

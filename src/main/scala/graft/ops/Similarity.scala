@@ -425,8 +425,8 @@ object Similarity {
     * `floor(x + 0.5)` instead of round() keeps the two engines' halfway
     * behavior trivially identical. DuckDB-oracle-matched.
     *
-    * Kept as a hand form: the text calls DuckDB's `list_transform`, which
-    * Spark does not have. */
+    * Kept as a hand form: the text calls DuckDB's `list_min`, which Spark
+    * does not have. */
   def q_embed_quantize(s: SparkSession, d: String): DataFrame =
     Tables(s, d, "embeddings")
       .withColumn("v", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))

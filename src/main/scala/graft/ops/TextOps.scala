@@ -25,23 +25,13 @@ object TextOps {
        |      i -> concat_ws(' ', slice(t, i, $k))))
        |  ELSE array_distinct(array(text)) END), 1)""".stripMargin)
 
-  /** [Q-text-tokens] corpus token frequency, top-50 (total order via token).
-    *
-    * Kept as a hand form: the text calls DuckDB's `unnest`, which Spark does
-    * not have. */
-  def q_text_tokens(s: SparkSession, d: String): DataFrame =
-    Tables(s, d, "documents")
-      .select(explode(tokens).as("token"))
-      .groupBy("token").agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("token"))
-      .limit(50)
-
   /** [Q-text-tokens-re] BPE-ish regex tokenization: letter runs, digit runs,
     * and single non-alphanumeric marks as separate tokens (the pre-merge
     * vocabulary a byte-pair tokenizer starts from), top-50 by frequency.
     *
-    * Kept as a hand form: the text calls DuckDB's `unnest`, which Spark does
-    * not have. */
+    * Kept as a hand form: the text's `regexp_extract_all` reads group 0 by
+    * default on DuckDB and group 1 on Spark, which rejects the group-less
+    * pattern. */
   def q_text_tokens_re(s: SparkSession, d: String): DataFrame =
     Tables(s, d, "documents")
       .select(explode(expr(
@@ -129,8 +119,8 @@ object TextOps {
     * banned-term / PII-list scrubbing pass every training-data pipeline
     * runs before export. Pure regexp expressions, row-local, no shuffle.
     *
-    * Kept as a hand form: the text passes DuckDB's `'g'` flag to
-    * `regexp_replace`, which Spark reads as a position and rejects. */
+    * Kept as a hand form: the text takes DuckDB's `len` of an array; Spark's
+    * `len` takes a string. */
   def q_text_redact(s: SparkSession, d: String): DataFrame = {
     val re = "\\b(customer|key|vector)\\b"
     Tables(s, d, "documents").select(
@@ -142,8 +132,8 @@ object TextOps {
   /** [Q-text-stats] per-language corpus statistics: doc counts, token
     * budget (sum), exact token-count percentiles, average byte length — the
     * reporting pass that sizes a training mix. ONE keyed aggregate with
-    * map-side partials; percentiles use the same exact interpolated
-    * `percentile` == `quantile_cont` correspondence as q_agg_quantile.
+    * map-side partials; percentiles are Spark's exact interpolated
+    * `percentile`, which is DuckDB's `quantile_cont`.
     *
     * Kept as a hand form: the text calls DuckDB's `string_split`, which Spark
     * does not have. */
@@ -295,26 +285,6 @@ object TextOps {
           greatest(length(col("ta")), length(col("tb"))), 6).as("sim_r"))
       .orderBy(col("a_id"), col("b_id"))
   }
-
-  /** Canonical normalized text: lowercase, non-alphanumerics to spaces,
-    * runs of spaces collapsed, trimmed — the canonicalization applied
-    * before content-addressed dedup so trivial formatting differences
-    * don't defeat exact matching. Row-local regexp chain, codegen'd. */
-  private[ops] def normExpr: Column =
-    trim(regexp_replace(regexp_replace(lower(col("text")), "[^a-z0-9 ]", " "),
-      " +", " "))
-
-  /** [Q-text-normalize] text canonicalization audit: raw vs normalized
-    * length and the normalized digest (the dedup key for [Q-dedup-norm]).
-    *
-    * Kept as a hand form: the text passes DuckDB's `'g'` flag to
-    * `regexp_replace`, which Spark reads as a position and rejects. */
-  def q_text_normalize(s: SparkSession, d: String): DataFrame =
-    Tables(s, d, "documents").select(
-      col("doc_id"),
-      length(col("text")).as("len_raw"),
-      length(normExpr).as("len_norm"),
-      md5(normExpr).as("norm_md5"))
 
   /** [Q-pipeline-clean] the end-to-end corpus-cleaning composite: Gopher
     * quality rules + repetition filter + exact dedup (keep min doc_id per

@@ -8,16 +8,17 @@ import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, 
 import org.apache.spark.sql.types.StructType
 
 /** One SQL text per query, run by both engines: the fixture queries and
-  * the generated-data TPC queries alike.
+  * the generated-data TPC queries alike. Each text is written once against
+  * a [[Dialect]] and rendered twice, once per engine.
   *
-  * A fixture text (`SparkEntry.fixtureSql`) reads bare table names.
-  * DuckDB runs it over bare-name views of the fixture tables
-  * (tools/check.py); Spark runs it through [[dataFrame]] with
-  * `graft.Tables` as the resolver, which keeps the `events.ts`
-  * normalisation.
+  * A fixture text (`SparkEntry.fixtureSql`) reads bare table names. For
+  * DuckDB ([[duckdbViews]]) it runs over bare-name views of the fixture
+  * tables (tools/check.py); for Spark ([[spark]]) it runs through
+  * [[dataFrame]] with `graft.Tables` as the resolver, which keeps the
+  * `events.ts` normalisation. Where the engines name one function
+  * differently, the text calls the Dialect's rename.
   *
-  * A generated-data text in [[Tpcds]] / [[TpchFull]] is written once
-  * against a [[Dialect]] and rendered twice:
+  * A generated-data text in [[Tpcds]] / [[TpchFull]] renders:
   *   - for DuckDB ([[duckdb]]), every table is a parquet glob pinned to the
   *     generated cache at [[oracleScale]] (the `*_pub` twins' tables at
   *     their pinned scale), and staged CTEs read `AS MATERIALIZED`.
@@ -38,22 +39,43 @@ object TpcSql {
     * different data. Bench (no oracle) runs at any scale. */
   val oracleScale = "sf0.01"
 
-  /** How a text names its inputs: `P` a table at the fixture-matched
-    * scale, `Pp` a table at the `*_pub` twins' pinned scale, `M` the
-    * keyword (with its trailing space) that stages a CTE, `Div` the
-    * integer-division operator. */
-  final case class Dialect(P: String => String, Pp: String => String, M: String, Div: String)
+  /** How a text names its inputs, and the spellings the two engines do
+    * not share. `P` a table at the fixture-matched scale, `Pp` a table at
+    * the `*_pub` twins' pinned scale, `M` the keyword (with its trailing
+    * space) that stages a CTE, `Div` the integer-division operator. The
+    * renames, each the same function on both engines:
+    *   - `G` the trailing argument of a replace-all `regexp_replace`
+    *     (DuckDB's `, 'g'` flag; Spark always replaces all);
+    *   - `Unnest` the array-to-rows generator (`unnest` / `explode`);
+    *   - `Transform` the array map (`list_transform` / `transform`);
+    *   - `JsonStr` the JSON-path string extraction
+    *     (`json_extract_string` / `get_json_object`);
+    *   - `Sha256(x)` the hex SHA-256 digest (`sha256(x)` / `sha2(x, 256)`);
+    *   - `Xor(a, b)` bitwise exclusive or (`xor(a, b)` / `(a ^ b)`; DuckDB's
+    *     `^` is a power). */
+  final case class Dialect(P: String => String, Pp: String => String, M: String, Div: String,
+                           G: String, Unnest: String, Transform: String, JsonStr: String,
+                           Sha256: String => String, Xor: (String, String) => String)
+
+  private def duckdbOver(p: String => String, pp: String => String): Dialect =
+    Dialect(p, pp, "MATERIALIZED ", "//", ", 'g'", "unnest", "list_transform",
+      "json_extract_string", x => s"sha256($x)", (a, b) => s"xor($a, $b)")
 
   /** DuckDB: parquet globs under the default cache `root`, pinned to
     * [[oracleScale]] and to `pubScale`. */
   def duckdb(root: String, pubScale: String): Dialect =
-    Dialect(path(root, oracleScale), path(root, pubScale), "MATERIALIZED ", "//")
+    duckdbOver(path(root, oracleScale), path(root, pubScale))
+
+  /** DuckDB over bare-name views of the fixture tables: the fixture texts'
+    * oracle rendering. */
+  val duckdbViews: Dialect = duckdbOver(identity, identity)
 
   private def path(root: String, scale: String)(name: String): String =
     s"'$root/$scale/$name.parquet/*.parquet'"
 
   /** Spark: bare table names, resolved by [[dataFrame]]. */
-  val spark: Dialect = Dialect(identity, identity, "", "div")
+  val spark: Dialect = Dialect(identity, identity, "", "div", "", "explode", "transform",
+    "get_json_object", x => s"sha2($x, 256)", (a, b) => s"($a ^ $b)")
 
   /** Fail loud when `name`, a generated-data query, is dumped for the gate
     * from a fixture dir other than [[oracleScale]]. */
@@ -103,14 +125,17 @@ object TpcSql {
   /** `plan` with every unqualified table reference that no CTE in `ctes`
     * shadows replaced by `table(name)`. CTE bodies are inner children of
     * their WITH node and subquery plans live in expressions, so both are
-    * walked explicitly; a CTE is in scope for later CTEs and the body. */
+    * walked explicitly; a CTE is in scope for later CTEs and the body, and
+    * under `WITH RECURSIVE` for its own body too (its self-reference). */
   private def substitute(plan: LogicalPlan, ctes: Set[String],
                          table: String => LogicalPlan): LogicalPlan = plan match {
     case w: UnresolvedWith =>
       var scope = ctes
       val rels = w.cteRelations.map { case (name, body, depth) =>
-        val b = substitute(body, scope, table).asInstanceOf[SubqueryAlias]
-        scope += name.toLowerCase(Locale.ROOT)
+        val own = scope + name.toLowerCase(Locale.ROOT)
+        val b = substitute(body, if (w.allowRecursion) own else scope, table)
+          .asInstanceOf[SubqueryAlias]
+        scope = own
         (name, b, depth)
       }
       w.copy(child = substitute(w.child, scope, table), cteRelations = rels)

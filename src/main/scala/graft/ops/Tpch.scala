@@ -6,7 +6,7 @@ import org.apache.spark.sql.types._
 import graft.Tables
 
 /** The fixture-adapted TPC-H queries that keep a hand-written DataFrame
-  * form. The other TPC-H shapes over the fixture tables (Q1, Q3–Q6, Q8, Q10,
+  * form. The other TPC-H shapes over the fixture tables (Q1, Q3–Q8, Q10,
   * Q13, Q14, Q18, Q19, Q21, Q22) are one SQL text each in
   * `SparkEntry.fixtureSql`, run by both engines. The reference generates
   * TPC-H data so engines can run this workload over it
@@ -31,40 +31,6 @@ object Tpch {
   private val D = DoubleType
   /** volume = l_extendedprice * (1 - l_discount), exact. */
   private def vol: Column = dec(col("l_extendedprice")) * (lit(1) - dec(col("l_discount"), 4, 2))
-
-  /** [Q-tpch-q7] TPC-H Q7 (volume shipping): two-nation trade volume by
-    * year. The nation dim joins twice under different roles (supplier's
-    * nation, customer's nation) — both broadcast and pre-filtered to the
-    * two nations of interest so the pair predicate prunes fact rows at the
-    * join, not after. Facts shuffle only on their PK/FK join keys.
-    *
-    * Kept as a hand form: PlanGuardSpec assertion "Q7 nation slice not
-    * pushed" looks for an `In(n_name` scan filter, and the text pushes the
-    * same two-nation slice as `Or(EqualTo(n_name, …), EqualTo(n_name, …))`.
-    * The text is not slower: 0.87x this form's time at sf0.1 (hand 0.47 s,
-    * text 0.41 s; min over 3 alternating cross-commit JVMs of the median of 5
-    * warm reps, local[4]). */
-  def q_tpch_q7(s: SparkSession, d: String): DataFrame = {
-    val nations = Seq("NATION_1", "NATION_2")
-    val n1 = t(s, d, "nation").filter(col("n_name").isin(nations: _*))
-      .select(col("n_nationkey").as("sn_key"), col("n_name").as("supp_nation"))
-    val n2 = t(s, d, "nation").filter(col("n_name").isin(nations: _*))
-      .select(col("n_nationkey").as("cn_key"), col("n_name").as("cust_nation"))
-    t(s, d, "supplier")
-      .join(t(s, d, "lineitem")
-          .filter(col("l_shipdate") >= lit("1996-01-01").cast(TimestampType) &&
-            col("l_shipdate") <= lit("1997-12-31").cast(TimestampType)),
-        col("s_suppkey") === col("l_suppkey"))
-      .join(t(s, d, "orders"), col("o_orderkey") === col("l_orderkey"))
-      .join(t(s, d, "customer"), col("c_custkey") === col("o_custkey"))
-      .join(broadcast(n1), col("s_nationkey") === col("sn_key"))
-      .join(broadcast(n2), col("c_nationkey") === col("cn_key"))
-      .filter((col("supp_nation") === "NATION_1" && col("cust_nation") === "NATION_2") ||
-        (col("supp_nation") === "NATION_2" && col("cust_nation") === "NATION_1"))
-      .withColumn("l_year", year(col("l_shipdate")))
-      .groupBy("supp_nation", "cust_nation", "l_year")
-      .agg(sum(vol).cast(D).as("revenue"))
-  }
 
   /** [Q-tpch-q15] TPC-H Q15 (top supplier): quarter revenue per supplier,
     * then the suppliers matching the scalar MAX. The scalar subquery is a

@@ -190,7 +190,7 @@ object Diag {
 
   private def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
 
-  private def fmt(xs: Seq[Double]): String = xs.map(x => f"$x%.2f").mkString(" ")
+  private def fmt(xs: Seq[Double]): String = xs.map(x => f"$x%.3f").mkString(" ")
 
   /** Job, stage and task-metric totals of the jobs that run while `on`. */
   private final class Meter extends SparkListener {
@@ -252,7 +252,7 @@ object Diag {
         val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
         m.stop()
         val walls = warm :+ last
-        println(f"[stats] $n%-24s $cold%7.2f ${median(walls)}%7.2f ${m.jobs.get}%5d ${m.stages.get}%5d " +
+        println(f"[stats] $n%-24s $cold%7.3f ${median(walls)}%7.3f ${m.jobs.get}%5d ${m.stages.get}%5d " +
           f"${m.tasks.get}%6d $compiles%8d ${m.runMs.get / 1e3}%8.2f ${m.cpuNs.get / 1e9}%8.2f " +
           f"${m.gcMs.get / 1e3}%6.2f ${mb(m.inB)}%8.1f ${mb(m.srB)}%8.1f ${mb(m.swB)}%8.1f " +
           f"${mb(m.memSpill)}%8.1f ${mb(m.diskSpill)}%8.1f ${mb(m.peak)}%7.1f  ${fmt(walls)}")

@@ -76,6 +76,19 @@ class CatalogSpec extends AnyFunSuite {
     assert(text.head().getLong(0) == hand)
   }
 
+  test("a recursive CTE's self-reference is not resolved as a table") {
+    val resolved = scala.collection.mutable.Buffer.empty[String]
+    val text = graft.ops.TpcSql.dataFrame(spark,
+      "WITH RECURSIVE reach(src, dst) AS (SELECT n_nationkey, n_nationkey FROM nation " +
+        "WHERE n_nationkey < 2 UNION ALL SELECT r.src, n.n_nationkey FROM reach r " +
+        "JOIN nation n ON n.n_nationkey = r.dst + 1 WHERE n.n_nationkey < 5) " +
+        "SELECT count(*) AS n FROM reach",
+      n => { resolved += n; Tables(spark, TestSpark.sf0001, n) })
+    assert(resolved == Seq("nation", "nation"))
+    // nation 0 reaches 0..4, nation 1 reaches 1..4
+    assert(text.head().getLong(0) == 9)
+  }
+
   test("an unknown fixture table name in a text fails construction, naming the table") {
     val e = intercept[IllegalArgumentException](graft.ops.TpcSql.dataFrame(spark,
       "SELECT count(*) FROM orders JOIN order_lines ON o_orderkey = l_orderkey",

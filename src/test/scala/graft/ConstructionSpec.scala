@@ -26,8 +26,10 @@ class ConstructionSpec extends AnyFunSuite {
     def views = spark.catalog.listTables().collect()
       .filter(_.isTemporary).map(_.name).toSet
     // q1: hand form; q45: IN-subquery under an OR; q54: CTEs, scalar
-    // subqueries and IN-subqueries; q41_pub: a twin pinned to the sf1 cache
-    val names = Seq("q_tpcds_q1", "q_tpcds_q45", "q_tpcds_q54", "q_tpcds_q41_pub")
+    // subqueries and IN-subqueries; q41_pub: a twin pinned to the sf1
+    // cache; q_text_bm25: a fixture hand form whose corpus statistics are
+    // scalar subqueries
+    val names = Seq("q_tpcds_q1", "q_tpcds_q45", "q_tpcds_q54", "q_tpcds_q41_pub", "q_text_bm25")
     assert(names.tail.forall(n => !graft.ops.Tpcds.hand.contains(n)))
     def build(): Unit = names.foreach(n => SparkEntry.queries(n)(spark, TestSpark.sf0001))
     val v0 = views

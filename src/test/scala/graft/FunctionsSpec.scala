@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.{txt, vec}
 
@@ -117,12 +118,26 @@ class FunctionsSpec extends AnyFunSuite {
     }
   }
 
+  /** Documents the byte-level tokenizer must read as `split(text, ' ')`
+    * does: multi-byte UTF-8, and bytes that are not valid UTF-8 (which
+    * `split` decodes to U+FFFD). */
+  private def unicodeDocs: DataFrame = {
+    import spark.implicits._
+    val invalid = "ab \u00ff cd".getBytes("ISO-8859-1") ++ Array[Byte](' ', 0xc3.toByte, ' ') ++
+      "ef gh ".getBytes("UTF-8") ++ Array[Byte](0xe2.toByte, 0x82.toByte, ' ', 'i', ' ', 'j')
+    Seq[(Long, Array[Byte])](
+      (1L, "naïve café déjà vu naïve café 日本語 テキスト 日本語 テキスト".getBytes("UTF-8")),
+      (2L, invalid)).toDF("doc_id", "b")
+      .select(col("doc_id"), col("b").cast("string").as("text"))
+  }
+
   test("shingle_hashes edge cases still match the HOF form") {
     import spark.implicits._
     // empty string, runs of spaces (empty tokens), trailing space, unicode,
-    // repeated shingles (distinct dedup), exactly-k tokens
+    // repeated shingles (distinct dedup), exactly-k tokens, invalid UTF-8
     val edge = Seq("", "   ", "a  b c d", "a b c ", "ünï cödé ünï cödé ünï cödé",
-      "x y z", "r r r r r r r r").toDF("text")
+      "x y z", "r r r r r r r r").toDF("text").unionByName(unicodeDocs.select("text"))
+    assert(unicodeDocs.filter(expr("is_valid_utf8(text)")).count() == 1)
     val bad = edge
       .select(graft.ops.TextOps.shingleExpr(3).as("sh"),
         txt.shingle_hashes(col("text"), 3).as("nat"))
@@ -132,12 +147,14 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("simhash64 is bit-equal to the two-shuffle aggregate formulation") {
-    val docs = Tables(spark, TestSpark.sf001, "documents")
+    val docs = Tables(spark, TestSpark.sf001, "documents").select("doc_id", "text")
+      .unionByName(unicodeDocs.select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
     val native = graft.ops.Dedup.simhash(docs)
     val agg = graft.ops.Dedup.simhashAgg(docs)
       .withColumnRenamed("simhash", "simhash_agg")
     val bad = native.join(agg, "doc_id")
       .filter(col("simhash") =!= col("simhash_agg"))
+    assert(native.count() == docs.count())
     assert(bad.count() == 0, "native SimHash64 diverged from aggregate form")
   }
 

@@ -11,6 +11,13 @@ import org.scalatest.funsuite.AnyFunSuite
 class PlanGuardSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
+  /** `name`'s formatted physical plan over the sf0.001 fixtures. */
+  private def formatted(name: String): String = {
+    import org.apache.spark.sql.execution.ExplainMode
+    SparkEntry.queries(name)(spark, TestSpark.sf0001)
+      .queryExecution.explainString(ExplainMode.fromString("formatted"))
+  }
+
   /** Fenced: q_dedup_embed is the documented O(n²) oracle baseline;
     * q_join_cross is a cartesian BY DEFINITION over two fixed-size dims;
     * q_sim_topk broadcasts a ≤5-row anchor set (nested loop over a
@@ -38,22 +45,18 @@ class PlanGuardSpec extends AnyFunSuite {
   }
 
   test("filters and projections reach the parquet scan") {
-    import org.apache.spark.sql.execution.ExplainMode
-    def fmt(name: String): String =
-      SparkEntry.queries(name)(spark, TestSpark.sf0001)
-        .queryExecution.explainString(ExplainMode.fromString("formatted"))
     // q_filter's predicates must appear as PushedFilters on the scan
-    val f = fmt("q_filter")
+    val f = formatted("q_filter")
     assert(f.contains("PushedFilters: [IsNotNull"), s"no pushed filters:\n$f")
     assert(f.contains("l_shipdate"), "shipdate range not at the scan")
     // q_proj reads 5 of lineitem's columns; the scan schema must prune the rest
-    val p = fmt("q_proj")
+    val p = formatted("q_proj")
     val readSchema = p.linesIterator.filter(_.contains("ReadSchema")).mkString
     assert(readSchema.contains("l_quantity") && !readSchema.contains("l_tax"),
       s"column pruning failed: $readSchema")
     // the decontamination corpus/eval split predicates reach the scan, and
     // only (doc_id, text) are read from documents
-    val dc = fmt("q_text_decontaminate")
+    val dc = formatted("q_text_decontaminate")
     assert(dc.contains("GreaterThanOrEqual(doc_id,50)") || dc.contains("LessThan(doc_id,50)"),
       s"doc_id split not pushed:\n$dc")
     val dcSchema = dc.linesIterator.filter(_.contains("ReadSchema")).mkString
@@ -61,7 +64,7 @@ class PlanGuardSpec extends AnyFunSuite {
       s"documents scan reads unused columns: $dcSchema")
     // q_tpch_q10: the quarter range and returnflag='R' must hit their scans,
     // and lineitem reads only the 4 needed columns
-    val q10 = fmt("q_tpch_q10")
+    val q10 = formatted("q_tpch_q10")
     assert(q10.contains("GreaterThanOrEqual(o_orderdate"),
       s"Q10 date range not pushed:\n$q10")
     assert(q10.contains("EqualTo(l_returnflag,R)"),
@@ -81,14 +84,10 @@ class PlanGuardSpec extends AnyFunSuite {
   }
 
   test("TPC-DS star queries broadcast their dims and prune the fact scan") {
-    import org.apache.spark.sql.execution.ExplainMode
-    def fmt(name: String): String =
-      SparkEntry.queries(name)(spark, TestSpark.sf0001)
-        .queryExecution.explainString(ExplainMode.fromString("formatted"))
     // Q3: both dims broadcast (the fact side never shuffles), the November
     // slice pushed into the date_dim scan, the fact scan pruned to the 3
     // needed columns
-    val q3 = fmt("q_tpcds_q3")
+    val q3 = formatted("q_tpcds_q3")
     assert(q3.contains("BroadcastHashJoin") && !q3.contains("SortMergeJoin"),
       s"Q3 dims not broadcast:\n$q3")
     assert(q3.contains("EqualTo(d_moy,11)"), s"d_moy not pushed:\n$q3")
@@ -98,7 +97,7 @@ class PlanGuardSpec extends AnyFunSuite {
     assert(ssSchema.contains("ss_ext_sales_price") && !ssSchema.contains("ss_net_profit"),
       s"store_sales scan not pruned: $ssSchema")
     // the returns⋈sales join is keyed on the (ticket, item) PK
-    val qr = fmt("q_tpcds_returns")
+    val qr = formatted("q_tpcds_returns")
     assert(qr.contains("sr_ticket_number") && qr.contains("ss_ticket_number"),
       s"returns join not on the ticket key:\n$qr")
     assert(!qr.contains("BroadcastNestedLoopJoin") && !qr.contains("CartesianProduct"))
@@ -106,62 +105,94 @@ class PlanGuardSpec extends AnyFunSuite {
     // item) PK, never nested-loop
     for ((name, key) <- Seq("q_tpcds_q91" -> "cr_order_number",
       "q_tpcds_q85" -> "wr_order_number")) {
-      val p = fmt(name)
+      val p = formatted(name)
       assert(p.contains(key), s"$name fact join not on the order PK:\n$p")
       assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
         s"$name planned an unkeyed join:\n$p")
     }
     // Q99 is one fact scan through broadcast dims: no sort-merge anywhere
-    val q99 = fmt("q_tpcds_q99")
+    val q99 = formatted("q_tpcds_q99")
     assert(q99.contains("BroadcastHashJoin") && !q99.contains("SortMergeJoin"),
       s"Q99 dims not broadcast:\n$q99")
     // Q1's correlated subqueries must decorrelate to aggregate joins — a
     // per-row subquery shape would show as a nested-loop or cartesian plan
-    val q1 = fmt("q_tpcds_q1")
+    val q1 = formatted("q_tpcds_q1")
     assert(!q1.contains("BroadcastNestedLoopJoin") && !q1.contains("CartesianProduct"),
       s"Q1 subqueries did not decorrelate:\n$q1")
   }
 
-  test("TPC-H breadth queries broadcast their dims and keep scalar subqueries hashed") {
-    import org.apache.spark.sql.execution.ExplainMode
-    def fmt(name: String): String =
-      SparkEntry.queries(name)(spark, TestSpark.sf0001)
-        .queryExecution.explainString(ExplainMode.fromString("formatted"))
-    // Q4: the correlated EXISTS decorrelates to a LEFT SEMI keyed on the
-    // order key (the 90-day condition rides as a residual, never a loop)
-    val q4 = fmt("q_tpch_q4")
+  /** The values a scan's data filter admits for `column` when it is a
+    * finite set of equalities with literals (`In`, `InSet`, `EqualTo`, or
+    * an `Or` of those); None for any other filter. */
+  private def admitted(f: org.apache.spark.sql.catalyst.expressions.Expression,
+                       column: String): Option[Set[String]] = {
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, EqualTo, In, InSet, Literal, Or}
+    f match {
+      case In(a: Attribute, vs) if a.name == column && vs.forall(_.isInstanceOf[Literal]) =>
+        Some(vs.map(_.eval().toString).toSet)
+      case InSet(a: Attribute, vs) if a.name == column => Some(vs.map(_.toString))
+      case EqualTo(a: Attribute, v: Literal) if a.name == column => Some(Set(v.value.toString))
+      case EqualTo(v: Literal, a: Attribute) if a.name == column => Some(Set(v.value.toString))
+      case Or(l, r) => for (a <- admitted(l, column); b <- admitted(r, column)) yield a ++ b
+      case _ => None
+    }
+  }
+
+  test("TPC-H breadth Q4: the correlated EXISTS becomes a semi join") {
+    // the 90-day condition rides as a residual of the order-keyed LEFT
+    // SEMI, never a loop
+    val q4 = formatted("q_tpch_q4")
     assert(q4.contains("LeftSemi"), s"Q4 EXISTS did not become a semi join:\n$q4")
-    // Q7: both nation roles broadcast, with the two-nation slice pushed
-    // into the nation scans
-    val q7 = fmt("q_tpch_q7")
+  }
+
+  test("TPC-H breadth Q7: nations broadcast, each nation scan reads only two nations") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val q7 = formatted("q_tpch_q7")
     assert(q7.contains("BroadcastHashJoin"), s"Q7 nations not broadcast:\n$q7")
-    assert(q7.contains("In(n_name"), s"Q7 nation slice not pushed:\n$q7")
-    // Q15: the scalar MAX attaches by value equality — a broadcast HASH
-    // join, never a nested loop (also covered by the global guard)
-    val q15 = fmt("q_tpch_q15")
+    // the two-nation slice reaches BOTH nation scans as a data filter (the
+    // scan pushes it to parquet), whether the planner spells it In or an
+    // Or of EqualTos
+    val plan = SparkEntry.queries("q_tpch_q7")(spark, TestSpark.sf0001).queryExecution.sparkPlan
+    val nationScans = plan.collect {
+      case scan: FileSourceScanExec if scan.output.exists(_.name == "n_name") => scan
+    }
+    assert(nationScans.size == 2, s"Q7 should scan nation once per role:\n$plan")
+    for (scan <- nationScans) {
+      val slices = scan.dataFilters.flatMap(admitted(_, "n_name"))
+      assert(slices.contains(Set("NATION_1", "NATION_2")),
+        s"Q7 nation scan does not read only the two nations:\n$scan")
+    }
+  }
+
+  test("TPC-H breadth Q15: the scalar MAX attaches by a hash join") {
+    // value equality: a broadcast HASH join, never a nested loop (also
+    // covered by the global guard)
+    val q15 = formatted("q_tpch_q15")
     assert(q15.contains("BroadcastHashJoin"), s"Q15 max not hash-attached:\n$q15")
-    // Q19: the three-branch OR spans both join sides; the planner must
-    // still infer the single-side brand/size union onto the part scan
+  }
+
+  test("TPC-H breadth Q19: the cross-side disjunction still prunes the part scan") {
+    // the three-branch OR spans both join sides; the planner must still
+    // infer the single-side brand/size union onto the part scan
     // (disjunctive pushdown) while keeping the partkey equi-join
-    val q19 = fmt("q_tpch_q19")
+    val q19 = formatted("q_tpch_q19")
     assert(q19.contains("Or(And(EqualTo(p_brand,Brand#12)") ||
       q19.contains("In(p_brand"), s"Q19 disjunction not pushed to part:\n$q19")
-    // Q22: NOT EXISTS is a LEFT ANTI and the scalar average attaches as a
-    // hash join on the column-derived constant key
-    val q22 = fmt("q_tpch_q22")
+  }
+
+  test("TPC-H breadth Q22: NOT EXISTS is an anti join, the scalar attaches hashed") {
+    // the scalar average attaches as a hash join on the column-derived
+    // constant key
+    val q22 = formatted("q_tpch_q22")
     assert(q22.contains("LeftAnti"), s"Q22 NOT EXISTS not an anti join:\n$q22")
     assert(!q22.contains("BroadcastNestedLoopJoin"),
       s"Q22 scalar subquery degraded to a nested loop:\n$q22")
   }
 
   test("new TPC-DS shapes: single-pass Q88, keyed Q59 self-join, windows over aggregates") {
-    import org.apache.spark.sql.execution.ExplainMode
-    def fmt(name: String): String =
-      SparkEntry.queries(name)(spark, TestSpark.sf0001)
-        .queryExecution.explainString(ExplainMode.fromString("formatted"))
     // Q88: the published 8-subquery shape must stay ONE fact scan with
     // conditional aggregation — broadcast dims, no sort-merge anywhere
-    val q88 = fmt("q_tpcds_q88")
+    val q88 = formatted("q_tpcds_q88")
     val factScans = q88.linesIterator
       .count(l => l.contains("ReadSchema") && l.contains("ss_sold_time_sk"))
     assert(factScans == 1, s"Q88 scans the fact $factScans times:\n$q88")
@@ -170,12 +201,12 @@ class PlanGuardSpec extends AnyFunSuite {
     // Q59: the week-over-year comparison self-joins two weekly aggregates
     // on the shifted week key (equi — the global guard already forbids a
     // nested loop; assert the key is actually the week sequence)
-    val q59 = fmt("q_tpcds_q59")
+    val q59 = formatted("q_tpcds_q59")
     assert(q59.contains("d_week_seq"), s"Q59 self-join lost its week key:\n$q59")
     // Q72: the fact⋈fact join must be the ONLY non-broadcast join — both
     // facts shuffle once on the composite (item, week) key, the three dims
     // broadcast into the sides below the exchanges
-    val q72 = fmt("q_tpcds_q72")
+    val q72 = formatted("q_tpcds_q72")
     val bigJoins = q72.linesIterator
       .count(l => l.contains("SortMergeJoin") || l.contains("ShuffledHashJoin"))
     assert(bigJoins == 2, // one header line + one node-detail line per plan
@@ -183,43 +214,35 @@ class PlanGuardSpec extends AnyFunSuite {
     assert(q72.contains("BroadcastHashJoin"), s"Q72 dims not broadcast:\n$q72")
     // Q36/Q47: the rank/lag windows must run over the AGGREGATE (Window
     // above an Expand/HashAggregate), never over the raw fact
-    val q36 = fmt("q_tpcds_q36")
+    val q36 = formatted("q_tpcds_q36")
     assert(q36.contains("Expand"), s"Q36 rollup lost its Expand:\n$q36")
     assert(q36.contains("Window"), s"Q36 rank window missing:\n$q36")
-    val q47 = fmt("q_tpcds_q47")
+    val q47 = formatted("q_tpcds_q47")
     assert(q47.contains("Window"), s"Q47 windows missing:\n$q47")
   }
 
   test("partsupp TPC-H queries: Q9 has one fact-fact join, Q2/Q11 attach scalars hashed") {
-    import org.apache.spark.sql.execution.ExplainMode
-    def fmt(name: String): String =
-      SparkEntry.queries(name)(spark, TestSpark.sf0001)
-        .queryExecution.explainString(ExplainMode.fromString("formatted"))
     // Q9: lineitem⋈partsupp on the composite PK is the ONE shuffled join;
     // part/supplier/orders/nation ride broadcasts at test scale
-    val q9 = fmt("q_tpch_q9")
+    val q9 = formatted("q_tpch_q9")
     assert(q9.contains("ps_partkey") && q9.contains("ps_suppkey"),
       s"Q9 partsupp join lost its composite key:\n$q9")
     assert(!q9.contains("BroadcastNestedLoopJoin") && !q9.contains("CartesianProduct"))
     // Q2: the min-cost attach is a broadcast hash join on (partkey, cost)
-    val q2 = fmt("q_tpch_q2")
+    val q2 = formatted("q_tpch_q2")
     assert(q2.contains("mn_cost"), s"Q2 min-cost attach missing:\n$q2")
     assert(!q2.contains("BroadcastNestedLoopJoin") && !q2.contains("CartesianProduct"))
     // Q11: the fraction-of-total threshold attaches hashed, never nested-loop
-    val q11 = fmt("q_tpch_q11")
+    val q11 = formatted("q_tpch_q11")
     assert(!q11.contains("BroadcastNestedLoopJoin") && !q11.contains("CartesianProduct"),
       s"Q11 scalar threshold degraded to a nested loop:\n$q11")
   }
 
   test("round-9 shapes: brand/category stars broadcast, profit chains keyed, Q77 scalar hashed") {
-    import org.apache.spark.sql.execution.ExplainMode
-    def fmt(name: String): String =
-      SparkEntry.queries(name)(spark, TestSpark.sf0001)
-        .queryExecution.explainString(ExplainMode.fromString("formatted"))
     // Q42/Q52: same star as Q3 — both dims broadcast, manager slice pushed
     // into the item scan, fact never shuffles before the aggregate
     for (name <- Seq("q_tpcds_q42", "q_tpcds_q52")) {
-      val p = fmt(name)
+      val p = formatted(name)
       assert(p.contains("BroadcastHashJoin") && !p.contains("SortMergeJoin"),
         s"$name dims not broadcast:\n$p")
       assert(p.contains("EqualTo(i_manager_id,1)"),
@@ -227,7 +250,7 @@ class PlanGuardSpec extends AnyFunSuite {
     }
     // Q25: the two fact⋈fact joins ride composite keys (ticket+item,
     // customer+item); the three date dims, store and item broadcast
-    val q25 = fmt("q_tpcds_q25")
+    val q25 = formatted("q_tpcds_q25")
     assert(q25.contains("sr_ticket_number") && q25.contains("cs_bill_customer_sk"),
       s"Q25 fact joins lost their composite keys:\n$q25")
     assert(q25.contains("BroadcastHashJoin"), s"Q25 dims not broadcast:\n$q25")
@@ -235,23 +258,23 @@ class PlanGuardSpec extends AnyFunSuite {
     // returns total must attach as a broadcast HASH join (the global guard
     // already forbids the nested-loop degradation), and the rollup keeps
     // its Expand
-    val q77 = fmt("q_tpcds_q77")
+    val q77 = formatted("q_tpcds_q77")
     assert(q77.contains("BroadcastHashJoin"), s"Q77 scalar not hash-attached:\n$q77")
     assert(q77.contains("Expand"), s"Q77 rollup lost its Expand:\n$q77")
     // Q93: ONE shuffled fact join on the (ticket, item) PK
-    val q93 = fmt("q_tpcds_q93")
+    val q93 = formatted("q_tpcds_q93")
     assert(q93.contains("sr_ticket_number"), s"Q93 join not on the ticket PK:\n$q93")
     // Q12: the mode+date filters reach the lineitem scan; the join is the
     // keyed order-key equi-join
-    val q12 = fmt("q_tpch_q12")
+    val q12 = formatted("q_tpch_q12")
     assert(q12.contains("In(l_shipmode"), s"Q12 shipmode not pushed:\n$q12")
     assert(q12.contains("l_orderkey"), s"Q12 join lost the order key:\n$q12")
     // Q21 published twin: both EXISTS legs collapse to semi joins
-    val q21f = fmt("q_tpch_q21_full")
+    val q21f = formatted("q_tpch_q21_full")
     assert(q21f.contains("LeftSemi"), s"Q21-full lost its semi joins:\n$q21f")
     // Q5: the web returns leg rides the (order, item) PK back to its sale;
     // dims broadcast; facts only union, never join each other
-    val q5 = fmt("q_tpcds_q5")
+    val q5 = formatted("q_tpcds_q5")
     assert(q5.contains("wr_order_number"), s"Q5 wr→ws not on the order PK:\n$q5")
     assert(q5.contains("BroadcastHashJoin"), s"Q5 dims not broadcast:\n$q5")
     assert(q5.contains("Union"), s"Q5 lost its union-then-aggregate shape:\n$q5")
@@ -264,7 +287,7 @@ class PlanGuardSpec extends AnyFunSuite {
     // BEFORE the customer/address/store joins (the prospect semi is the
     // only gate below it), so the joins handle per-customer aggregates,
     // never 3 months of fact rows
-    val q54 = fmt("q_tpcds_q54")
+    val q54 = formatted("q_tpcds_q54")
     assert(q54.contains("hashpartitioning(ss_customer_sk"),
       s"Q54 fact no longer aggregates at the customer key below the joins:\n$q54")
     // r19 (ADVICE): a bare contains("LeftSemi") was vacuous — the
@@ -279,84 +302,80 @@ class PlanGuardSpec extends AnyFunSuite {
     // Q49: each channel joins returns⋈sales on the (order, item) PK, and
     // the rank windows run over the per-item AGGREGATE (Window above
     // HashAggregate), never over the raw fact
-    val q49 = fmt("q_tpcds_q49")
+    val q49 = formatted("q_tpcds_q49")
     assert(q49.contains("wr_order_number") && q49.contains("sr_ticket_number"),
       s"Q49 fact joins lost their PKs:\n$q49")
     assert(q49.contains("Window"), s"Q49 rank windows missing:\n$q49")
     // Q65 (r19): the per-store totals ride ONE window over the (store,
     // item) aggregate — partitioned by the store key, no re-derived
     // broadcast side, no second fact scan
-    val q65 = fmt("q_tpcds_q65")
+    val q65 = formatted("q_tpcds_q65")
     assert(q65.contains("Window") &&
       q65.contains("windowspecdefinition(ss_store_sk"),
       s"Q65 per-store totals lost their store-partitioned window:\n$q65")
     // Q98: the ratio window runs over the AGGREGATE, never the raw fact
-    val q98 = fmt("q_tpcds_q98")
+    val q98 = formatted("q_tpcds_q98")
     assert(q98.contains("Window"), s"Q98 ratio window missing:\n$q98")
     assert(q98.contains("In(i_category"), s"Q98 category slice not pushed:\n$q98")
     // Q69: channel membership stays semi/anti keyed on the customer key
-    val q69 = fmt("q_tpcds_q69")
+    val q69 = formatted("q_tpcds_q69")
     assert(q69.contains("LeftSemi") && q69.contains("LeftAnti"),
       s"Q69 lost its semi/anti channel probes:\n$q69")
     assert(q69.contains("In(ca_state"), s"Q69 state slice not pushed:\n$q69")
     // Q6: the correlated category average decorrelates to a keyed
     // aggregate join; the premium item set prunes the fact via a semi join
-    val q6 = fmt("q_tpcds_q6")
+    val q6 = formatted("q_tpcds_q6")
     assert(q6.contains("avg_cat"), s"Q6 category-average attach missing:\n$q6")
     assert(q6.contains("LeftSemi"), s"Q6 premium-item IN not a semi join:\n$q6")
   }
 
   test("round-9 continuation shapes: zip/basket/inventory waves keep their scale plans") {
-    import org.apache.spark.sql.execution.ExplainMode
-    def fmt(name: String): String =
-      SparkEntry.queries(name)(spark, TestSpark.sf0001)
-        .queryExecution.explainString(ExplainMode.fromString("formatted"))
     // Q19: date/item/store broadcast; the customer→address chain is keyed;
     // the published manager filter is pushed into the item scan
-    val q19 = fmt("q_tpcds_q19")
+    val q19 = formatted("q_tpcds_q19")
     assert(q19.contains("BroadcastHashJoin"), s"Q19 dims not broadcast:\n$q19")
     assert(q19.contains("EqualTo(i_manager_id,8)"),
       s"Q19 manager filter not pushed:\n$q19")
     // Q8: the qualifying-prefix set semi-joins the tiny store dim — the
     // fact side must stream through broadcasts only (no SortMergeJoin)
-    val q8 = fmt("q_tpcds_q8")
+    val q8 = formatted("q_tpcds_q8")
     assert(q8.contains("LeftSemi"), s"Q8 qualifying semi missing:\n$q8")
     assert(!q8.contains("SortMergeJoin"), s"Q8 fact side shuffles a join:\n$q8")
     // Q75: each channel LEFT-joins returns on the (order, item) PK; the
     // channels union (never join); the year-pair join runs post-aggregate
-    val q75 = fmt("q_tpcds_q75")
+    val q75 = formatted("q_tpcds_q75")
     assert(q75.contains("cr_order_number") && q75.contains("sr_ticket_number")
       && q75.contains("wr_order_number"), s"Q75 returns joins lost PKs:\n$q75")
     assert(q75.contains("Union"), s"Q75 lost its channel union:\n$q75")
     // Q66: both facts stream through broadcast time/ship-mode/date semis
     // and union before ONE warehouse-key aggregate
-    val q66 = fmt("q_tpcds_q66")
+    val q66 = formatted("q_tpcds_q66")
     assert(q66.contains("Union") && q66.contains("BroadcastHashJoin"),
       s"Q66 lost union-through-broadcasts:\n$q66")
     assert(!q66.contains("SortMergeJoin"), s"Q66 fact side shuffles a join:\n$q66")
     // Q34/Q73: the ticket aggregate groups the FILTERED fact (semis on
     // store/demographics broadcast below the aggregate)
     for (name <- Seq("q_tpcds_q34", "q_tpcds_q73")) {
-      val p = fmt(name)
+      val p = formatted(name)
       assert(p.contains("LeftSemi"), s"$name basket gates not semi joins:\n$p")
       assert(p.contains("ss_ticket_number"), s"$name lost the ticket key:\n$p")
     }
     // Q63: the deviation window partitions the AGGREGATE, not the fact
-    val q63 = fmt("q_tpcds_q63")
+    val q63 = formatted("q_tpcds_q63")
     assert(q63.contains("Window"), s"Q63 deviation window missing:\n$q63")
     // Q39: the cov predicate survives as integer arithmetic on the
     // aggregate (no float comparison at the boundary)
-    val q39 = fmt("q_tpcds_q39")
+    val q39 = formatted("q_tpcds_q39")
     assert(q39.contains("HashAggregate"), s"Q39 lost its keyed aggregate:\n$q39")
     // Q78: all three channels anti-join their returns on the (order, item)
     // PK before aggregating at the customer grain
-    val q78 = fmt("q_tpcds_q78")
+    val q78 = formatted("q_tpcds_q78")
     assert(q78.contains("LeftAnti"), s"Q78 returns filter not an anti join:\n$q78")
     assert(q78.contains("cr_order_number") && q78.contains("wr_order_number"),
       s"Q78 anti joins lost their PKs:\n$q78")
     // Q32: the per-item threshold attaches by a keyed join; the manufact
     // band prunes item at the scan
-    val q32 = fmt("q_tpcds_q32")
+    val q32 = formatted("q_tpcds_q32")
     assert(q32.contains("t_item") && q32.contains("tot_c"),
       s"Q32 threshold attach missing:\n$q32")
     assert(q32.contains("GreaterThanOrEqual(i_manufact_id,1)"),
@@ -364,19 +383,15 @@ class PlanGuardSpec extends AnyFunSuite {
   }
 
   test("99-completion wave: one-pass year pivots, hashed scalar attaches, PK returns joins") {
-    import org.apache.spark.sql.execution.ExplainMode
-    def fmt(name: String): String =
-      SparkEntry.queries(name)(spark, TestSpark.sf0001)
-        .queryExecution.explainString(ExplainMode.fromString("formatted"))
     // formatted explain lists each scan's path on its "Location:" detail line
     def factScans(plan: String, table: String): Int =
       plan.linesIterator.count(l => l.contains("Location") && l.contains(s"/$table.parquet"))
     // Q4/Q74: the year-over-year totals are ONE conditional aggregate per
     // channel — each fact scanned once, never once per year
-    val q4 = fmt("q_tpcds_q4")
+    val q4 = formatted("q_tpcds_q4")
     for (fact <- Seq("store_sales", "catalog_sales", "web_sales"))
       assert(factScans(q4, fact) == 1, s"Q4 scans $fact more than once:\n$q4")
-    val q74 = fmt("q_tpcds_q74")
+    val q74 = formatted("q_tpcds_q74")
     assert(factScans(q74, "store_sales") == 1 && factScans(q74, "web_sales") == 1,
       s"Q74 year pivot re-scans a fact:\n$q74")
     // Q64: the published cross_sales self-pairing plans as two year-sliced
@@ -385,7 +400,7 @@ class PlanGuardSpec extends AnyFunSuite {
     // DISJOINT year slices (total I/O ≈ one scan of both years, and every
     // fact row flows through exactly one join pipeline). Assert both the
     // two scans AND the disjoint pushed year filters that make them cheap.
-    val q64 = fmt("q_tpcds_q64")
+    val q64 = formatted("q_tpcds_q64")
     assert(factScans(q64, "store_sales") == 2,
       s"Q64 cross_sales pairing lost a year-sliced subtree:\n$q64")
     assert(q64.contains("EqualTo(d_year,1999)") &&
@@ -397,7 +412,7 @@ class PlanGuardSpec extends AnyFunSuite {
     // shape (its item slice and pinned sf1 inputs differ), so it must keep
     // the exact same physical guarantees — disjoint pushed year slices, two
     // fact scans, PK joins
-    val q64p = fmt("q_tpcds_q64_pub")
+    val q64p = formatted("q_tpcds_q64_pub")
     assert(factScans(q64p, "store_sales") == 2,
       s"Q64_pub cross_sales pairing lost a year-sliced subtree:\n$q64p")
     assert(q64p.contains("EqualTo(d_year,1999)") &&
@@ -408,62 +423,54 @@ class PlanGuardSpec extends AnyFunSuite {
     // Q23/Q24: the 1-row scalar (max spend / all-colors average) attaches
     // by a broadcast HASH join on the derived key — the global no-nested-
     // loop sweep keeps it honest; here assert the key survives
-    assert(fmt("q_tpcds_q23").contains("jk"), "Q23 scalar attach key folded away")
-    assert(fmt("q_tpcds_q24").contains("jk"), "Q24 threshold attach key folded away")
+    assert(formatted("q_tpcds_q23").contains("jk"), "Q23 scalar attach key folded away")
+    assert(formatted("q_tpcds_q24").contains("jk"), "Q24 threshold attach key folded away")
     // Q80: all three channels join returns at the line grain on their
     // (order/ticket, item) PKs, then union into one rollup
-    val q80 = fmt("q_tpcds_q80")
+    val q80 = formatted("q_tpcds_q80")
     assert(q80.contains("sr_ticket_number") && q80.contains("cr_order_number")
       && q80.contains("wr_order_number"), s"Q80 lost a returns PK join:\n$q80")
     assert(q80.contains("Union") && q80.contains("Expand"),
       s"Q80 lost its channel union/rollup:\n$q80")
     // Q58: the anchor year resolves via the broadcast nested lookup
-    val q58 = fmt("q_tpcds_q58")
+    val q58 = formatted("q_tpcds_q58")
     assert(q58.contains("d_week_seq") && q58.contains("BroadcastHashJoin"),
       s"Q58 anchor derivation not broadcast:\n$q58")
     // Q18: geography rollup over broadcast demographics
-    val q18 = fmt("q_tpcds_q18")
+    val q18 = formatted("q_tpcds_q18")
     assert(q18.contains("Expand") && q18.contains("BroadcastHashJoin"),
       s"Q18 rollup/broadcast shape lost:\n$q18")
   }
 
   test("published TPC-H twins: pushed slices, keyed threshold attach, hashed scalar + anti") {
-    import org.apache.spark.sql.execution.ExplainMode
-    def fmt(name: String): String =
-      SparkEntry.queries(name)(spark, TestSpark.sf0001)
-        .queryExecution.explainString(ExplainMode.fromString("formatted"))
     // Q17-full: the per-part 20%-average threshold joins back KEYED on
     // partkey (never recomputed per row), and the brand/container slice
     // is pushed into the part scan
-    val q17 = fmt("q_tpch_q17_full")
+    val q17 = formatted("q_tpch_q17_full")
     assert(q17.contains("t_key"), s"Q17-full threshold join lost its key:\n$q17")
     assert(q17.contains("EqualTo(p_brand,Brand#23)"),
       s"Q17-full brand slice not pushed:\n$q17")
     // Q19-full: the mode/instruct conjuncts shared by all three branches
     // reach the lineitem scan as pushed filters
-    val q19 = fmt("q_tpch_q19_full")
+    val q19 = formatted("q_tpch_q19_full")
     assert(q19.contains("EqualTo(l_shipinstruct,DELIVER IN PERSON)"),
       s"Q19-full shared conjunct not pushed:\n$q19")
     assert(q19.contains("In(l_shipmode"), s"Q19-full mode IN not pushed:\n$q19")
     // Q22-full: the positive-balance average attaches by a broadcast HASH
     // join (global sweep forbids the nested-loop degradation) and the
     // no-orders test is a LEFT ANTI on the customer key
-    val q22 = fmt("q_tpch_q22_full")
+    val q22 = formatted("q_tpch_q22_full")
     assert(q22.contains("jk"), s"Q22-full scalar attach key folded away:\n$q22")
     assert(q22.contains("LeftAnti"), s"Q22-full NOT EXISTS not an anti join:\n$q22")
   }
 
   test("round-10 published-gate shapes: pushed store-city/household/carrier filters") {
-    import org.apache.spark.sql.execution.ExplainMode
-    def fmt(name: String): String =
-      SparkEntry.queries(name)(spark, TestSpark.sf0001)
-        .queryExecution.explainString(ExplainMode.fromString("formatted"))
     // Q46/Q68: published s_city pair pushed into the store scan, the
     // published hd disjunction pushed into household_demographics, and
     // both broadcast into the fact (the per-ticket aggregate then rides
     // the dense ticket key — no fact-side SortMergeJoin before it)
     for (q <- Seq("q_tpcds_q46", "q_tpcds_q68")) {
-      val p = fmt(q)
+      val p = formatted(q)
       assert(p.contains("In(s_city, [Fairview,Midway])") ||
         p.contains("In(s_city, [Midway,Fairview])"),
         s"$q store-city filter not pushed:\n$p")
@@ -472,20 +479,18 @@ class PlanGuardSpec extends AnyFunSuite {
     }
     // Q66: the published carrier pair pushed into the ship_mode scan that
     // feeds the broadcast semi
-    val q66 = fmt("q_tpcds_q66")
+    val q66 = formatted("q_tpcds_q66")
     assert(q66.contains("In(sm_carrier, [BARIAN,DHL])") ||
       q66.contains("In(sm_carrier, [DHL,BARIAN])"),
       s"Q66 carrier filter not pushed:\n$q66")
     // Q56: the published color triple pushed into the item scan
-    val q56 = fmt("q_tpcds_q56")
+    val q56 = formatted("q_tpcds_q56")
     assert(q56.contains("i_color") && q56.contains("slate"),
       s"Q56 published color triple not at the scan:\n$q56")
   }
 
   test("q_win_rank2 slices by deterministic data buckets, not by the 5-value key") {
-    import org.apache.spark.sql.execution.ExplainMode
-    val plan = SparkEntry.queries("q_win_rank2")(spark, TestSpark.sf0001)
-      .queryExecution.explainString(ExplainMode.fromString("formatted"))
+    val plan = formatted("q_win_rank2")
     // the big window runs over (pid, priority) — parallelism ∝ data; the
     // shuffle key must include the slice id, never the 5-value key alone
     assert(plan.contains("pid"), s"local window not slice-keyed:\n$plan")

@@ -75,6 +75,21 @@ class RobustnessSpec extends AnyFunSuite {
     assert(Tables.footerRowCount(spark, dir, "t") === 1000L)
   }
 
+  test("q_agg_quantile's text refuses more than exactQuantileMaxRows orders, naming q_agg_approx_quantile") {
+    // one fixture row repeated: the footers carry the row count, the
+    // constant columns keep the files tiny, and the text would build
+    val dir = java.nio.file.Files.createTempDirectory("graft-bigorders").toString
+    spark.range(0, Relational.exactQuantileMaxRows + 1, 1, 4)
+      .crossJoin(Tables(spark, TestSpark.sf001, "orders").limit(1)).drop("id")
+      .write.parquet(s"$dir/orders.parquet")
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.queries("q_agg_quantile")(spark, dir)
+    }
+    assert(e.getMessage.contains("q_agg_approx_quantile"), e.getMessage)
+    // under the fence the text still builds and runs
+    assert(SparkEntry.queries("q_agg_quantile")(spark, TestSpark.sf001).count() === 5L)
+  }
+
   test("task retries are deterministic: injected fail-once tasks leave query + generation output bit-identical") {
     // r13 verdict #2: hash-based generation/sampling and taskRetries=0
     // runs ASSERTED retry-safety by construction; this demonstrates it.
