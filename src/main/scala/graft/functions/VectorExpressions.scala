@@ -180,11 +180,13 @@ object vec {
       GraftColumnBridge.expression(e), bands, bitsPerBand))
 }
 
-/** SQL-surface registration (`spark.sql.extensions=graft.GraftExtensions`
-  * on a cluster, or `.withExtensions(new GraftExtensions)` when building a
-  * session): exposes `vector_dot(a, b)` and `lsh_signature(v, bands, bits)`
-  * to SQL, and injects the optimizer-level unkeyed-join guard
-  * (graft.plans.JoinGuardRule, armed via `spark.graft.joinGuard=true`). */
+/** SQL-surface registration (`spark.sql.extensions=graft.functions.GraftExtensions`,
+  * which [[graft.plans.SessionDefaults]] sets for every graft session):
+  * exposes `vector_dot(a, b)`, `lsh_signature(v, bands, bits)` and the
+  * text hashes to SQL, and injects two optimizer rules in this order:
+  * graft.plans.SingleRowAttach (always on: a 1-row side attaches by a hash
+  * join) and the unkeyed-join guard graft.plans.JoinGuardRule (armed via
+  * `spark.graft.joinGuard=true`). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   private def intLit(e: Expression, what: String): Int = e match {
     case Literal(v: Int, IntegerType) => v
@@ -214,6 +216,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("minhash_sig"),
       new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
       (exprs: Seq[Expression]) => MinHashSig(exprs(0), intLit(exprs(1), "perms"))))
-    ext.injectOptimizerRule(graft.plans.JoinGuardRule)
+    ext.injectOptimizerRule(_ => graft.plans.SingleRowAttach)
+    ext.injectOptimizerRule(graft.plans.JoinGuardRule(_))
   }
 }

@@ -146,7 +146,7 @@ object Scale {
     * (rank of a tie group is one number, but its rows still co-locate to
     * compute it).
     *
-    * Internal column names `_bk/_lo/_hi/_pid/_lrn/_opid/_off` are
+    * Internal column names `_lo/_hi/_pid/_lrn/_opid/_off` are
     * reserved: an input frame already carrying one would be silently
     * overwritten by `withColumn` and dropped at the end, so the helper
     * refuses it up front.
@@ -170,7 +170,7 @@ object Scale {
                  rankCol: String, slices: Int = 0): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types._
-    val reserved = Seq("_bk", "_lo", "_hi", "_pid", "_lrn", "_opid", "_off")
+    val reserved = Seq("_lo", "_hi", "_pid", "_lrn", "_opid", "_off")
     val clash = df.columns.toSet.intersect(reserved.toSet)
     require(clash.isEmpty,
       s"globalRank reserves internal column names ${reserved.mkString(",")}; " +
@@ -208,20 +208,15 @@ object Scale {
           date_part(lit("SECOND"), col(orderCol)).cast(DoubleType)
       case _ => col(orderCol).cast(DoubleType)
     }
-    // the 1-row bounds attach by the repo's nullable-derived-key broadcast
-    // HASH join (a key computed from a column, so it can't constant-fold
-    // back into a nested-loop cross join — PlanGuard forbids unkeyed joins)
+    // the 1-row bounds attach by a broadcast HASH join
+    // (graft.plans.SingleRowAttach keys the cross join)
     val bounds = df.agg(min(v).as("_lo"), max(v).as("_hi"))
-      // pmod(hash, 1) is always 0 but NOT constant-foldable, so the attach
-      // stays a broadcast HASH join even over a non-nullable order column
-      .withColumn("_bk", pmod(xxhash64(col("_hi")), lit(1L)))
     val dir = if (ascending) v - col("_lo") else col("_hi") - v
     val span = col("_hi") - col("_lo") + lit(1e-9)
     // NULL order value (or all-NULL frame): asc sorts nulls FIRST → slice
     // 0; desc sorts them LAST → last slice — matching Window.orderBy
     val nullPid = if (ascending) lit(0) else lit(p - 1)
-    val parted = df.withColumn("_bk", pmod(xxhash64(v), lit(1L)))
-      .join(broadcast(bounds), "_bk")
+    val parted = df.crossJoin(broadcast(bounds))
       // (dir / span) first: dir*p overflows to Infinity for |values| near
       // Double.MaxValue/p, and floor(Inf)'s Long.MaxValue wraps the non-ANSI
       // Int cast to -1 → greatest() would clamp the LARGEST rows into slice
@@ -229,7 +224,7 @@ object Scale {
       .withColumn("_pid",
         least(lit(p - 1), greatest(lit(0),
           coalesce(floor(dir / span * p).cast(IntegerType), nullPid))))
-      .drop("_bk", "_lo", "_hi")
+      .drop("_lo", "_hi")
     val ord = if (ascending) col(orderCol).asc else col(orderCol).desc
     val withLrn = parted
       .withColumn("_lrn", row_number().over(
@@ -294,7 +289,7 @@ object Scale {
                rankCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types.IntegerType
-    val reserved = Seq("_bk", "_thr", "_nn")
+    val reserved = Seq("_thr", "_nn")
     val clash = df.columns.toSet.intersect(reserved.toSet)
     require(clash.isEmpty,
       s"topKRank reserves internal column names ${reserved.mkString(",")}; " +
@@ -306,20 +301,15 @@ object Scale {
       .orderBy(if (ascending) col("_v").asc else col("_v").desc)
       .limit(k)
       .agg(kthAgg.as("_thr"), count(col("_v")).as("_nn"))
-      // pmod(hash, 1) is always 0 but NOT constant-foldable (unlike x*0
-      // over a non-nullable hash), so the attach stays a broadcast HASH
-      // join instead of collapsing to a nested loop
-      .withColumn("_bk", pmod(xxhash64(col("_nn")), lit(1L)))
     val survives =
       if (ascending) v <= col("_thr") || v.isNull // nulls sort FIRST: rank 1
       else v >= col("_thr") || (v.isNull && col("_nn") < k) // nulls LAST
-    val joined = df
-      .withColumn("_bk", pmod(xxhash64(v), lit(1L)))
-      .join(broadcast(thr), "_bk")
-    joined.filter(survives)
+    // the 1-row threshold attaches by a broadcast HASH join
+    // (graft.plans.SingleRowAttach keys the cross join)
+    df.crossJoin(broadcast(thr)).filter(survives)
       .withColumn(rankCol, rank().over(Window.orderBy(ord)).cast(IntegerType))
       .filter(col(rankCol) <= k)
-      .drop("_bk", "_thr", "_nn")
+      .drop("_thr", "_nn")
   }
 
   /** [Q-win-grank] the generic two-phase global rank DECLARED — every

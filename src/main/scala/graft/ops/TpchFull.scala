@@ -15,8 +15,9 @@ import graft.schema.TpchSchemas
   * subquery, the complaint anti-join, and the nested-IN promotion chain.
   *
   * Same exactness rules as [[Tpch]]: DECIMAL until one final DOUBLE cast,
-  * scalar subqueries as 1-row broadcast hash joins on nullable-derived
-  * constant keys, LIMIT only on a total order. The DuckDB oracle reads the
+  * scalar subqueries as 1-row aggregates attached by a broadcast hash join
+  * ([[graft.plans.SingleRowAttach]] keys the cross join), LIMIT only on a
+  * total order. The DuckDB oracle reads the
   * SAME generated parquet via paths pinned to the driver's correctness
   * scale.
   *
@@ -56,46 +57,11 @@ object TpchFull {
     graft.Catalog.table(spark, s"$dir/$name.parquet", TpchSchemas.stored(name))
   private val D = DoubleType
 
-  /** [Q-tpch-q2] TPC-H Q2 (minimum-cost supplier): the correlated MIN
-    * subquery over region-local partsupp decorrelated into a keyed
-    * min-aggregate joined back on (partkey, exact DECIMAL cost equality).
-    * The region⋈nation⋈supplier slice broadcasts into partsupp; the part
-    * filter broadcasts too, so partsupp — the big side — never shuffles
-    * except its own group-by on partkey. Top-100 on the published total
-    * order.
-    * Kept as a hand form: PlanGuardSpec assertion "Q2 min-cost attach
-    * missing" fails on the text's plan, which has no mn_cost attach (text
-    * 0.89x at sf0.1). */
-  def q_tpch_q2(s: SparkSession, d: String): DataFrame = {
-    val dir = ensure(s, d)
-    val pf = t(s, dir, "part")
-      .filter(col("p_size") === 15 && col("p_type").like("%BRASS"))
-      .select("p_partkey", "p_mfgr")
-    val eurSupp = t(s, dir, "supplier")
-      .join(broadcast(t(s, dir, "nation")
-          .join(broadcast(t(s, dir, "region").filter(col("r_name") === "EUROPE")),
-            col("n_regionkey") === col("r_regionkey"))
-          .select("n_nationkey", "n_name")),
-        col("s_nationkey") === col("n_nationkey"))
-    val ps = t(s, dir, "partsupp")
-      .join(broadcast(pf), col("ps_partkey") === col("p_partkey"))
-      .join(eurSupp, col("ps_suppkey") === col("s_suppkey"))
-    val mn = ps.groupBy(col("ps_partkey").as("mn_key"))
-      .agg(min(col("ps_supplycost")).as("mn_cost"))
-    ps.join(broadcast(mn), col("ps_partkey") === col("mn_key") &&
-        col("ps_supplycost") === col("mn_cost"))
-      .select(col("s_acctbal").cast(D).as("s_acctbal"), col("s_name"),
-        col("n_name"), col("p_partkey"), col("p_mfgr"), col("s_address"),
-        col("s_phone"), col("s_comment"))
-      .orderBy(col("s_acctbal").desc, col("n_name"), col("s_name"), col("p_partkey"))
-      .limit(100)
-  }
-
   /** [Q-tpch-q11] TPC-H Q11 (important stock): national partsupp value
-    * over a scalar fraction-of-total threshold. The total is the SAME
-    * aggregate re-run and attached as a 1-row broadcast hash join on a
-    * nullable-derived constant key; both sides stay DECIMAL so the
-    * threshold comparison is exact.
+    * over a scalar fraction-of-total threshold. The total is summed from the
+    * same part-grain aggregate and cross-joined as one broadcast row, a
+    * hash join under [[graft.plans.SingleRowAttach]]; both sides stay
+    * DECIMAL so the threshold comparison is exact.
     * Kept as a hand form: Materialize barrier (one partsupp scan instead of
     * two), and the text runs 1.10-1.15x its time at sf0.1 (medians of 5 and
     * 11 interleaved runs, local[4]). */
@@ -116,9 +82,7 @@ object TpchFull {
       de.groupBy(col("ps_partkey")).agg(sum(col("v")).as("value_d")))).head
     val thr = grouped
       .agg((sum(col("value_d")) * lit(BigDecimal("0.0001"))).as("thr"))
-      .withColumn("jk", (col("thr") * 0).cast(IntegerType))
-    grouped.withColumn("jk", (col("value_d") * 0).cast(IntegerType))
-      .join(broadcast(thr), Seq("jk"))
+    grouped.crossJoin(broadcast(thr))
       .filter(col("value_d") > col("thr"))
       .select(col("ps_partkey"), col("value_d").cast(D).as("value"))
   }
@@ -152,9 +116,10 @@ object TpchFull {
   /** [Q-tpch-q22-full] TPC-H Q22 with the PUBLISHED phone-prefix country
     * codes — the twin of the fixture-adapted `q_tpch_q22` text in
     * [[graft.SparkEntry.fixtureSql]] (the fixture has no c_phone; the
-    * generated one carries the spec's 'CC-nnn-nnn-nnnn' shape). Positive-balance average over the 7-code
-    * cohort attaches as a 1-row broadcast HASH join on a nullable-derived
-    * key; NOT EXISTS folds to LEFT ANTI on the customer key.
+    * generated one carries the spec's 'CC-nnn-nnn-nnnn' shape). The
+    * positive-balance average over the 7-code cohort is cross-joined as one
+    * broadcast row, a hash join under [[graft.plans.SingleRowAttach]]; NOT
+    * EXISTS folds to LEFT ANTI on the customer key.
     * Kept as a hand form: the text runs 1.15x its time at sf0.1 (hand 0.25
     * s, text 0.28 s, median of 5 interleaved runs, local[4]). */
   def q_tpch_q22_full(s: SparkSession, d: String): DataFrame = {
@@ -166,10 +131,8 @@ object TpchFull {
       .select("c_custkey", "c_acctbal", "cntrycode")
     val avgBal = cohort.filter(col("c_acctbal") > 0)
       .agg((sum(dec8(col("c_acctbal"))).cast(D) / count(col("c_acctbal"))).as("ab"))
-      .withColumn("jk", coalesce(col("ab") * 0, lit(0)).cast(IntegerType))
     cohort
-      .withColumn("jk", coalesce(col("c_acctbal") * 0, lit(0)).cast(IntegerType))
-      .join(broadcast(avgBal), Seq("jk"))
+      .crossJoin(broadcast(avgBal))
       .filter(col("c_acctbal").cast(D) > col("ab"))
       .join(t(s, dir, "orders").select("o_custkey"),
         col("c_custkey") === col("o_custkey"), "left_anti")
@@ -190,7 +153,6 @@ object TpchFull {
 
   /** The hand-written forms that stay, each for the reason in its doc. */
   private[graft] val hand: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_tpch_q2" -> q_tpch_q2,
     "q_tpch_q11" -> q_tpch_q11,
     "q_tpch_q17_full" -> q_tpch_q17_full,
     "q_tpch_q22_full" -> q_tpch_q22_full)
@@ -204,6 +166,10 @@ object TpchFull {
   private def texts(d: TpcSql.Dialect): Map[String, String] = {
     import d.P
     Map(
+    // [Q-tpch-q2] TPC-H Q2 (minimum-cost supplier): Spark decorrelates the
+    // correlated MIN subquery over region-local partsupp into a min
+    // aggregate per part, joined back on (partkey, exact DECIMAL cost
+    // equality). Top-100 on the published total order.
     "q_tpch_q2" ->
       s"""SELECT CAST(s_acctbal AS DOUBLE) AS s_acctbal, s_name, n_name,
          | p_partkey, p_mfgr, s_address, s_phone, s_comment

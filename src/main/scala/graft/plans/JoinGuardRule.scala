@@ -17,24 +17,7 @@ import org.apache.spark.sql.catalyst.expressions.{EqualNullSafe, EqualTo, Expres
   * moved every pushable conjunct into Join.condition — so a join written as
   * `a.join(b).where(a.k === b.k)` correctly passes.
   */
-case class JoinGuardRule(spark: SparkSession) extends Rule[LogicalPlan]
-    with PredicateHelper {
-  // mirrors ExtractEquiJoinKeys: a conjunct only counts as an equi key if
-  // each operand is evaluable against exactly one join side (either
-  // orientation). `a.x + b.y === b.z` references both sides on the left
-  // operand — NOT extractable, still a nested loop — and must not pass.
-  private def isEquiKey(l: Expression, r: Expression, j: Join): Boolean =
-    l.references.nonEmpty && r.references.nonEmpty &&
-      ((canEvaluate(l, j.left) && canEvaluate(r, j.right)) ||
-        (canEvaluate(l, j.right) && canEvaluate(r, j.left)))
-
-  private def hasEquiKey(j: Join): Boolean =
-    j.condition.exists(splitConjunctivePredicates(_).exists {
-      case EqualTo(l, r) => isEquiKey(l, r, j)
-      case EqualNullSafe(l, r) => isEquiKey(l, r, j)
-      case _ => false
-    })
-
+case class JoinGuardRule(spark: SparkSession) extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (spark.conf.getOption("spark.graft.joinGuard").contains("true")) {
       // the CONDITION decides, not the join type: an explicit crossJoin
@@ -42,7 +25,7 @@ case class JoinGuardRule(spark: SparkSession) extends Rule[LogicalPlan]
       // equi join and passes; an inner join with no condition is a
       // cartesian and fails
       plan.foreach {
-        case j: Join if !hasEquiKey(j) =>
+        case j: Join if !JoinGuardRule.hasEquiKey(j) =>
           throw new IllegalStateException(
             "graft join guard: join has no equi key and would execute as a " +
               s"nested loop / cartesian (type=${j.joinType}, condition=" +
@@ -54,4 +37,23 @@ case class JoinGuardRule(spark: SparkSession) extends Rule[LogicalPlan]
     }
     plan
   }
+}
+
+object JoinGuardRule extends PredicateHelper {
+  // mirrors ExtractEquiJoinKeys: a conjunct only counts as an equi key if
+  // each operand is evaluable against exactly one join side (either
+  // orientation). `a.x + b.y === b.z` references both sides on the left
+  // operand — NOT extractable, still a nested loop — and must not pass.
+  private def isEquiKey(l: Expression, r: Expression, j: Join): Boolean =
+    l.references.nonEmpty && r.references.nonEmpty &&
+      ((canEvaluate(l, j.left) && canEvaluate(r, j.right)) ||
+        (canEvaluate(l, j.right) && canEvaluate(r, j.left)))
+
+  /** Whether `j` has a conjunct Spark plans as a hash/merge join key. */
+  def hasEquiKey(j: Join): Boolean =
+    j.condition.exists(splitConjunctivePredicates(_).exists {
+      case EqualTo(l, r) => isEquiKey(l, r, j)
+      case EqualNullSafe(l, r) => isEquiKey(l, r, j)
+      case _ => false
+    })
 }

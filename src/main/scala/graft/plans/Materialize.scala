@@ -8,11 +8,11 @@ import org.apache.spark.sql.DataFrame
   *
   * WHY: several declared queries attach a derived scalar/threshold back to
   * the aggregate it was derived from (Q30/Q81 per-group outlier cuts,
-  * Q23b's frequency mean, TPC-H Q11/Q15 totals, Q14's avg_sales, Q44's
-  * baseline). A DataFrame subtree consumed by two such branches is computed
+  * Q23b's frequency mean, TPC-H Q11/Q15 totals, Q14's avg_sales). A
+  * DataFrame subtree consumed by two such branches is computed
   * once ONLY while every consumer's copy stays canonically equal (then AQE
   * runtime stage reuse collapses them — q_tpcds_q23's freq/spend, audited
-  * there, need no barrier). The moment one consumer specializes its copy
+  * in OPTIMIZATION_r19.md, need no barrier). The moment one consumer specializes its copy
   * (an inferred IsNotNull pushed below the aggregate, divergent column
   * pruning, a literal-bearing filter), reuse is off and each copy runs its
   * own full fact scan — measured r19 in final executed plans: q14's

@@ -90,6 +90,18 @@ import org.apache.spark.sql.SparkSession
   * fixed for the JVM by its first `file:` access (Hadoop caches one
   * instance per scheme and user), so a session built without [[tuned]]
   * after one built with it still gets graft's class, and the reverse.
+  *
+  * EXTENSIONS. `spark.sql.extensions` names
+  * [[graft.functions.GraftExtensions]], so the mains plan what the tests
+  * plan: graft's SQL functions resolve, [[SingleRowAttach]] attaches every
+  * 1-row side by a broadcast hash join instead of a nested loop, and
+  * [[JoinGuardRule]] is there to arm. Without it a TPC text that attaches
+  * a scalar aggregate by a comma join (q9, q44, q61, q77) would plan a
+  * nested loop in Bench and Verify while the tests saw a hash join. Like
+  * every key here, a `-Dspark.sql.extensions=…` set by a deployment wins,
+  * and so replaces graft's extension; the comma-separated form
+  * `-Dspark.sql.extensions=graft.functions.GraftExtensions,other.Ext`
+  * keeps both.
   */
 object SessionDefaults {
   /** Spark's own generated-class cache bound (a static conf; declared
@@ -101,6 +113,12 @@ object SessionDefaults {
     * [[defaults]], which lists it). */
   val localFs: (String, String) =
     "spark.hadoop.fs.file.impl" -> classOf[graft.io.NioLocalFileSystem].getName
+
+  /** graft's session extension: its SQL functions, [[SingleRowAttach]]
+    * and [[JoinGuardRule]] (a static conf, read when the session is built;
+    * declared before [[defaults]], which lists it). */
+  val extensions: (String, String) =
+    "spark.sql.extensions" -> classOf[graft.functions.GraftExtensions].getName
 
   val defaults: Seq[(String, String)] = Seq(
     // pin ANSI mode (Spark 4's default) explicitly: the long-cents sum
@@ -122,7 +140,10 @@ object SessionDefaults {
     codegenCache,
     // set and read local file permissions in-process, not by forking
     // chmod / ls (see the scaladoc's local FileSystem section)
-    localFs)
+    localFs,
+    // graft's functions and plan rules (see the scaladoc's extensions
+    // section)
+    extensions)
 
   /** Apply [[defaults]] to a session builder. A key already present as a
     * system property (the SPARK_GRAFT_CONF A/B harness, or an operator's

@@ -429,8 +429,7 @@ class ScaleSpec extends AnyFunSuite {
     assert(!plan.toUpperCase.contains("SPARK_PARTITION_ID"),
       s"pid derived from physical partition placement:\n$plan")
     // the bounds attach must stay a HASH join even over this NON-NULLABLE
-    // order column (an x*0 key would constant-fold and degrade to a
-    // nested loop — the pmod(hash, 1) key is the guard)
+    // order column (graft.plans.SingleRowAttach keys the 1-row attach)
     assert(!plan.contains("BroadcastNestedLoop"),
       s"bounds attach degraded to a nested loop:\n$plan")
   }

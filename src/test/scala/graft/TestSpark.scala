@@ -5,12 +5,12 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for the whole forked test JVM. It takes the
   * engine's codegen-cache bound and local FileSystem from
   * [[graft.plans.SessionDefaults]] (both static for the JVM, so the first
-  * session must set them) but not the join-strategy defaults, so the plans
+  * session must set them) and graft's session extension from the same
+  * entry the mains use, but not the join-strategy defaults, so the plans
   * the tests assert are unchanged. */
 object TestSpark {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
@@ -20,6 +20,8 @@ object TestSpark {
         graft.plans.SessionDefaults.codegenCache._2)
       .config(graft.plans.SessionDefaults.localFs._1,
         graft.plans.SessionDefaults.localFs._2)
+      .config(graft.plans.SessionDefaults.extensions._1,
+        graft.plans.SessionDefaults.extensions._2)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
