@@ -182,11 +182,13 @@ object vec {
 
 /** SQL-surface registration (`spark.sql.extensions=graft.functions.GraftExtensions`,
   * which [[graft.plans.SessionDefaults]] sets for every graft session):
-  * exposes `vector_dot(a, b)`, `lsh_signature(v, bands, bits)` and the
-  * text hashes to SQL, and injects two optimizer rules in this order:
+  * exposes `vector_dot(a, b)`, `lsh_signature(v, bands, bits)`, the text
+  * hashes and the token kernels (`token_count(text)`, `term_counts(text,
+  * terms)`) to SQL, and injects three optimizer rules in this order:
   * graft.plans.SingleRowAttach (always on: a 1-row side attaches by a hash
-  * join) and the unkeyed-join guard graft.plans.JoinGuardRule (armed via
-  * `spark.graft.joinGuard=true`). */
+  * join), graft.plans.TokenCountRule (always on: `size(split(x, ' '))`
+  * counts on the bytes) and the unkeyed-join guard graft.plans.JoinGuardRule
+  * (armed via `spark.graft.joinGuard=true`). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   private def intLit(e: Expression, what: String): Int = e match {
     case Literal(v: Int, IntegerType) => v
@@ -213,10 +215,19 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
       (exprs: Seq[Expression]) => SimHash64(exprs(0))))
     ext.injectFunction((
+      FunctionIdentifier("token_count"),
+      new ExpressionInfo(classOf[TokenCount].getName, "token_count"),
+      (exprs: Seq[Expression]) => TokenCount(exprs(0))))
+    ext.injectFunction((
+      FunctionIdentifier("term_counts"),
+      new ExpressionInfo(classOf[TermCounts].getName, "term_counts"),
+      (exprs: Seq[Expression]) => TermCounts(exprs(0), exprs(1))))
+    ext.injectFunction((
       FunctionIdentifier("minhash_sig"),
       new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
       (exprs: Seq[Expression]) => MinHashSig(exprs(0), intLit(exprs(1), "perms"))))
     ext.injectOptimizerRule(_ => graft.plans.SingleRowAttach)
+    ext.injectOptimizerRule(_ => graft.plans.TokenCountRule)
     ext.injectOptimizerRule(graft.plans.JoinGuardRule(_))
   }
 }

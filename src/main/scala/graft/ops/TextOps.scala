@@ -12,6 +12,15 @@ import graft.functions.txt
 object TextOps {
   private[ops] def tokens: Column = split(col("text"), " ")
 
+  /** How many tokens of `split(text, ' ')` are one of `words`, as an int:
+    * the count `size(filter(split(text, ' '), x -> x = w1 OR …))` gives,
+    * summed from [[txt.term_counts]] with no token array or lambda. */
+  private def wordCount(words: String*): Column = {
+    val counts = txt.term_counts(col("text"), words)
+    words.indices.map(counts.getItem(_)).reduce(_ + _).cast("int")
+  }
+  private val stopWords = Seq("the", "a", "of", "de", "la")
+
   /** Word-level k-shingles (distinct), for Jaccard / MinHash. 1-based
     * element_at; guarded for texts shorter than k words.
     * The token array is bound ONCE via the single-element-array transform
@@ -50,7 +59,7 @@ object TextOps {
       .select(col("doc_id"), col("lang"),
         size(tokens).as("n_tokens"),
         length(col("text")).as("len"),
-        size(expr("filter(split(text, ' '), x -> x = 'the' OR x = 'a')")).as("n_stop"))
+        wordCount("the", "a").as("n_stop"))
       .select(col("doc_id"), col("lang"), col("n_tokens"), col("len"),
         ((col("len") - (col("n_tokens") - lit(1))).cast("double") / col("n_tokens"))
           .as("avg_token_len"),
@@ -65,21 +74,16 @@ object TextOps {
     *
     * Kept as a hand form: the text calls DuckDB's `list_filter`, which Spark
     * does not have. */
-  def q_text_langid(s: SparkSession, d: String): DataFrame = {
-    def markers(ws: Seq[String]): Column = {
-      val cond = ws.map(w => s"x = '$w'").mkString(" OR ")
-      size(expr(s"filter(split(text, ' '), x -> $cond)"))
-    }
+  def q_text_langid(s: SparkSession, d: String): DataFrame =
     Tables(s, d, "documents")
       .select(col("doc_id"), col("lang"),
-        markers(Seq("the", "a", "of")).as("en_n"),
-        markers(Seq("el", "la", "de")).as("es_n"),
-        markers(Seq("der", "die", "das")).as("de_n"))
+        wordCount("the", "a", "of").as("en_n"),
+        wordCount("el", "la", "de").as("es_n"),
+        wordCount("der", "die", "das").as("de_n"))
       .withColumn("pred_lang",
         when(col("es_n") > col("en_n") && col("es_n") >= col("de_n"), "es")
           .when(col("de_n") > col("en_n"), "de")
           .otherwise("en"))
-  }
 
   /** [Q-text-langid-ngram] character-trigram language ID: score = number of
     * text trigram occurrences hitting each language's profile set (classic
@@ -177,7 +181,7 @@ object TextOps {
         size(tokens).as("n_tokens"),
         length(col("text")).as("len"),
         length(regexp_replace(col("text"), "[A-Za-z0-9 ]", "")).as("n_sym"),
-        size(expr("filter(split(text, ' '), x -> x = 'the' OR x = 'a' OR x = 'of' OR x = 'de' OR x = 'la')")).as("n_stop"))
+        wordCount(stopWords: _*).as("n_stop"))
       .select(col("doc_id"), col("n_tokens"),
         ((col("len") - (col("n_tokens") - 1)).cast("double") / col("n_tokens")).as("mean_wlen"),
         (col("n_sym").cast("double") / col("len")).as("sym_ratio"),
@@ -310,7 +314,7 @@ object TextOps {
         size(tokens).as("n_tokens"),
         length(col("text")).as("len"),
         length(regexp_replace(col("text"), "[A-Za-z0-9 ]", "")).as("n_sym"),
-        size(expr("filter(split(text, ' '), x -> x = 'the' OR x = 'a' OR x = 'of' OR x = 'de' OR x = 'la')")).as("n_stop"),
+        wordCount(stopWords: _*).as("n_stop"),
         size(txt.shingle_hashes(col("text"), 3)).as("n_distinct"))
       .withColumn("mean_wlen",
         (col("len") - (col("n_tokens") - 1)).cast("double") / col("n_tokens"))

@@ -1339,7 +1339,7 @@ object Tpcds {
     // like the published dim inner joins would. Six fact scans each
     // aggregate map-side to ≤|locations| rows.
     "q_tpcds_q77" ->
-      s"""WITH dd AS (SELECT /*+ BROADCAST(date_dim) */
+      s"""WITH dd AS (SELECT
          | d_date_sk FROM ${P("date_dim")} WHERE d_year = 2000),
          | ss AS (SELECT ss_store_sk AS id, sum(ss_ext_sales_price) AS sales,
          |   sum(ss_net_profit) AS profit
@@ -1645,11 +1645,11 @@ object Tpcds {
     // customer address AND s_gmt_offset = -5 on the store (genVersion 13's
     // state-coherent offsets), with the published November month slice.
     "q_tpcds_q61" ->
-      s"""WITH dd AS (SELECT /*+ BROADCAST(date_dim) */ d_date_sk FROM ${P("date_dim")}
+      s"""WITH dd AS (SELECT d_date_sk FROM ${P("date_dim")}
          |  WHERE d_year = 2000 AND d_moy = 11),
-         | jry AS (SELECT /*+ BROADCAST(item) */
+         | jry AS (SELECT
          |  i_item_sk FROM ${P("item")} WHERE i_category = 'Jewelry'),
-         | st5 AS (SELECT /*+ BROADCAST(store) */
+         | st5 AS (SELECT
          |  s_store_sk FROM ${P("store")} WHERE s_gmt_offset = -5),
          | geo AS (SELECT ca_address_sk FROM ${P("customer_address")}
          |  WHERE ca_gmt_offset = -5),
@@ -3524,7 +3524,7 @@ object Tpcds {
     // sf100 OOM driver); the item semi-join is kept so membership
     // semantics stay exactly the published ones.
     "q_tpcds_q23" ->
-      s"""WITH dd4 AS ${M}(SELECT /*+ BROADCAST(date_dim) */
+      s"""WITH dd4 AS ${M}(SELECT
          | d_date_sk FROM ${P("date_dim")}
          |  WHERE d_year BETWEEN 1999 AND 2002),
          |freq AS ${M}(SELECT /*+ BROADCAST(item) */ DISTINCT f.ss_item_sk FROM (
@@ -3539,7 +3539,7 @@ object Tpcds {
          |best AS ${M}(SELECT cust FROM spend
          | WHERE CAST(ssales AS DOUBLE) >
          |  CAST((SELECT max(ssales) FROM spend) AS DOUBLE) * 0.5),
-         |ddm AS (SELECT /*+ BROADCAST(date_dim) */ d_date_sk FROM ${P("date_dim")}
+         |ddm AS (SELECT d_date_sk FROM ${P("date_dim")}
          | WHERE d_year = 2000 AND d_moy = 12)
          |SELECT CAST(sum(amt) AS DOUBLE) AS sum_sales FROM (
          | SELECT cs_quantity * cs_list_price AS amt FROM ${P("catalog_sales")}

@@ -146,6 +146,50 @@ class FunctionsSpec extends AnyFunSuite {
     assert(bad.count() == 0)
   }
 
+  /** Texts whose tokens `split(text, ' ')` must count the same on the
+    * bytes: null, empty, all-space, leading, trailing and doubled spaces,
+    * multi-byte and invalid UTF-8; two hold `red` and `blue`. */
+  private def edgeDocs: DataFrame = {
+    import spark.implicits._
+    Seq[(Long, String)]((101L, null), (102L, ""), (103L, " "), (104L, "  a"),
+      (105L, "a  "), (106L, "a  b a"), (107L, "ab abc a b ab"), (108L, "abc"),
+      (109L, "the a of the"), (110L, "x  y  z  x"), (111L, "naïve naïv naïve"),
+      (112L, "red fox red fox blue"), (113L, "red sky"))
+      .toDF("doc_id", "text").unionByName(unicodeDocs)
+      .repartition(2) // evaluated in generated code, not folded into a local relation
+  }
+
+  /** A term list with a term that is a prefix of a token (`ab` of `abc`),
+    * the empty term, a duplicate, a multi-byte term, the replacement
+    * character invalid bytes decode to, and a term holding a space. */
+  private val edgeTerms = Seq("a", "ab", "", "a", "naïve", "\uFFFD", "x y", "b")
+
+  private def withoutTokenCountRule[T](body: => T): T = {
+    spark.conf.set("spark.sql.optimizer.excludedRules", graft.plans.TokenCountRule.ruleName)
+    try body finally spark.conf.unset("spark.sql.optimizer.excludedRules")
+  }
+
+  test("token_count and term_counts count the tokens of split(text, ' ')") {
+    val got = edgeDocs.select(col("doc_id"), txt.token_count(col("text")).as("n"),
+        txt.term_counts(col("text"), edgeTerms).as("tc"))
+      .collect().map(r => r.getLong(0) -> r).toMap
+    val sizes = withoutTokenCountRule(edgeDocs.select(col("doc_id"),
+        size(split(col("text"), " ")).as("n")).collect())
+      .map(r => r.getLong(0) -> r.get(1)).toMap
+    val perTerm = edgeDocs.select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
+      .groupBy("doc_id", "tok").count().collect()
+      .map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
+    assert(got.keySet == sizes.keySet && got.size == 15)
+    for ((id, r) <- got) {
+      assert(r.get(1) == sizes(id), s"doc $id: token_count ${r.get(1)} vs size ${sizes(id)}")
+      if (r.isNullAt(1)) assert(r.isNullAt(2), s"doc $id")
+      else assert(r.getSeq[Long](2) == edgeTerms.map(w => perTerm.getOrElse((id, w), 0L)),
+        s"doc $id: ${r.getSeq[Long](2)}")
+    }
+    // each case is a real one: the replacement character and the empty term count
+    assert(got(2L).getSeq[Long](2)(5) > 0 && got(106L).getSeq[Long](2)(2) == 1)
+  }
+
   test("simhash64 is bit-equal to the two-shuffle aggregate formulation") {
     val docs = Tables(spark, TestSpark.sf001, "documents").select("doc_id", "text")
       .unionByName(unicodeDocs.select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
@@ -183,9 +227,11 @@ class FunctionsSpec extends AnyFunSuite {
     assert(viaSql.head.getSeq[Long](0) == got(0).getSeq[Long](1))
     // the other native text functions resolve from SQL too
     val sig = spark.sql(
-      "SELECT simhash64(t) AS s, minhash_sig(shingle_hashes(t, 3), 8) AS m " +
+      "SELECT simhash64(t) AS s, minhash_sig(shingle_hashes(t, 3), 8) AS m, " +
+        "token_count(t) AS n, term_counts(t, array('two', 'one', 'x')) AS tc " +
         "FROM sh_fn_test WHERE id = 0").collect().head
     assert(!sig.isNullAt(0) && sig.getSeq[Long](1).size == 8)
+    assert(sig.getInt(2) == 2 && sig.getSeq[Long](3) == Seq(1L, 1L, 0L))
   }
 
   test("join guard: mixed-side equality is NOT an equi key") {
@@ -242,5 +288,27 @@ class FunctionsSpec extends AnyFunSuite {
     val expect = Seq((1L, d1, 2L), (2L, d2, 1L))
       .sortBy { case (id, s, _) => (-s, id) }
     assert(got.toSeq == expect, s"got ${got.toSeq} expected $expect")
+  }
+
+  /** `bm25` and [[Bm25Reference]] give the same rows in the same order,
+    * each bm25 bit for bit. */
+  private def assertBm25MatchesReference(docs: DataFrame, terms: Seq[String], k: Int): Int = {
+    def rows(df: DataFrame) = df.select("doc_id", "bm25", "n_terms").collect().toSeq
+      .map(r => (r.getLong(0), java.lang.Double.doubleToRawLongBits(r.getDouble(1)), r.getLong(2)))
+    val got = rows(graft.ops.Relational.bm25(docs, terms, k))
+    assert(got == rows(Bm25Reference.bm25(docs, terms, k)), s"terms $terms, k $k")
+    got.size
+  }
+
+  test("bm25 equals the row-per-token reference exactly") {
+    val fixture = Tables(spark, TestSpark.sf0001, "documents").select("doc_id", "text")
+    val edge = edgeDocs
+    val termSets = Seq(Seq("hash", "join", "fast", "scan"), Seq("red", "blue"),
+      Seq("scan", "hash", "scan", "the"), Seq("the", "a", "the"), edgeTerms)
+    for (terms <- termSets; k <- Seq(1, 20, Int.MaxValue); docs <- Seq(fixture, edge))
+      assertBm25MatchesReference(docs, terms, k)
+    // the fixture holds the declared terms, the edge corpus red and blue
+    assert(assertBm25MatchesReference(fixture, termSets.head, Int.MaxValue) > 20)
+    assert(assertBm25MatchesReference(edge, termSets(1), Int.MaxValue) == 2)
   }
 }

@@ -519,6 +519,16 @@ class PlanGuardSpec extends AnyFunSuite {
       s"Q56 published color triple not at the scan:\n$q56")
   }
 
+  test("q_text_bm25 makes no row per token: no Generate, no join, one exchange") {
+    val plan = SparkEntry.queries("q_text_bm25")(spark, TestSpark.sf0001)
+      .queryExecution.optimizedPlan
+    val nodes = plan.collectWithSubqueries { case p => p.nodeName }
+    assert(!nodes.contains("Generate") && !nodes.exists(_.contains("Join")), plan)
+    // the corpus statistics' global aggregate; scoring and top-k are map-only
+    val f = formatted("q_text_bm25")
+    assert("""\(\d+\) Exchange""".r.findAllIn(f).size == 1, f)
+  }
+
   test("q_win_rank2 slices by deterministic data buckets, not by the 5-value key") {
     val plan = formatted("q_win_rank2")
     // the big window runs over (pid, priority) — parallelism ∝ data; the
