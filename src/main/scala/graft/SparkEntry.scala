@@ -50,8 +50,6 @@ object SparkEntry {
     "q_join_sm" -> Relational.q_join_sm,
     "q_join_theta" -> Relational.q_join_theta,
     "q_join_asof" -> Relational.q_join_asof,
-    // §2.7 sort / top-k / set ops
-    "q_text_editdist" -> TextOps.q_text_editdist,
     // §2.8 scalar function families
     "q_fn_string" -> Relational.q_fn_string,
     "q_fn_json" -> Relational.q_fn_json,
@@ -62,24 +60,17 @@ object SparkEntry {
     "q_stream_slide" -> Streams.q_stream_slide,
     "q_stream_session" -> Streams.q_stream_session,
     // §2.10 LLM-pipeline operators
-    "q_dedup_exact" -> Dedup.q_dedup_exact,
     "q_dedup_ngram" -> Dedup.q_dedup_ngram,
     "q_dedup_ngram_capped" -> Dedup.q_dedup_ngram_capped,
     "q_dedup_cluster" -> Dedup.q_dedup_cluster,
     "q_dedup_embed" -> Similarity.q_dedup_embed,
     "q_sim_topk" -> Similarity.q_sim_topk,
     "q_embed_quantize" -> Similarity.q_embed_quantize,
-    "q_text_stats" -> TextOps.q_text_stats,
     "q_text_tokens_re" -> TextOps.q_text_tokens_re,
-    "q_text_quality" -> TextOps.q_text_quality,
-    "q_text_langid" -> TextOps.q_text_langid,
     "q_text_langid_ngram" -> TextOps.q_text_langid_ngram,
     "q_text_redact" -> TextOps.q_text_redact,
-    "q_pack" -> TextOps.q_pack,
     "q_text_repetition" -> TextOps.q_text_repetition,
-    "q_text_gopher" -> TextOps.q_text_gopher,
     "q_text_decontaminate" -> TextOps.q_text_decontaminate,
-    "q_mm_frames" -> Multimodal.q_mm_frames,
     // round-4 additions
     "q_agg_listagg" -> Relational.q_agg_listagg,
     "q_fn_interval" -> Relational.q_fn_interval,
@@ -148,7 +139,7 @@ object SparkEntry {
     * in the spelling both engines read, and through `d`'s renames where
     * they name one function differently. */
   private def texts(d: TpcSql.Dialect): Map[String, String] = {
-    import d.{G, JsonStr, Sha256, Transform, Unnest, Xor}
+    import d.{Div, G, JsonStr, Len, Sha256, Transform, Unnest, Xor}
     val cosSql =
       s"list_sum($Transform(list_zip(a.embedding, b.embedding), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))) / " +
         s"(sqrt(list_sum($Transform(a.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) * " +
@@ -305,6 +296,11 @@ object SparkEntry {
     // keys match null keys, unlike `=`.
     "q_join_nullsafe" ->
       "SELECT k, count(*) AS n FROM (SELECT DISTINCT nullif(o_orderpriority, '1-URGENT') AS k FROM orders) t1 JOIN (SELECT nullif(o_orderpriority, '1-URGENT') AS k2 FROM orders) t2 ON t1.k IS NOT DISTINCT FROM t2.k2 GROUP BY k",
+    // [Q-text-editdist] Levenshtein fuzzy-duplicate verification over a
+    // candidate block (the first 30 doc ids; in production the candidates
+    // come from LSH/shingle blocking, never all-pairs): edit distance is
+    // O(len²) per pair, so it runs only on blocked candidates. Emits the
+    // similarity ratio 1 - dist/maxlen on a total order.
     "q_text_editdist" ->
       "SELECT a.doc_id AS a_id, b.doc_id AS b_id, levenshtein(a.text, b.text) AS dist, round(1.0 - CAST(levenshtein(a.text, b.text) AS DOUBLE) / greatest(length(a.text), length(b.text)), 6) AS sim_r FROM documents a JOIN documents b ON a.doc_id < 30 AND b.doc_id < 30 AND a.doc_id < b.doc_id ORDER BY a_id, b_id",
     "q_fn_string" ->
@@ -325,6 +321,10 @@ object SparkEntry {
       s"WITH e AS (SELECT time_bucket(INTERVAL '5 minutes', $evTs) AS b, event_type, value FROM events) SELECT w_start, event_type, count(*) AS n, $valDec AS sum_value FROM (SELECT b AS w_start, event_type, value FROM e UNION ALL SELECT b - INTERVAL '5 minutes', event_type, value FROM e) t GROUP BY 1, 2",
     "q_stream_session" ->
       s"WITH t AS (SELECT user_id, $evTs AS ts, value FROM events), m AS (SELECT user_id, ts, value, CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL OR ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts) >= INTERVAL '30 minutes' THEN 1 ELSE 0 END AS new_s FROM t), g AS (SELECT user_id, ts, value, sum(new_s) OVER (PARTITION BY user_id ORDER BY ts ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid FROM m) SELECT user_id, min(ts) AS s_start, count(*) AS n, $valDec AS sum_value FROM g GROUP BY user_id, sid",
+    // [Q-dedup-exact] exact dedup keyed on a 128-bit content digest: the
+    // survivor (min id) and the multiplicity, one hash aggregate whose
+    // shuffle moves 32-char digests, not documents. md5 because DuckDB has
+    // the same function, so the digest itself is oracle-matched.
     "q_dedup_exact" ->
       "SELECT md5(text) AS text_md5, min(doc_id) AS keep_id, count(*) AS n_copies FROM documents GROUP BY md5(text)",
     "q_dedup_ngram" ->
@@ -363,12 +363,19 @@ object SparkEntry {
          |FROM documents d LEFT JOIN
          | (SELECT src AS doc_id, least(min(dst), src) AS cluster_id FROM reach GROUP BY src) c
          |ON d.doc_id = c.doc_id""".stripMargin,
+    // [Q-text-quality] per-doc quality metrics: token count, average token
+    // length, stop-word ratio and a composite score, from integer-derived
+    // doubles. Both counts run on the text's bytes (graft.plans.TokenCountRule).
     "q_text_quality" ->
-      "SELECT doc_id, lang, n_tokens, len, CAST(len - (n_tokens - 1) AS DOUBLE) / n_tokens AS avg_token_len, CAST(n_stop AS DOUBLE) / n_tokens AS stop_ratio, least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0) * 0.7 + (1.0 - CAST(n_stop AS DOUBLE) / n_tokens) * 0.3 AS quality FROM (SELECT doc_id, lang, CAST(len(string_split(text, ' ')) AS INT) AS n_tokens, CAST(length(text) AS INT) AS len, CAST(len(list_filter(string_split(text, ' '), x -> x = 'the' OR x = 'a')) AS INT) AS n_stop FROM documents) t",
+      s"SELECT doc_id, lang, n_tokens, len, CAST(len - (n_tokens - 1) AS DOUBLE) / n_tokens AS avg_token_len, CAST(n_stop AS DOUBLE) / n_tokens AS stop_ratio, least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0) * 0.7 + (1.0 - CAST(n_stop AS DOUBLE) / n_tokens) * 0.3 AS quality FROM (SELECT doc_id, lang, CAST(${Len("split(text, ' ')")} AS INT) AS n_tokens, CAST(length(text) AS INT) AS len, CAST(${Len("filter(split(text, ' '), x -> x = 'the' OR x = 'a')")} AS INT) AS n_stop FROM documents) t",
+    // [Q-text-langid] marker-token language ID (an n-gram-heuristic
+    // stand-in): per-language marker-word counts, argmax with a fixed
+    // priority. Each count runs on the text's bytes
+    // (graft.plans.TokenCountRule).
     "q_text_langid" ->
-      "SELECT doc_id, lang, en_n, es_n, de_n, CASE WHEN es_n > en_n AND es_n >= de_n THEN 'es' WHEN de_n > en_n THEN 'de' ELSE 'en' END AS pred_lang FROM (SELECT doc_id, lang, CAST(len(list_filter(string_split(text, ' '), x -> x = 'the' OR x = 'a' OR x = 'of')) AS INT) AS en_n, CAST(len(list_filter(string_split(text, ' '), x -> x = 'el' OR x = 'la' OR x = 'de')) AS INT) AS es_n, CAST(len(list_filter(string_split(text, ' '), x -> x = 'der' OR x = 'die' OR x = 'das')) AS INT) AS de_n FROM documents) t",
+      s"SELECT doc_id, lang, en_n, es_n, de_n, CASE WHEN es_n > en_n AND es_n >= de_n THEN 'es' WHEN de_n > en_n THEN 'de' ELSE 'en' END AS pred_lang FROM (SELECT doc_id, lang, CAST(${Len("filter(split(text, ' '), x -> x = 'the' OR x = 'a' OR x = 'of')")} AS INT) AS en_n, CAST(${Len("filter(split(text, ' '), x -> x = 'el' OR x = 'la' OR x = 'de')")} AS INT) AS es_n, CAST(${Len("filter(split(text, ' '), x -> x = 'der' OR x = 'die' OR x = 'das')")} AS INT) AS de_n FROM documents) t",
     "q_text_redact" ->
-      s"SELECT doc_id, CAST(len(regexp_extract_all(text, '\\b(customer|key|vector)\\b')) AS INT) AS n_hits, regexp_replace(text, '\\b(customer|key|vector)\\b', '<REDACTED>'$G) AS redacted FROM documents",
+      s"SELECT doc_id, CAST(${Len("regexp_extract_all(text, '\\b(customer|key|vector)\\b')")} AS INT) AS n_hits, regexp_replace(text, '\\b(customer|key|vector)\\b', '<REDACTED>'$G) AS redacted FROM documents",
     "q_text_langid_ngram" -> {
       def sc(profile: Seq[String]) = {
         val inList = profile.map(t => s"'$t'").mkString(", ")
@@ -398,20 +405,34 @@ object SparkEntry {
         |  round(list_max($Transform(list_zip(v, codes),
         |    p -> abs(p[1] - (lo + p[2] * (hi - lo) / 255)))), 6) AS max_err_r
         |FROM c""".stripMargin,
+    // [Q-text-stats] per-language corpus statistics: doc counts, token budget
+    // (sum), exact token-count percentiles and average length, the report
+    // that sizes a training mix; one keyed aggregate. The derived table
+    // counts each text's tokens once for all three aggregates.
     "q_text_stats" ->
-      "SELECT lang, count(*) AS n_docs, CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS sum_tokens, quantile_cont(len(string_split(text, ' ')), 0.5) AS p50_tokens, quantile_cont(len(string_split(text, ' ')), 0.9) AS p90_tokens, CAST(sum(length(text)) AS DOUBLE) / count(*) AS avg_len FROM documents GROUP BY lang",
+      s"SELECT lang, count(*) AS n_docs, CAST(sum(nt) AS BIGINT) AS sum_tokens, percentile_cont(0.5) WITHIN GROUP (ORDER BY nt) AS p50_tokens, percentile_cont(0.9) WITHIN GROUP (ORDER BY nt) AS p90_tokens, CAST(sum(len) AS DOUBLE) / count(*) AS avg_len FROM (SELECT lang, ${Len("split(text, ' ')")} AS nt, length(text) AS len FROM documents) t GROUP BY lang",
     // [Q-sample] per-language stratified sampling report: a plain-arithmetic
     // splitter (doc_id * K mod 100, a fixed multiplicative mix both engines
     // compute bit-identically); en keeps 50%, everything else 10%. The
     // production samplers (Sampling) hash with xxhash64 instead.
     "q_sample" ->
       "SELECT lang, count(*) AS n_total, count(*) FILTER (WHERE (doc_id * 2654435761) % 100 < CASE WHEN lang = 'en' THEN 50 ELSE 10 END) AS n_sampled FROM documents GROUP BY lang",
+    // [Q-pack] sequence packing: documents pack into 2048-token training
+    // sequences by running token count, per shard (doc_id mod 8), so each
+    // shard is one keyed window (a global running sum would run in one
+    // partition); emits (shard, bin, offset). The innermost table counts
+    // each text's tokens once, and the bin is an integer division of the
+    // non-negative offset ($Div; Spark runs `x / 2048.0` as a DECIMAL
+    // division).
     "q_pack" ->
-      "SELECT doc_id, doc_id % 8 AS shard, n_tokens, CAST(floor((cum - n_tokens) / 2048.0) AS INT) AS bin, CAST((cum - n_tokens) % 2048 AS INT) AS bin_offset FROM (SELECT doc_id, CAST(len(string_split(text, ' ')) AS INT) AS n_tokens, sum(CAST(len(string_split(text, ' ')) AS INT)) OVER (PARTITION BY doc_id % 8 ORDER BY doc_id) AS cum FROM documents) t",
+      s"SELECT doc_id, doc_id % 8 AS shard, n_tokens, CAST((cum - n_tokens) $Div 2048 AS INT) AS bin, CAST((cum - n_tokens) % 2048 AS INT) AS bin_offset FROM (SELECT doc_id, n_tokens, sum(n_tokens) OVER (PARTITION BY doc_id % 8 ORDER BY doc_id) AS cum FROM (SELECT doc_id, CAST(${Len("split(text, ' ')")} AS INT) AS n_tokens FROM documents) d) t",
     "q_text_repetition" ->
       s"SELECT doc_id, CAST(len(string_split(text, ' ')) AS INT) AS n_tokens, CAST(len($shingleSql) AS INT) AS n_distinct, CASE WHEN len(string_split(text, ' ')) >= 3 THEN round(1.0 - CAST(len($shingleSql) AS DOUBLE) / (len(string_split(text, ' ')) - 2), 6) ELSE 0.0 END AS rep_ratio FROM documents",
+    // [Q-text-gopher] Gopher-style quality rules: token-count bounds, mean
+    // word length bounds, symbol ratio and minimum stop-word evidence, each
+    // a measure plus the composite keep flag; row-local, no shuffle.
     "q_text_gopher" ->
-      s"SELECT doc_id, n_tokens, mean_wlen, sym_ratio, n_stop, (n_tokens BETWEEN 20 AND 100000 AND mean_wlen BETWEEN 3.0 AND 10.0 AND sym_ratio < 0.1 AND n_stop >= 2) AS keep FROM (SELECT doc_id, n_tokens, CAST(len - (n_tokens - 1) AS DOUBLE) / n_tokens AS mean_wlen, CAST(n_sym AS DOUBLE) / len AS sym_ratio, n_stop FROM (SELECT doc_id, CAST(len(string_split(text, ' ')) AS INT) AS n_tokens, CAST(length(text) AS INT) AS len, CAST(length(regexp_replace(text, '[A-Za-z0-9 ]', ''$G)) AS INT) AS n_sym, CAST(len(list_filter(string_split(text, ' '), x -> x = 'the' OR x = 'a' OR x = 'of' OR x = 'de' OR x = 'la')) AS INT) AS n_stop FROM documents) a) b",
+      s"SELECT doc_id, n_tokens, mean_wlen, sym_ratio, n_stop, (n_tokens BETWEEN 20 AND 100000 AND mean_wlen BETWEEN 3.0 AND 10.0 AND sym_ratio < 0.1 AND n_stop >= 2) AS keep FROM (SELECT doc_id, n_tokens, CAST(len - (n_tokens - 1) AS DOUBLE) / n_tokens AS mean_wlen, CAST(n_sym AS DOUBLE) / len AS sym_ratio, n_stop FROM (SELECT doc_id, CAST(${Len("split(text, ' ')")} AS INT) AS n_tokens, CAST(length(text) AS INT) AS len, CAST(length(regexp_replace(text, '[A-Za-z0-9 ]', ''$G)) AS INT) AS n_sym, CAST(${Len("filter(split(text, ' '), x -> x = 'the' OR x = 'a' OR x = 'of' OR x = 'de' OR x = 'la')")} AS INT) AS n_stop FROM documents) a) b",
     "q_text_decontaminate" -> decontaminateSql,
     // bloom prefilter is lossless (no false negatives) + exact verify join
     // → identical result, identical oracle
@@ -420,6 +441,9 @@ object SparkEntry {
     // (engine-independent) with its source and lang.
     "q_mm_meta" ->
       "SELECT doc_id, CAST(octet_length(CAST(text AS BINARY)) AS INT) AS n_bytes, source, lang FROM documents",
+    // [Q-mm-frames] frame sampling: the frame count and the md5 of the first
+    // 64-character frame. Characters are bytes here because the documents
+    // corpus is ASCII (Multimodal.frames slices a binary payload by bytes).
     "q_mm_frames" ->
       "SELECT doc_id, CAST(ceil(length(text) / 64.0) AS INT) AS n_frames, md5(substring(text, 1, 64)) AS first_frame_md5 FROM documents",
     // round-4 additions

@@ -237,14 +237,18 @@ case class TermCounts(text: Expression, terms: Expression) extends BinaryExpress
   * rounded to DECIMAL(20,6) as Spark's double→decimal cast rounds it (half
   * up; an overflow throws, as under ANSI); the contributions are summed
   * exactly and the sum converted to double as Spark casts a decimal.
-  * `n_terms` counts the present terms. graft.ops.Relational.bm25 gives the
-  * statistics as one scalar subquery, so the scorer references it once. */
+  * `n_terms` counts the present terms; a document with none scores null,
+  * so a caller drops it above its top-k cut instead of filtering on `tf`
+  * below the scorer (where the filter would recompute `tf`).
+  * graft.ops.Relational.bm25 gives the statistics as one scalar subquery,
+  * so the scorer references it once. */
 private[graft] case class Bm25Score(dl: Expression, tf: Expression, stats: Expression)
     extends TernaryExpression {
   override def first: Expression = dl
   override def second: Expression = tf
   override def third: Expression = stats
   override def dataType: DataType = Bm25Score.resultType
+  override def nullable: Boolean = true
   override def prettyName: String = "bm25_score"
 
   def compute(dl: Int, tf: ArrayData, stats: InternalRow): InternalRow = {
@@ -266,7 +270,7 @@ private[graft] case class Bm25Score(dl: Expression, tf: Expression, stats: Expre
       }
       i += 1
     }
-    new GenericInternalRow(Array[Any](sum.doubleValue, present))
+    if (present == 0) null else new GenericInternalRow(Array[Any](sum.doubleValue, present))
   }
 
   override def nullSafeEval(dl: Any, tf: Any, stats: Any): Any =
@@ -274,7 +278,8 @@ private[graft] case class Bm25Score(dl: Expression, tf: Expression, stats: Expre
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("bm25", this, classOf[Bm25Score].getName)
-    nullSafeCodeGen(ctx, ev, (d, t, s) => s"${ev.value} = $ref.compute($d, $t, $s);")
+    nullSafeCodeGen(ctx, ev, (d, t, s) =>
+      s"${ev.value} = $ref.compute($d, $t, $s); ${ev.isNull} = ${ev.value} == null;")
   }
 
   override protected def withNewChildrenInternal(

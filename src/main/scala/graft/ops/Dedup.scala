@@ -18,22 +18,6 @@ import graft.functions.txt
   */
 object Dedup {
 
-  /** [Q-dedup-exact] exact dedup keyed on a 128-bit content digest: canonical
-    * survivor (min id) + multiplicity. One hash-aggregate shuffle whose key is
-    * 32 hex chars — at 100 TB the shuffle moves digests, not the corpus
-    * (grouping by raw text would shuffle every byte of every document).
-    * md5 is used (not xxhash64) because DuckDB has the identical function, so
-    * the digest itself is oracle-matched; 128 bits makes collisions
-    * negligible (~1e-18 at 10^10 docs).
-    *
-    * Kept as a hand form: the text gives the same result on Spark, but the
-    * LLM-pipeline forms have not been through the paired timing yet. */
-  def q_dedup_exact(s: SparkSession, d: String): DataFrame =
-    Tables(s, d, "documents")
-      .groupBy(md5(col("text").cast("binary")).as("text_md5"))
-      .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
-      .select(col("text_md5"), col("keep_id"), col("n_copies"))
-
   /** MinHash signatures: `perms` hash permutations in `bands` bands.
     * One shingle row carries all `perms` hashes as SEPARATE min-aggregate
     * columns, so the whole signature reduces in a SINGLE hash-aggregate

@@ -97,21 +97,4 @@ object Multimodal {
     expr(s"transform(sequence(1, $newDim), i -> " +
       s"CASE WHEN i <= size($featCol) THEN element_at($featCol, i) " +
       s"ELSE CAST(0 AS DOUBLE) END)")
-
-  /** [Q-mm-frames] frame sampling — oracle-matched: frame count and the
-    * md5 of the first 64-byte frame are engine-independent. The oracle
-    * compares byte-length slices (Spark binary) against DuckDB
-    * character-length substrings, which agree iff the fixture text is
-    * ASCII — true of the generated documents corpus and asserted by the
-    * oracle match itself; a multi-byte corpus would need an octet-based
-    * oracle instead.
-    *
-    * Kept as a hand form: the text gives the same result on Spark, but the
-    * LLM-pipeline forms have not been through the paired timing yet. */
-  def q_mm_frames(s: SparkSession, d: String): DataFrame =
-    asBinaryTable(s, d)
-      .withColumn("fr", frames("payload"))
-      .select(col("doc_id"),
-        size(col("fr")).as("n_frames"),
-        md5(element_at(col("fr"), 1)).as("first_frame_md5"))
 }

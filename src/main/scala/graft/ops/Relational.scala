@@ -513,13 +513,16 @@ object Relational {
     * of the distinct query terms ([[graft.functions.txt.term_counts]]),
     * both read on the text's bytes with no row per token. The first pass is
     * one scalar subquery, a 1-row aggregate that yields avgdl and the idf
-    * of each term (from N and df); the second keeps the documents that hold
-    * a term and scores each where it stands
-    * ([[graft.functions.Bm25Score]], which references the subquery once:
-    * a `getField` per use makes Spark re-optimize the subquery once per
-    * reference). The top-k cut rides TakeOrdered. The only exchange is the
-    * subquery's global aggregate: no join, no per-term or per-document
-    * shuffle, at any scale. Building the query runs no job. */
+    * of each term (from N and df); the second scores each document where it
+    * stands ([[graft.functions.Bm25Score]], which references the subquery
+    * once: a `getField` per use makes Spark re-optimize the subquery once
+    * per reference). A document with no term scores null: the top-k cut
+    * (TakeOrdered) puts nulls last and the filter above it drops them, so
+    * `term_counts` runs once per document; a filter on `tf` below the
+    * scorer would be pushed under its projection with `tf` inlined and run
+    * it twice. The only exchange is the subquery's global aggregate: no
+    * join, no per-term or per-document shuffle, at any scale. Building the
+    * query runs no job. */
   def bm25(docs: DataFrame, qterms: Seq[String], k: Int = 20): DataFrame = {
     require(qterms.nonEmpty, "bm25 needs at least one query term")
     val terms = qterms.distinct
@@ -533,11 +536,11 @@ object Relational {
     val stats = counted.agg(struct(
       (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"),
       array(idf: _*).as("idf"))).scalar()
-    counted.where(array_max(col("tf")) > 0)
-      .select(col("doc_id"), txt.bm25_score(col("dl"), col("tf"), stats).as("s"))
+    counted.select(col("doc_id"), txt.bm25_score(col("dl"), col("tf"), stats).as("s"))
       .select(col("doc_id"), col("s.bm25").as("bm25"), col("s.n_terms").as("n_terms"))
-      .orderBy(col("bm25").desc, col("doc_id"))
+      .orderBy(col("bm25").desc_nulls_last, col("doc_id"))
       .limit(k)
+      .where(col("bm25").isNotNull)
   }
 
   /** Hard fence for the exact-percentile oracle baseline: Spark's exact

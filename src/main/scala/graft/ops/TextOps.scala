@@ -12,13 +12,6 @@ import graft.functions.txt
 object TextOps {
   private[ops] def tokens: Column = split(col("text"), " ")
 
-  /** How many tokens of `split(text, ' ')` are one of `words`, as an int:
-    * the count `size(filter(split(text, ' '), x -> x = w1 OR …))` gives,
-    * summed from [[txt.term_counts]] with no token array or lambda. */
-  private def wordCount(words: String*): Column = {
-    val counts = txt.term_counts(col("text"), words)
-    words.indices.map(counts.getItem(_)).reduce(_ + _).cast("int")
-  }
   private val stopWords = Seq("the", "a", "of", "de", "la")
 
   /** Word-level k-shingles (distinct), for Jaccard / MinHash. 1-based
@@ -48,42 +41,6 @@ object TextOps {
       .groupBy("token").agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("token"))
       .limit(50)
-
-  /** [Q-text-quality] per-doc quality metrics: token count, avg token length,
-    * stopword ratio, composite score. Integer-derived doubles → exact.
-    *
-    * Kept as a hand form: the text calls DuckDB's `string_split`, which Spark
-    * does not have. */
-  def q_text_quality(s: SparkSession, d: String): DataFrame =
-    Tables(s, d, "documents")
-      .select(col("doc_id"), col("lang"),
-        size(tokens).as("n_tokens"),
-        length(col("text")).as("len"),
-        wordCount("the", "a").as("n_stop"))
-      .select(col("doc_id"), col("lang"), col("n_tokens"), col("len"),
-        ((col("len") - (col("n_tokens") - lit(1))).cast("double") / col("n_tokens"))
-          .as("avg_token_len"),
-        (col("n_stop").cast("double") / col("n_tokens")).as("stop_ratio"))
-      .withColumn("quality",
-        least(col("n_tokens").cast("double") / lit(100.0), lit(1.0)) * lit(0.7) +
-          (lit(1.0) - col("stop_ratio")) * lit(0.3))
-
-  /** [Q-text-langid] marker-token language ID (n-gram-heuristic stand-in):
-    * counts membership of per-language marker words, argmax with fixed
-    * priority. Deterministic and SQL-expressible for the oracle.
-    *
-    * Kept as a hand form: the text calls DuckDB's `list_filter`, which Spark
-    * does not have. */
-  def q_text_langid(s: SparkSession, d: String): DataFrame =
-    Tables(s, d, "documents")
-      .select(col("doc_id"), col("lang"),
-        wordCount("the", "a", "of").as("en_n"),
-        wordCount("el", "la", "de").as("es_n"),
-        wordCount("der", "die", "das").as("de_n"))
-      .withColumn("pred_lang",
-        when(col("es_n") > col("en_n") && col("es_n") >= col("de_n"), "es")
-          .when(col("de_n") > col("en_n"), "de")
-          .otherwise("en"))
 
   /** [Q-text-langid-ngram] character-trigram language ID: score = number of
     * text trigram occurrences hitting each language's profile set (classic
@@ -123,8 +80,12 @@ object TextOps {
     * banned-term / PII-list scrubbing pass every training-data pipeline
     * runs before export. Pure regexp expressions, row-local, no shuffle.
     *
-    * Kept as a hand form: the text takes DuckDB's `len` of an array; Spark's
-    * `len` takes a string. */
+    * Kept as a hand form: Spark's SQL parser unescapes the text's `'\b'` to
+    * U+0008 (backspace; `spark.sql.parser.escapedStringLiterals` is off by
+    * default), so its word-boundary pattern matches nothing on Spark and
+    * every n_hits reads 0. With that conf on, the text returns this form's
+    * rows at sf0.001, sf0.01 and sf0.1; DuckDB reads the backslash as
+    * written, so no literal spells `\b` for both engines. */
   def q_text_redact(s: SparkSession, d: String): DataFrame = {
     val re = "\\b(customer|key|vector)\\b"
     Tables(s, d, "documents").select(
@@ -132,24 +93,6 @@ object TextOps {
       regexp_count(col("text"), lit(re)).cast("int").as("n_hits"),
       regexp_replace(col("text"), re, "<REDACTED>").as("redacted"))
   }
-
-  /** [Q-text-stats] per-language corpus statistics: doc counts, token
-    * budget (sum), exact token-count percentiles, average byte length — the
-    * reporting pass that sizes a training mix. ONE keyed aggregate with
-    * map-side partials; percentiles are Spark's exact interpolated
-    * `percentile`, which is DuckDB's `quantile_cont`.
-    *
-    * Kept as a hand form: the text calls DuckDB's `string_split`, which Spark
-    * does not have. */
-  def q_text_stats(s: SparkSession, d: String): DataFrame =
-    Tables(s, d, "documents")
-      .select(col("lang"), size(tokens).as("nt"), length(col("text")).as("len"))
-      .groupBy("lang")
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("nt")).cast("bigint").as("sum_tokens"),
-        expr("percentile(nt, 0.5)").as("p50_tokens"),
-        expr("percentile(nt, 0.9)").as("p90_tokens"),
-        (sum(col("len")).cast("double") / count(lit(1))).as("avg_len"))
 
   /** [Q-text-repetition] intra-document repetition ratio: 1 − distinct /
     * total 3-gram shingles — the "repetitive text" quality filter (looping
@@ -166,30 +109,6 @@ object TextOps {
         when(col("n_tokens") >= 3,
           round(lit(1.0) - col("n_distinct").cast("double") / (col("n_tokens") - 2), 6))
           .otherwise(lit(0.0)).as("rep_ratio"))
-
-  /** [Q-text-gopher] Gopher-style document quality rules: token-count
-    * bounds, mean-word-length bounds, symbol ratio, minimum stopword
-    * evidence — each rule emitted as a measure plus the composite keep
-    * flag. Row-local, no shuffle; the shape of every rule-based corpus
-    * filter pass.
-    *
-    * Kept as a hand form: the text calls DuckDB's `string_split`, which Spark
-    * does not have. */
-  def q_text_gopher(s: SparkSession, d: String): DataFrame =
-    Tables(s, d, "documents")
-      .select(col("doc_id"),
-        size(tokens).as("n_tokens"),
-        length(col("text")).as("len"),
-        length(regexp_replace(col("text"), "[A-Za-z0-9 ]", "")).as("n_sym"),
-        wordCount(stopWords: _*).as("n_stop"))
-      .select(col("doc_id"), col("n_tokens"),
-        ((col("len") - (col("n_tokens") - 1)).cast("double") / col("n_tokens")).as("mean_wlen"),
-        (col("n_sym").cast("double") / col("len")).as("sym_ratio"),
-        col("n_stop"))
-      .withColumn("keep",
-        col("n_tokens").between(20, 100000) &&
-          col("mean_wlen").between(3.0, 10.0) &&
-          col("sym_ratio") < 0.1 && col("n_stop") >= 2)
 
   /** [Q-text-decontaminate] train/eval contamination detection: corpus docs
     * sharing any exact 8-token shingle with the eval set (here: doc_id <
@@ -242,54 +161,6 @@ object TextOps {
       .orderBy("doc_id")
   }
 
-  /** [Q-pack] sequence-packing assignment: documents pack into fixed
-    * token-budget training sequences (budget 2048) by running token count.
-    * Packing is per SHARD (doc_id mod 8): a single global running sum would
-    * be one-partition sequential — the scale-killer — while sharded packing
-    * runs one keyed window per shard and wastes at most one partial bin per
-    * shard. This emits the assignment (shard, bin, offset); the actual
-    * concat/pad step is the writer's job.
-    *
-    * Kept as a hand form: the text calls DuckDB's `string_split`, which Spark
-    * does not have. */
-  def q_pack(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val budget = 2048
-    Tables(s, d, "documents")
-      .select(col("doc_id"), size(tokens).as("n_tokens"),
-        pmod(col("doc_id"), lit(8)).as("shard"))
-      .withColumn("cum", sum(col("n_tokens"))
-        .over(Window.partitionBy("shard").orderBy("doc_id")))
-      .select(col("doc_id"), col("shard"), col("n_tokens"),
-        // explicit floor: DuckDB CAST(double AS INT) rounds-to-nearest
-        // while Spark truncates — floor() first makes both exact
-        floor((col("cum") - col("n_tokens")) / budget).cast("int").as("bin"),
-        pmod(col("cum") - col("n_tokens"), lit(budget)).cast("int").as("bin_offset"))
-  }
-
-  /** [Q-text-editdist] Levenshtein fuzzy-duplicate verification over a
-    * candidate pair set — the character-level confirm step after a cheap
-    * blocking stage (here: the first 30 doc ids as a deterministic block;
-    * in production the candidates come from LSH/shingle blocking, never
-    * all-pairs). Edit distance is O(len²) per pair, which is exactly why
-    * it only ever runs on blocked candidates. Emits a similarity ratio
-    * 1 - dist/maxlen on a total order.
-    *
-    * Kept as a hand form: the text gives the same result on Spark, but the
-    * LLM-pipeline forms have not been through the paired timing yet. */
-  def q_text_editdist(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables(s, d, "documents")
-      .filter(col("doc_id") < 30).select(col("doc_id"), col("text"))
-    docs.select(col("doc_id").as("a_id"), col("text").as("ta"))
-      .join(docs.select(col("doc_id").as("b_id"), col("text").as("tb")),
-        col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"),
-        levenshtein(col("ta"), col("tb")).as("dist"),
-        round(lit(1.0) - levenshtein(col("ta"), col("tb")).cast("double") /
-          greatest(length(col("ta")), length(col("tb"))), 6).as("sim_r"))
-      .orderBy(col("a_id"), col("b_id"))
-  }
-
   /** [Q-pipeline-clean] the end-to-end corpus-cleaning composite: Gopher
     * quality rules + repetition filter + exact dedup (keep min doc_id per
     * text digest), reported as per-language funnel counts — the whole
@@ -314,7 +185,7 @@ object TextOps {
         size(tokens).as("n_tokens"),
         length(col("text")).as("len"),
         length(regexp_replace(col("text"), "[A-Za-z0-9 ]", "")).as("n_sym"),
-        wordCount(stopWords: _*).as("n_stop"),
+        size(filter(tokens, t => stopWords.map(t === _).reduce(_ || _))).as("n_stop"),
         size(txt.shingle_hashes(col("text"), 3)).as("n_distinct"))
       .withColumn("mean_wlen",
         (col("len") - (col("n_tokens") - 1)).cast("double") / col("n_tokens"))

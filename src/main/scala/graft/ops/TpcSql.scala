@@ -52,14 +52,18 @@ object TpcSql {
     *     (`json_extract_string` / `get_json_object`);
     *   - `Sha256(x)` the hex SHA-256 digest (`sha256(x)` / `sha2(x, 256)`);
     *   - `Xor(a, b)` bitwise exclusive or (`xor(a, b)` / `(a ^ b)`; DuckDB's
-    *     `^` is a power). */
+    *     `^` is a power);
+    *   - `Len(x)` the element count of a list (`len(x)` / `size(x)`;
+    *     DuckDB has no `size` and refuses `cardinality` on a list, Spark's
+    *     `len` takes a string). */
   final case class Dialect(P: String => String, Pp: String => String, M: String, Div: String,
                            G: String, Unnest: String, Transform: String, JsonStr: String,
-                           Sha256: String => String, Xor: (String, String) => String)
+                           Sha256: String => String, Xor: (String, String) => String,
+                           Len: String => String)
 
   private def duckdbOver(p: String => String, pp: String => String): Dialect =
     Dialect(p, pp, "MATERIALIZED ", "//", ", 'g'", "unnest", "list_transform",
-      "json_extract_string", x => s"sha256($x)", (a, b) => s"xor($a, $b)")
+      "json_extract_string", x => s"sha256($x)", (a, b) => s"xor($a, $b)", x => s"len($x)")
 
   /** DuckDB: parquet globs under the default cache `root`, pinned to
     * [[oracleScale]] and to `pubScale`. */
@@ -75,7 +79,7 @@ object TpcSql {
 
   /** Spark: bare table names, resolved by [[dataFrame]]. */
   val spark: Dialect = Dialect(identity, identity, "", "div", "", "explode", "transform",
-    "get_json_object", x => s"sha2($x, 256)", (a, b) => s"($a ^ $b)")
+    "get_json_object", x => s"sha2($x, 256)", (a, b) => s"($a ^ $b)", x => s"size($x)")
 
   /** Fail loud when `name`, a generated-data query, is dumped for the gate
     * from a fixture dir other than [[oracleScale]]. */

@@ -1564,7 +1564,7 @@ object Tpcds {
     // the month window attaches through the published scalar d_month_seq
     // subquery (1-row broadcast semi on the month-seq key).
     "q_tpcds_q6" ->
-      s"""WITH ave AS (SELECT /*+ BROADCAST(item) */ i_category AS avg_cat,
+      s"""WITH ave AS (SELECT i_category AS avg_cat,
          |  sum(CAST(i_current_price * 100 AS BIGINT)) AS tot_c,
          |  count(i_current_price) AS cnt
          | FROM ${P("item")} WHERE i_category IS NOT NULL GROUP BY i_category),
@@ -2159,7 +2159,7 @@ object Tpcds {
          |  sum(CASE WHEN d_day_name = 'Saturday' THEN sales_price END) AS sat
          | FROM u JOIN ${P("date_dim")} ON sold_date_sk = d_date_sk
          | GROUP BY d_week_seq),
-         |wk2000 AS (SELECT /*+ BROADCAST(date_dim) */
+         |wk2000 AS (SELECT
          | DISTINCT d_week_seq AS wk FROM ${P("date_dim")}
          |  WHERE d_year = 2000)
          |SELECT y.d_week_seq AS week_seq,
@@ -2757,7 +2757,7 @@ object Tpcds {
     // expected ≈0.7 items on a 2000-row item table).
     "q_tpcds_q64_pub" ->
       s"""WITH islice AS ${M}(
-         | SELECT /*+ BROADCAST(item) */ i_item_sk, i_product_name FROM ${Pp("item")}
+         | SELECT i_item_sk, i_product_name FROM ${Pp("item")}
          | WHERE i_color IN ('purple', 'burlywood', 'indian', 'spring',
          |   'floral', 'medium')
          |  AND i_current_price BETWEEN 35 AND 45),
@@ -3367,7 +3367,7 @@ object Tpcds {
     // revenue mix made it empty at ANY scale).
     "q_tpcds_q58" ->
       s"""WITH dd AS (
-         | SELECT /*+ BROADCAST(date_dim) */ d_date_sk FROM ${P("date_dim")}
+         | SELECT d_date_sk FROM ${P("date_dim")}
          | WHERE d_week_seq = (SELECT /*+ BROADCAST(date_dim) */
          |  d_week_seq FROM ${P("date_dim")}
          |                     WHERE d_date = DATE '1998-12-16')),
@@ -3413,7 +3413,7 @@ object Tpcds {
     // d_week_seq lookup, now run as written.
     "q_tpcds_q83" ->
       s"""WITH dd AS (
-         | SELECT /*+ BROADCAST(date_dim) */ d_date_sk FROM ${P("date_dim")}
+         | SELECT d_date_sk FROM ${P("date_dim")}
          | WHERE d_week_seq IN (SELECT /*+ BROADCAST(date_dim) */
          |  DISTINCT d_week_seq FROM ${P("date_dim")}
          |   WHERE d_date IN (DATE '1999-02-10', DATE '2000-02-09',
@@ -3613,7 +3613,7 @@ object Tpcds {
     // grain.
     "q_tpcds_q64" ->
       s"""WITH islice AS ${M}(
-         | SELECT /*+ BROADCAST(item) */ i_item_sk, i_product_name FROM ${P("item")}
+         | SELECT i_item_sk, i_product_name FROM ${P("item")}
          | WHERE i_color IN ('purple', 'burlywood', 'indian', 'spring',
          |   'floral', 'medium', 'chiffon', 'blush', 'coral', 'azure',
          |   'almond', 'antique', 'aquamarine', 'beige', 'rose', 'peach',
@@ -3762,19 +3762,19 @@ object Tpcds {
            | FROM ${P(fact)}
            | JOIN dd3 ON ${pfx}_sold_date_sk = d_date_sk
            | JOIN ${P("item")} ON ${pfx}_item_sk = i_item_sk""".stripMargin
-      s"""WITH dd3 AS (SELECT /*+ BROADCAST(date_dim) */ d_date_sk FROM ${P("date_dim")}
+      s"""WITH dd3 AS (SELECT d_date_sk FROM ${P("date_dim")}
          |  WHERE d_year BETWEEN 1999 AND 2001),
          |cross_t AS (
          | (${tset("store_sales", "ss")}
          |  ) INTERSECT (${tset("catalog_sales", "cs")}
          |  ) INTERSECT (${tset("web_sales", "ws")})),
          |dd AS (
-         | SELECT /*+ BROADCAST(date_dim) */ d_date_sk, 1 AS is_ty FROM ${P("date_dim")}
+         | SELECT d_date_sk, 1 AS is_ty FROM ${P("date_dim")}
          | WHERE d_week_seq = (SELECT /*+ BROADCAST(date_dim) */
          |  d_week_seq FROM ${P("date_dim")}
          |                     WHERE d_date = DATE '2001-12-11')
          | UNION ALL
-         | SELECT /*+ BROADCAST(date_dim) */ d_date_sk, 0 FROM ${P("date_dim")}
+         | SELECT d_date_sk, 0 FROM ${P("date_dim")}
          | WHERE d_week_seq = (SELECT /*+ BROADCAST(date_dim) */
          |  d_week_seq FROM ${P("date_dim")}
          |                     WHERE d_date = DATE '2000-12-11'))

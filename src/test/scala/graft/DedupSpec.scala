@@ -155,7 +155,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("exact dedup counts multiplicity correctly on planted duplicates") {
-    val dd = Dedup.q_dedup_exact _
+    val dd = SparkEntry.queries("q_dedup_exact")
     // build directly: every text appears exactly twice in `planted`
     val res = planted
       .groupBy(md5(col("text").cast("binary")).as("k"))

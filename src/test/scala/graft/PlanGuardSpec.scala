@@ -524,6 +524,11 @@ class PlanGuardSpec extends AnyFunSuite {
       .queryExecution.optimizedPlan
     val nodes = plan.collectWithSubqueries { case p => p.nodeName }
     assert(!nodes.contains("Generate") && !nodes.exists(_.contains("Join")), plan)
+    // term_counts runs once per document: one call in the scoring plan (the
+    // corpus statistics' subquery holds its own), none in a filter below it
+    val termCounts = plan.collect { case p =>
+      p.expressions.map(_.collect { case t: graft.functions.TermCounts => t }.size).sum }.sum
+    assert(termCounts == 1, plan)
     // the corpus statistics' global aggregate; scoring and top-k are map-only
     val f = formatted("q_text_bm25")
     assert("""\(\d+\) Exchange""".r.findAllIn(f).size == 1, f)

@@ -1,17 +1,18 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.{Literal, Size, StringSplit}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge}
+import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, Literal, Size, StringSplit}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.TokenCount
+import graft.functions.{TermCounts, TokenCount}
 import graft.plans.TokenCountRule
 
 /** graft.plans.TokenCountRule turns `size(split(x, ' '))` into
-  * `token_count(x)` and leaves every result row as it was. Each case runs
-  * with the rule and with Spark's own `spark.sql.optimizer.excludedRules`
-  * naming it. */
+  * `token_count(x)` and the stop-word count `size(filter(split(x, ' '),
+  * t -> t = 'w1' OR …))` into a sum of `term_counts(x, words)`, and leaves
+  * every result row as it was. Each case runs with the rule and with
+  * Spark's own `spark.sql.optimizer.excludedRules` naming it. */
 class TokenCountRuleSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -32,6 +33,14 @@ class TokenCountRuleSpec extends AnyFunSuite {
   private def counted(df: DataFrame): Boolean =
     holds(df.queryExecution.optimizedPlan) { case _: TokenCount => true }
 
+  private def stopWordCount(plan: LogicalPlan): Boolean = holds(plan) {
+    case Size(ArrayFilter(StringSplit(_, Literal(sp, _), Literal(-1, _)), _), _) => String.valueOf(sp) == " "
+  }
+  private def filters(df: DataFrame): Boolean =
+    holds(df.queryExecution.optimizedPlan) { case _: ArrayFilter => true }
+  private def termCounted(df: DataFrame): Boolean =
+    holds(df.queryExecution.optimizedPlan) { case _: TermCounts => true }
+
   test("the rule is named as excludedRules names it") {
     assert(TokenCountRule.ruleName == "graft.plans.TokenCountRule")
     def df = spark.range(3).select(size(split(col("id").cast("string"), " ")).as("n"))
@@ -48,6 +57,57 @@ class TokenCountRuleSpec extends AnyFunSuite {
       def query = SparkEntry.queries(n)(spark, TestSpark.sf0001)
       assert(counted(query), n)
       assert(rows(query) == withoutRule(rows(query)), n)
+    }
+  }
+
+  test("every declared query that counts stop words counts them on the bytes, with the same rows") {
+    val names = SparkEntry.queries.keys.toSeq.sorted.filter { n =>
+      stopWordCount(SparkEntry.queries(n)(spark, TestSpark.sf0001).queryExecution.analyzed)
+    }
+    assert(Set("q_text_quality", "q_text_langid", "q_text_gopher", "q_pipeline_clean")
+      .subsetOf(names.toSet), names)
+    for (n <- names) {
+      def query = SparkEntry.queries(n)(spark, TestSpark.sf0001)
+      assert(!filters(query) && termCounted(query), n)
+      assert(rows(query) == withoutRule(rows(query)), n)
+    }
+  }
+
+  private lazy val words = {
+    import spark.implicits._
+    Seq("the the a of", "a  b a", "", " ", "café au lait café", "the-a a-the",
+      "ünï  ünï x").toDF("text").withColumn("other", lit("a")).repartition(2)
+  }
+
+  test("a repeated word, a literal on the left, the empty word and a multi-byte word are counted") {
+    for (lambda <- Seq("t -> t = 'a' OR t = 'the' OR 'a' = t", "t -> 'a' = t OR t = 'of'",
+        "t -> t = ''", "t -> t = 'café' OR 'ünï' = t", "t -> t = 'the' OR (t = 'a' OR t = 'b')")) {
+      val df = words.selectExpr(s"size(filter(split(text, ' '), $lambda)) AS n")
+      assert(!filters(df) && termCounted(df), lambda)
+      assert(rows(df) == withoutRule(rows(df)), lambda)
+    }
+  }
+
+  test("a word the OR repeats counts each token once") {
+    // applied to the analyzed plan, where no optimizer rule has merged the
+    // repeat yet
+    val df = words.selectExpr("size(filter(split(text, ' '), t -> t = 'a' OR 'a' = t OR t = 'of')) AS n")
+    val direct = GraftColumnBridge.ofRows(spark, TokenCountRule(df.queryExecution.analyzed))
+    assert(!filters(direct) && termCounted(direct))
+    assert(rows(direct) == withoutRule(rows(df)))
+  }
+
+  test("any other lambda is left to Spark") {
+    for (q <- Seq("size(filter(split(text, ' '), t -> t = 'a' AND length(t) = 1))",
+        "size(filter(split(text, ' '), t -> t LIKE 'a%'))",
+        "size(filter(split(text, ' '), t -> t = other))",
+        "size(filter(split(text, ' '), (t, i) -> t = 'a'))",
+        "size(filter(split(text, ' '), t -> t = 'a' OR t <> 'b'))",
+        "size(filter(split(text COLLATE UTF8_LCASE, ' '), t -> t = 'a'))",
+        "size(filter(split(text, ' ', 2), t -> t = 'a'))")) {
+      val df = words.selectExpr(s"$q AS n")
+      assert(filters(df) && !termCounted(df), q)
+      assert(rows(df) == withoutRule(rows(df)), q)
     }
   }
 
@@ -72,7 +132,11 @@ class TokenCountRuleSpec extends AnyFunSuite {
     def query = docs.select(size(split(col("text"), " ")).as("n")).orderBy("n")
     assert(counted(query))
     assert(query.collect().map(_.getInt(0)).toSeq == Seq(-1, 2))
+    def stops = docs.select(size(filter(split(col("text"), " "), _ === "a")).as("n")).orderBy("n")
+    assert(termCounted(stops))
+    assert(stops.collect().map(_.getInt(0)).toSeq == Seq(-1, 1))
     legacy.conf.set("spark.sql.optimizer.excludedRules", TokenCountRule.ruleName)
     assert(!counted(query) && query.collect().map(_.getInt(0)).toSeq == Seq(-1, 2))
+    assert(!termCounted(stops) && stops.collect().map(_.getInt(0)).toSeq == Seq(-1, 1))
   }
 }
